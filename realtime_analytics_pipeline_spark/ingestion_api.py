@@ -29,8 +29,11 @@ keyed epoch into a feed table via ``produce_keyed`` (the engine's
 Kafka-contract produce: pmod(xxhash64(user_id), n) sticky routing,
 produce order per partition, two-phase epoch commit), after which the
 standard wire-parse chain (``from_json`` + ``normalize_wire_events``)
-feeds every downstream job. Validation mirrors the pydantic model
-field-for-field in stdlib (required event.type / user.id / device /
+feeds every downstream job. Like a Kafka client's flush, the flush
+launches no cluster work: it hands ``produce_keyed`` an Arrow table,
+which is routed and committed as one file on the calling process.
+Validation mirrors the pydantic model field-for-field in stdlib
+(required event.type / user.id / device /
 context.url+session_id / metrics envelope; optional referrer /
 ip_address / properties str|int|float; epoch-ms timestamp defaulted;
 ``event.id`` defaulted to a UUIDv7 like the reference's uuid6 lib).
@@ -40,7 +43,6 @@ from __future__ import annotations
 
 import ipaddress
 import json
-import os
 import re
 import secrets
 import threading
@@ -49,6 +51,8 @@ import urllib.parse
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
+
+import pyarrow as pa
 
 from realtime_analytics_pipeline_spark.prom import PROM_CONTENT_TYPE
 
@@ -184,7 +188,10 @@ class BufferedEventProducer:
     sink: ``send`` enqueues (the batch.size/linger analog — O(1), no
     Spark work on the request path), ``flush`` produces the whole
     buffer as ONE keyed epoch (produce_keyed: user-sticky partitions,
-    produce order preserved via the monotone ``seq``)."""
+    produce order preserved via the monotone ``seq``). The flush is a
+    driver-side Arrow append — a table of ``user_id, seq, value`` routed
+    and committed without a Spark job — so its cost is the rows
+    flushed, not a job launch."""
 
     def __init__(self, feed_path: str, num_partitions: int = 8) -> None:
         self.feed_path = feed_path
@@ -194,27 +201,33 @@ class BufferedEventProducer:
         self._lock = threading.Lock()
 
     def send(self, payload: dict) -> None:
+        user_id = payload["user"]["id"]
+        # the key is serialized as UTF-8 at flush; a key that cannot be
+        # (a lone surrogate escape) fails this send, not a later flush
+        user_id.encode()
         with self._lock:
-            self._buf.append(
-                (payload["user"]["id"], self._seq, json.dumps(payload))
-            )
+            self._buf.append((user_id, self._seq, json.dumps(payload)))
             self._seq += 1
 
     def pending(self) -> int:
         with self._lock:
             return len(self._buf)
 
-    def flush(self, spark) -> int:
+    def flush(self) -> int:
         with self._lock:
             batch, self._buf = self._buf, []
         if not batch:
             return 0
-        df = spark.createDataFrame(
-            batch, "user_id string, seq long, value string"
+        users, seqs, values = zip(*batch)
+        table = pa.table(
+            {
+                "user_id": pa.array(users, pa.string()),
+                "seq": pa.array(seqs, pa.int64()),
+                "value": pa.array(values, pa.string()),
+            }
         )
-        os.makedirs(self.feed_path, exist_ok=True)
         produce_keyed(
-            df,
+            table,
             self.feed_path,
             key_col="user_id",
             seq_col="seq",
@@ -329,7 +342,8 @@ class IngestionHttpServer:
     """POST /analytics/track + GET /healthz + GET /metrics (Prometheus
     text exposition) over a buffered keyed producer. ``port=0`` binds
     ephemeral; ``.flush(spark)`` commits the buffered epoch to the
-    feed table."""
+    feed table (``spark`` is accepted for callers' sake; the flush
+    needs no session)."""
 
     def __init__(
         self,
@@ -353,7 +367,7 @@ class IngestionHttpServer:
         return self._httpd.server_address[1]
 
     def flush(self, spark) -> int:
-        return self.producer.flush(spark)
+        return self.producer.flush()
 
     def close(self) -> None:
         self._httpd.shutdown()

@@ -19,8 +19,9 @@ oracle:
 
 Python stream sources don't implement the AvailableNow admission
 control hooks, so Spark logs a fallback to single-batch execution: the
-whole currently-available offset range becomes one micro-batch (task
-count still fans out by ``batch_rows`` chunks). For a fixed log that is
+whole currently-available offset range becomes one micro-batch (read
+as ``ceil(rows / batch_rows)`` tasks, each packing whole offset ranges
+up to ``batch_rows`` rows). For a fixed log that is
 exactly the semantics this query needs — deterministic, complete —
 while multi-trigger incremental consumption over a GROWING log is
 exercised in tests/test_feed_source.py.

@@ -18,10 +18,12 @@ source/sink via the Spark 4 Python Data Source API
   (decode-skip tradeoff documented on ``_plan_partitions``).
 - **Streaming scan** (``spark.readStream.format("rtap_feed")``): a
   ``DataSourceStreamReader`` whose offsets are per-partition consumed-row
-  counts — exactly Kafka's model. ``latestOffset`` rate-limits each
-  trigger to ``batch_rows`` per partition (the ``maxOffsetsPerTrigger``
-  analog); ``read(partition)`` deterministically re-reads any offset
-  range, so checkpoint restart is exactly-once by construction.
+  counts — exactly Kafka's model. ``latestOffset`` reports the end of
+  the log, opening only footers it has not seen (published files are
+  immutable); each micro-batch's offset gaps are packed into
+  ``ceil(rows / batch_rows)`` read tasks, and ``read(partition)``
+  deterministically re-reads its ranges, so checkpoint restart is
+  exactly-once by construction.
 - **Streaming sink** (``writeStream.format("rtap_feed")``): a
   ``DataSourceStreamArrowWriter`` with the two-phase epoch commit the
   reference's Kafka sink gets from the broker: executors stage part
@@ -31,6 +33,11 @@ source/sink via the Spark 4 Python Data Source API
   published and discards the duplicate stage — idempotent exactly-once.
   ``read_committed`` reads only manifest-listed files, so concurrent
   readers never observe uncommitted stragglers.
+- **Keyed produce** (``produce_keyed``): Kafka's key-sticky partition
+  routing. A DataFrame is routed, shuffled and written by a Spark job;
+  an Arrow table (the ingestion producer's flush) is routed on the
+  calling process with the same hash and published as one staged file
+  through the same commit — a client-side log append, no Spark job.
 
 At 100 TB the planning metadata is per-row-group footers only (no data
 read on the driver); scan work fans out one task per surviving row
@@ -278,11 +285,17 @@ class FeedStreamReader(DataSourceStreamReader):
 
     ``latestOffset`` reports the physical end of the log; Spark plans
     the micro-batch as (checkpointed start → that end), which is Kafka's
-    semantics without ``maxOffsetsPerTrigger``. Task size stays bounded
-    regardless: ``partitions()`` chunks each offset gap into
-    ``batch_rows`` tasks. A given (start, end) range always maps to the
-    same physical rows, so replay after checkpoint recovery re-emits
-    identical data — exactly-once with an idempotent sink. (A
+    semantics without ``maxOffsetsPerTrigger``. Published files are
+    immutable and uniquely named, so their row-group counts are cached
+    by name and each trigger opens only the footers of new files.
+
+    ``partitions()`` packs the micro-batch's offset gaps, in offset
+    order, into ``ceil(gap rows / batch_rows)`` tasks of at most
+    ``batch_rows`` rows each: a live feed gains one small file per
+    producer flush, and one task per file would make task launch, not
+    data, the cost of a micro-batch. A given (start, end) range always
+    maps to the same physical rows, so replay after checkpoint recovery
+    re-emits identical data — exactly-once with an idempotent sink. (A
     micro-batch-level rate limit would need offset arithmetic against
     durable state the Python API doesn't expose; any in-memory cursor
     would regress offsets after restart and is deliberately avoided.)
@@ -291,38 +304,51 @@ class FeedStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict) -> None:
         self._path = options["path"]
         self._batch_rows = int(options.get("batch_rows", "50000"))
+        self._row_groups: dict[str, List[int]] = {}  # file -> rows per group
 
-    def _scan(self) -> List[Tuple[str, str, int, int]]:
-        parts = []
+    def _scan(self) -> List[Tuple[str, int]]:
+        seen, self._row_groups = self._row_groups, {}  # retired files drop out
         for f in _feed_files(self._path):
-            meta = pq.ParquetFile(f).metadata
-            for rg in range(meta.num_row_groups):
-                parts.append((f"{f}#{rg}", f, rg, meta.row_group(rg).num_rows))
-        return parts
+            if f not in seen:
+                meta = pq.ParquetFile(f).metadata
+                seen[f] = [
+                    meta.row_group(i).num_rows for i in range(meta.num_row_groups)
+                ]
+            self._row_groups[f] = seen[f]
+        return [
+            (f"{f}#{rg}", n)
+            for f, rows in self._row_groups.items()
+            for rg, n in enumerate(rows)
+        ]
 
     def initialOffset(self) -> dict:
-        return {key: 0 for key, _f, _rg, _n in self._scan()}
+        return {key: 0 for key, _n in self._scan()}
 
     def latestOffset(self) -> dict:
-        return {key: n for key, _f, _rg, n in self._scan()}
+        return dict(self._scan())
 
     def partitions(self, start: dict, end: dict) -> List[InputPartition]:
-        out: List[InputPartition] = []
+        tasks: List[InputPartition] = []
+        ranges: List[_RowRange] = []
+        room = self._batch_rows
         for key, hi in end.items():
             path, rg = key.rsplit("#", 1)
-            lo = int(start.get(key, 0))
-            pos = lo
+            pos = int(start.get(key, 0))
             while pos < int(hi):
-                out.append(
-                    _RowRange(
-                        path, int(rg), pos, min(pos + self._batch_rows, int(hi))
-                    )
-                )
-                pos += self._batch_rows
-        return out
+                take = min(int(hi) - pos, room)
+                ranges.append(_RowRange(path, int(rg), pos, pos + take))
+                pos += take
+                room -= take
+                if room == 0:
+                    tasks.append(InputPartition(ranges))
+                    ranges, room = [], self._batch_rows
+        if ranges:
+            tasks.append(InputPartition(ranges))
+        return tasks
 
-    def read(self, partition: _RowRange) -> Iterator[pa.RecordBatch]:
-        yield from _read_range(partition, None)
+    def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
+        for part in partition.value:  # the task's _RowRanges, in order
+            yield from _read_range(part, None)
 
     def commit(self, end: dict) -> None:  # offsets live in the checkpoint
         pass
@@ -337,6 +363,44 @@ class FeedStreamReader(DataSourceStreamReader):
 class _StagedFile(WriterCommitMessage):
     staged: str
     rows: int
+
+
+def _stage(path: str, batches: Iterable[pa.RecordBatch]) -> _StagedFile:
+    """Phase one of a commit: write the batches as one uniquely named
+    part file under ``<path>/_staging`` (nothing staged when empty)."""
+    batches = list(batches)
+    if not batches:
+        return _StagedFile(staged="", rows=0)
+    staging = os.path.join(path, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    name = os.path.join(staging, f"{uuid.uuid4().hex}.parquet")
+    table = pa.Table.from_batches(batches)
+    pq.write_table(table, name)
+    return _StagedFile(staged=name, rows=table.num_rows)
+
+
+def _publish(path: str, epoch, messages: List[_StagedFile]) -> None:
+    """Phase two, on the driver: give the staged parts their final names,
+    then publish the epoch's manifest by atomic rename (tmp + rename) —
+    the commit point. ``epoch`` is a stream batch id or a batch name."""
+    commits = os.path.join(path, "_commits")
+    os.makedirs(commits, exist_ok=True)
+    staged = [m for m in messages if m is not None and m.staged]
+    tag = f"{epoch:05d}" if isinstance(epoch, int) else epoch
+    finals = [f"part-{tag}-{i:04d}.parquet" for i in range(len(staged))]
+    for m, final in zip(staged, finals):
+        os.replace(m.staged, os.path.join(path, final))
+    fd, tmp = tempfile.mkstemp(dir=commits, suffix=".tmp")
+    with os.fdopen(fd, "w") as fh:
+        rows = sum(m.rows for m in staged)
+        json.dump({"epoch": epoch, "files": finals, "rows": rows}, fh)
+    os.replace(tmp, os.path.join(commits, f"{epoch}.json"))
+
+
+def _discard(messages: List[_StagedFile]) -> None:
+    for m in messages:
+        if m is not None and m.staged and os.path.exists(m.staged):
+            os.remove(m.staged)
 
 
 class FeedStreamWriter(DataSourceStreamArrowWriter):
@@ -354,42 +418,16 @@ class FeedStreamWriter(DataSourceStreamArrowWriter):
         self._schema: pa.Schema | None = None
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _StagedFile:
-        staging = os.path.join(self._path, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        name = os.path.join(staging, f"{uuid.uuid4().hex}.parquet")
-        batches = list(iterator)
-        if not batches:
-            return _StagedFile(staged="", rows=0)
-        table = pa.Table.from_batches(batches)
-        pq.write_table(table, name)
-        return _StagedFile(staged=name, rows=table.num_rows)
+        return _stage(self._path, iterator)
 
     def commit(self, messages: List[_StagedFile], batchId: int) -> None:
-        commits = os.path.join(self._path, "_commits")
-        os.makedirs(commits, exist_ok=True)
-        manifest = os.path.join(commits, f"{batchId}.json")
-        staged = [m for m in messages if m is not None and m.staged]
-        if os.path.exists(manifest):
-            # replayed epoch: already published — drop the duplicate stage
-            for m in staged:
-                if os.path.exists(m.staged):
-                    os.remove(m.staged)
-            return
-        finals, rows = [], 0
-        for i, m in enumerate(staged):
-            final = os.path.join(self._path, f"part-{batchId:05d}-{i:04d}.parquet")
-            os.replace(m.staged, final)
-            finals.append(os.path.basename(final))
-            rows += m.rows
-        fd, tmp = tempfile.mkstemp(dir=commits, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"epoch": batchId, "files": finals, "rows": rows}, fh)
-        os.replace(tmp, manifest)  # the atomic publish point
+        if os.path.exists(os.path.join(self._path, "_commits", f"{batchId}.json")):
+            _discard(messages)  # replayed epoch: already published
+        else:
+            _publish(self._path, batchId, messages)
 
     def abort(self, messages: List[_StagedFile], batchId: int) -> None:
-        for m in messages:
-            if m is not None and m.staged and os.path.exists(m.staged):
-                os.remove(m.staged)
+        _discard(messages)
 
 
 class FeedBatchWriter(DataSourceArrowWriter):
@@ -409,20 +447,11 @@ class FeedBatchWriter(DataSourceArrowWriter):
         self._overwrite = overwrite
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _StagedFile:
-        staging = os.path.join(self._path, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        batches = list(iterator)
-        if not batches:
-            return _StagedFile(staged="", rows=0)
-        name = os.path.join(staging, f"{uuid.uuid4().hex}.parquet")
-        table = pa.Table.from_batches(batches)
-        pq.write_table(table, name)
-        return _StagedFile(staged=name, rows=table.num_rows)
+        return _stage(self._path, iterator)
 
     def commit(self, messages: List[_StagedFile]) -> None:
         commits = os.path.join(self._path, "_commits")
         os.makedirs(commits, exist_ok=True)
-        epoch = f"batch-{uuid.uuid4().hex}"
         retired: List[str] = []
         if self._overwrite:
             for mf in sorted(os.listdir(commits)):
@@ -430,26 +459,14 @@ class FeedBatchWriter(DataSourceArrowWriter):
                     with open(os.path.join(commits, mf)) as fh:
                         retired.extend(json.load(fh)["files"])
                     os.remove(os.path.join(commits, mf))
-        finals, rows = [], 0
-        staged = [m for m in messages if m is not None and m.staged]
-        for i, m in enumerate(staged):
-            final = os.path.join(self._path, f"part-{epoch}-{i:04d}.parquet")
-            os.replace(m.staged, final)
-            finals.append(os.path.basename(final))
-            rows += m.rows
-        fd, tmp = tempfile.mkstemp(dir=commits, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"epoch": epoch, "files": finals, "rows": rows}, fh)
-        os.replace(tmp, os.path.join(commits, f"{epoch}.json"))
+        _publish(self._path, f"batch-{uuid.uuid4().hex}", messages)
         for f in retired:  # old data invisible already; reclaim space
             p = os.path.join(self._path, f)
             if os.path.exists(p):
                 os.remove(p)
 
     def abort(self, messages: List[_StagedFile]) -> None:
-        for m in messages:
-            if m is not None and m.staged and os.path.exists(m.staged):
-                os.remove(m.staged)
+        _discard(messages)
 
 
 def read_committed(spark, path: str, as_of_epoch: int | None = None):
@@ -542,6 +559,68 @@ def compact_feed_table(spark, path: str) -> int:
 
 KEY_PARTITION_COL = "_feed_pid"
 
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87,
+    0xC2B2AE3D27D4EB4F,
+    0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63,
+    0x27D4EB2F165667C5,
+)
+_XXH_SEED = 42  # Spark's xxhash64 seed: routing parity depends on it
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxhash64(data: bytes | None) -> int:
+    """XXH64 of ``data`` as Spark's ``xxhash64`` returns it (signed 64-bit,
+    little-endian lanes, seed ``_XXH_SEED``); Spark skips a null, leaving
+    the seed. Pure Python: routing a flush of a few hundred keys takes
+    milliseconds, far below one Spark job."""
+    seed = _XXH_SEED
+    if data is None:
+        return seed
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
+                v[j] = _xxh_round(v[j], lane)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh_round(0, int.from_bytes(data[i : i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i : i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def key_partition(key: str | None, num_partitions: int) -> int:
+    """The topic partition of ``key``: Spark's
+    ``pmod(xxhash64(cast(key as string)), n)``, computed in Python."""
+    return _xxhash64(None if key is None else key.encode()) % num_partitions
+
 
 def produce_keyed(
     df,
@@ -576,9 +655,16 @@ def produce_keyed(
     analog of a Kafka record's partition metadata — so consumers and
     tests can replay one partition's log in isolation.
 
-    Scale note: this is one hash shuffle of the produced micro-batch
-    (Kafka pays the same routing network hop); the within-task sort is
-    the only added cost and it spills, not OOMs, if an epoch is huge.
+    ``df`` is a Spark DataFrame or a ``pyarrow.Table`` with a string
+    key column. A table is what a producer client holds in memory: it
+    is routed here with ``key_partition`` (bit-identical to the Spark
+    expression), sorted ``(_feed_pid, seq)`` and appended as ONE
+    staged file through ``FeedBatchWriter``'s commit — no Spark job,
+    like a Kafka client's append (any other ``mode`` is refused). A
+    DataFrame may be distributed, so it takes the Spark path: one hash
+    shuffle of the produced micro-batch (Kafka pays the same routing
+    network hop); the within-task sort is the only added cost and it
+    spills, not OOMs, if an epoch is huge.
     """
     from pyspark.sql import functions as F
 
@@ -586,6 +672,21 @@ def produce_keyed(
         # honor the topic's declared partition count (create_topic);
         # default 8 for ad-hoc un-administered tables
         num_partitions = topic_partitions(path) or 8
+    if isinstance(df, pa.Table):
+        if mode != "append":
+            raise ValueError(f"a pyarrow.Table produce only appends, not {mode!r}")
+        pids = [key_partition(k, num_partitions) for k in df[key_col].to_pylist()]
+        table = df.append_column(
+            pa.field(KEY_PARTITION_COL, pa.int32()), pa.array(pids, pa.int32())
+        ).sort_by([(KEY_PARTITION_COL, "ascending"), (seq_col, "ascending")])
+        writer = FeedBatchWriter({"path": path}, overwrite=False)
+        msg = writer.write(table.to_batches())
+        try:
+            writer.commit([msg])
+        except BaseException:
+            writer.abort([msg])  # as Spark does for a failed job
+            raise
+        return
     register_feed_source(df.sparkSession)  # idempotent
     routed = (
         df.withColumn(

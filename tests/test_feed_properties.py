@@ -3,7 +3,8 @@
 The invariants that make the source exactly-once: partition planning
 must tile the row space exactly (no gap, no overlap) for ANY file
 layout and parallelism, and stream offset chunking must cover ANY
-(start, end) gap in bounded, disjoint, replayable ranges.
+(start, end) gaps in disjoint, replayable ranges packed into the fewest
+tasks of at most ``batch_rows`` rows.
 """
 
 from __future__ import annotations
@@ -74,11 +75,16 @@ def test_stream_chunking_tiles_offset_gaps(ends, starts_frac, batch_rows):
         k: int(v * f)
         for (k, v), f in zip(sorted(ends.items()), starts_frac)
     }
-    parts = reader.partitions(start, ends)
+    tasks = reader.partitions(start, ends)
+    gap_rows = sum(max(0, hi - start.get(k, 0)) for k, hi in ends.items())
+    # packed: every task but the last is full, so the count is minimal
+    assert len(tasks) == -(-gap_rows // batch_rows)
     by_key: dict[tuple, list] = {}
-    for p in parts:
-        assert p.end - p.start <= batch_rows  # bounded task size
-        by_key.setdefault((p.path, p.row_group), []).append(p)
+    for t in tasks:
+        assert 0 < sum(p.end - p.start for p in t.value) <= batch_rows
+        for p in t.value:
+            assert p.start < p.end
+            by_key.setdefault((p.path, p.row_group), []).append(p)
     for k, hi in ends.items():
         path, rg = k.rsplit("#", 1)
         lo = start.get(k, 0)

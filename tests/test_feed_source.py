@@ -181,6 +181,38 @@ def test_stream_growing_log_exactly_once_restart(feed, tmp_path):
     assert got == want
 
 
+def test_stream_latest_offset_opens_only_new_footers(tmp_path, monkeypatch):
+    """Published feed files are immutable: latestOffset reads each
+    footer once, then only the footers of files added since."""
+    import pyarrow as pa
+
+    from realtime_analytics_pipeline_spark.sources.feed import FeedStreamReader
+
+    src = tmp_path / "log"
+    src.mkdir()
+    t = pa.table({"x": list(range(10))})
+    pq.write_table(t, src / "a.parquet")
+    pq.write_table(t, src / "b.parquet")
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(path, *args, **kwargs):
+        opened.append(os.path.basename(path))
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    reader = FeedStreamReader({"path": str(src)})
+    first = reader.latestOffset()
+    assert opened == ["a.parquet", "b.parquet"]
+    pq.write_table(t.slice(0, 4), src / "c.parquet")
+    second = reader.latestOffset()
+    assert opened == ["a.parquet", "b.parquet", "c.parquet"]
+    assert second == {**first, f"{src}/c.parquet#0": 4}
+    os.remove(src / "a.parquet")  # a retired file leaves the offsets
+    assert set(reader.latestOffset()) == set(second) - {f"{src}/a.parquet#0"}
+    assert len(opened) == 3
+
+
 def test_stream_results_match_batch_pipeline(feed, tmp_path):
     """The feed source composes with the normal operator pipeline."""
     src = str(tmp_path / "log")
@@ -482,6 +514,97 @@ def test_keyed_rebalance_replay_preserves_per_key_order(feed, tmp_path):
         assert key_seqs[k] == sorted(seqs), k
         assert len(key_home[k]) == 1
     assert sum(len(r) for r in logs.values()) == 400
+
+
+def test_key_partition_matches_spark_routing(feed):
+    """Two implementations, one equality: the Python router used by the
+    Arrow-table produce equals Spark's routing expression."""
+    from realtime_analytics_pipeline_spark.sources.feed import key_partition
+
+    keys = ["u1", "user-4242", "é", "ключ-中文-😀", "", "k" * 40, "x" * 37, None]
+    df = feed.createDataFrame([(k,) for k in keys], "k string")
+    for n in (1, 3, 8):
+        spark_pids = {
+            r.k: r.p
+            for r in df.select(
+                "k",
+                F.pmod(F.xxhash64(F.col("k").cast("string")), F.lit(n))
+                .cast("int")
+                .alias("p"),
+            ).collect()
+        }
+        assert {k: key_partition(k, n) for k in keys} == spark_pids, n
+
+
+def test_flush_and_dataframe_produce_lay_out_the_same_log(feed, tmp_path):
+    """A producer flush (Arrow table, no Spark job) and a DataFrame
+    produce_keyed of the same rows store the same keyed log."""
+    from realtime_analytics_pipeline_spark.ingestion_api import (
+        BufferedEventProducer,
+    )
+    from realtime_analytics_pipeline_spark.sources.feed import (
+        KEY_PARTITION_COL,
+        produce_keyed,
+    )
+
+    users = [str(i) for i in range(20)] + ["é", "中文", "", "x" * 40]
+    payloads = [{"user": {"id": users[i % len(users)]}, "n": i} for i in range(300)]
+    flushed, framed = str(tmp_path / "flushed"), str(tmp_path / "framed")
+    producer = BufferedEventProducer(flushed, num_partitions=3)
+    for p in payloads:
+        producer.send(p)
+    assert producer.flush() == 300
+    df = feed.createDataFrame(
+        [(p["user"]["id"], i, json.dumps(p)) for i, p in enumerate(payloads)],
+        "user_id string, seq long, value string",
+    )
+    produce_keyed(df, framed, key_col="user_id", seq_col="seq", num_partitions=3)
+
+    def layout(path):
+        pid_of, home, rows = {}, {}, set()
+        for fname, log in _partition_logs(path).items():
+            schema = pq.read_schema(os.path.join(path, fname))
+            assert [(f.name, str(f.type)) for f in schema] == [
+                ("user_id", "string"),
+                ("seq", "int64"),
+                ("value", "string"),
+                (KEY_PARTITION_COL, "int32"),
+            ]
+            last_seq: dict[int, int] = {}
+            for r in log:
+                pid = r[KEY_PARTITION_COL]
+                assert last_seq.get(pid, -1) < r["seq"]  # produce order
+                last_seq[pid] = r["seq"]
+                assert pid_of.setdefault(r["user_id"], pid) == pid
+                home.setdefault(r["user_id"], set()).add(fname)
+                rows.add((r["user_id"], r["seq"], r["value"]))
+        assert all(len(files) == 1 for files in home.values())  # no split key
+        return pid_of, rows
+
+    assert layout(flushed) == layout(framed)
+
+
+def test_table_produce_appends_only_and_cleans_up_a_failed_commit(
+    tmp_path, monkeypatch
+):
+    """The Arrow-table produce refuses non-append modes, and a failed
+    publish leaves no staged file behind (the Spark path's abort)."""
+    import pyarrow as pa
+
+    from realtime_analytics_pipeline_spark.sources import feed as feed_mod
+
+    path = str(tmp_path / "t")
+    table = pa.table({"user_id": ["a", "b"], "seq": [0, 1], "value": ["x", "y"]})
+    with pytest.raises(ValueError, match="only appends"):
+        feed_mod.produce_keyed(table, path, "user_id", "seq", 3, mode="overwrite")
+
+    def failing_publish(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(feed_mod, "_publish", failing_publish)
+    with pytest.raises(OSError, match="disk full"):
+        feed_mod.produce_keyed(table, path, "user_id", "seq", 3)
+    assert os.listdir(os.path.join(path, "_staging")) == []
 
 
 # -- topic admin (S9: AdminClient.create_topics analog) --------------------

@@ -102,6 +102,55 @@ def test_ingestion_end_to_end(spark, tmp_path):
         srv.close()
 
 
+def test_flush_launches_no_spark_job(spark, tmp_path):
+    """A flush is a client-side log append, as a Kafka producer's is:
+    the status tracker sees no new job across ``srv.flush(spark)``."""
+    srv = IngestionHttpServer(str(tmp_path / "t"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # tracker is async
+        return set(tracker.getJobIdsForGroup())
+
+    try:
+        for i in range(40):
+            _post(srv.port, "/analytics/track", _wire_event(i, f"u{i % 7}"))
+        before = job_ids()
+        spark.range(3).count()  # control: a job that does run is seen
+        control = job_ids()
+        assert control - before
+        assert srv.flush(spark) == 40
+        assert not job_ids() - control
+        assert read_committed(spark, str(tmp_path / "t")).count() == 40
+    finally:
+        srv.close()
+
+
+def test_unencodable_user_id_fails_its_send_only(spark, tmp_path):
+    """A user id with a lone surrogate escape cannot be stored as UTF-8:
+    that request fails as a producer error, and the buffer of good
+    events still flushes."""
+    feed = str(tmp_path / "t")
+    srv = IngestionHttpServer(feed)
+    try:
+        _post(srv.port, "/analytics/track", _wire_event(0, "u1"))
+        body = json.dumps(_wire_event(1, "USER")).replace("USER", "\\ud800")
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/analytics/track",
+            data=body.encode(),
+            headers={"Content-Type": "application/json"},
+            method="POST",
+        )
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(req, timeout=30)
+        assert ei.value.code == 500
+        assert srv.flush(spark) == 1
+        assert read_committed(spark, feed).count() == 1
+    finally:
+        srv.close()
+
+
 def test_ingestion_validation_422(spark, tmp_path):
     srv = IngestionHttpServer(str(tmp_path / "t"))
     try:
