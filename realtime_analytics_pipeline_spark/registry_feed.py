@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 
 from realtime_analytics_pipeline_spark.registry import register
 from realtime_analytics_pipeline_spark.sources.feed import register_feed_source
+from realtime_analytics_pipeline_spark.streaming.jobs import (
+    run_to_memory_table,
+)
 
 _counter = itertools.count()
 
@@ -85,7 +88,6 @@ GROUP BY event_type
 @register("streaming_pyds_feed", _FEED_STREAM_SQL)
 def q_streaming_pyds_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_feed_source(spark)
-    name = f"pyds_feed_{next(_counter)}"
     agg = (
         spark.readStream.format("rtap_feed")
         .option("path", f"{sf_dir}/events.parquet")
@@ -97,16 +99,7 @@ def q_streaming_pyds_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 6).alias("sum_value"),
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    q.stop()
-    return spark.table(name)
+    return run_to_memory_table(agg, output_mode="complete")
 
 
 _FEED_WINDOWS_SQL = """
@@ -173,10 +166,13 @@ def q_streaming_feed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="200 milliseconds")
         .start()
     )
+    # the frame keeps its own reference to the sink, so it outlives
+    # the temp view dropped below (see run_to_memory_table)
+    out = spark.table(name)
     try:
         deadline = time.time() + 600
         while time.time() < deadline:
-            if spark.table(name).limit(1).count() > 0:
+            if out.limit(1).count() > 0:
                 break
             time.sleep(0.5)
         # one extra progress round so the finalization batch commits
@@ -184,7 +180,8 @@ def q_streaming_feed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         time.sleep(1.0)
     finally:
         q.stop()
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
+    return out
 
 
 _KEYED_ROUNDTRIP_SQL = """

@@ -137,30 +137,25 @@ def q_streaming_jdbc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = tempfile.mkdtemp(prefix=f"rtap_sjdbc_{next(_call)}_")
     url = derby_url(f"{work}/db")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, _os.path.join(sf_dir, "events.parquet")
+    stream = read_events_stream_from_dir(
+        spark, _os.path.join(sf_dir, "events.parquet")
+    )
+    em = event_metrics_exact_streaming(stream).select(
+        F.unix_millis("window_start").alias("window_start_ms"),
+        "event_type",
+        "event_count",
+        "user_count",
+    )
+    q = (
+        em.writeStream.outputMode("append")
+        .foreachBatch(
+            foreach_batch_jdbc_upsert(url, "event_metrics_live", "window_start_ms")
         )
-        em = event_metrics_exact_streaming(stream).select(
-            F.unix_millis("window_start").alias("window_start_ms"),
-            "event_type",
-            "event_count",
-            "user_count",
-        )
-        q = (
-            em.writeStream.outputMode("append")
-            .foreachBatch(
-                foreach_batch_jdbc_upsert(url, "event_metrics_live", "window_start_ms")
-            )
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        .option("checkpointLocation", f"{work}/ck")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     back = read_jdbc(spark, url, "event_metrics_live")
     # restrict to the replay-shape-independent finalization core: a
     # chained stateful agg emits one window MORE on a multi-file

@@ -18,8 +18,9 @@ lag).
 
 from __future__ import annotations
 
-import itertools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,8 +37,6 @@ from realtime_analytics_pipeline_spark.streaming.jobs import (
     read_events_stream_from_dir,
     run_to_memory_table,
 )
-
-_counter = itertools.count()
 
 _STREAMING_EM_SQL = f"""
 WITH em AS (
@@ -82,24 +81,17 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_attribution_join,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        joined = stream_attribution_join(stream).select(
-            "purchase_id",
-            "p_user",
-            F.unix_micros("p_time").alias("p_us"),
-            "view_id",
-            F.unix_micros("v_time").alias("v_us"),
-        )
-        table = f"stream_interval_join_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(joined, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    joined = stream_attribution_join(stream).select(
+        "purchase_id",
+        "p_user",
+        F.unix_micros("p_time").alias("p_us"),
+        "view_id",
+        F.unix_micros("v_time").alias("v_us"),
+    )
+    return run_to_memory_table(joined)
 
 
 @register("streaming_stateful_running_totals")  # rows-only: bloom column
@@ -114,18 +106,11 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_totals_per_type,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        out = running_totals_per_type(stream)
-        table = f"stream_stateful_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="update")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    out = running_totals_per_type(stream)
+    return run_to_memory_table(out, output_mode="update")
 
 
 _STREAMING_SESSION_SQL = """
@@ -175,26 +160,19 @@ def q_streaming_session_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     one being the stream tail) and sf0.01 (9542/9549, zero diff rows
     vs this filter; the next-lag candidate mismatches by 6).
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        sess = session_metrics(stream)
-        out = sess.select(
-            "session_id",
-            "user_id",
-            F.unix_millis("start_time").alias("start_ms"),
-            F.unix_millis("end_time").alias("end_ms"),
-            "duration",
-            "page_count",
-        )
-        table = f"stream_session_metrics_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    sess = session_metrics(stream)
+    out = sess.select(
+        "session_id",
+        "user_id",
+        F.unix_millis("start_time").alias("start_ms"),
+        F.unix_millis("end_time").alias("end_ms"),
+        "duration",
+        "page_count",
+    )
+    return run_to_memory_table(out)
 
 
 def _finalized_core(
@@ -230,29 +208,18 @@ def _finalized_core(
 
 @register("streaming_event_metrics", _STREAMING_EM_SQL)
 def q_streaming_event_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # streaming state partitioning is fixed at query start (no AQE
-    # coalescing for stateful ops): 8 state stores is right for a
-    # single-node replay — measured 2.5x faster than 32 with identical
-    # results; a cluster deployment sizes this to executor count
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        agg = event_metrics_exact_streaming(stream)
-        out = agg.select(
-            F.unix_millis("window_start").alias("window_start_ms"),
-            F.unix_millis("window_end").alias("window_end_ms"),
-            "event_type",
-            "event_count",
-            "user_count",
-        )
-        table = f"stream_event_metrics_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return _finalized_core(spark, sf_dir, spark.table(table))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    agg = event_metrics_exact_streaming(stream)
+    out = agg.select(
+        F.unix_millis("window_start").alias("window_start_ms"),
+        F.unix_millis("window_end").alias("window_end_ms"),
+        "event_type",
+        "event_count",
+        "user_count",
+    )
+    return _finalized_core(spark, sf_dir, run_to_memory_table(out))
 
 
 _STATEFUL_SESSION_SQL = """
@@ -304,26 +271,19 @@ def q_streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame
         sessionize_stateful,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        sess = sessionize_stateful(stream)
-        out = sess.select(
-            "session_id",
-            "user_id",
-            F.expr("start_us DIV 1000").alias("start_ms"),
-            F.expr("end_us DIV 1000").alias("end_ms"),
-            F.expr("(end_us - start_us) DIV 1000").alias("duration"),
-            "page_count",
-        )
-        table = f"stream_stateful_sessions_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    sess = sessionize_stateful(stream)
+    out = sess.select(
+        "session_id",
+        "user_id",
+        F.expr("start_us DIV 1000").alias("start_ms"),
+        F.expr("end_us DIV 1000").alias("end_ms"),
+        F.expr("(end_us - start_us) DIV 1000").alias("duration"),
+        "page_count",
+    )
+    return run_to_memory_table(out)
 
 
 _STREAMING_DEDUP_SQL = """
@@ -348,34 +308,31 @@ def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     delay are evicted), which is what makes exact streaming dedup
     viable at 100 TB/day: memory is O(events per delay window), not
     O(events ever seen)."""
-    import shutil
-    import tempfile
     import time
 
     tmp = tempfile.mkdtemp(prefix="dedup_stream_src_")
-    src = os.path.join(sf_dir, "events.parquet")
-    now = time.time()
-    if os.path.isdir(src):
-        # .scale slices store events as an n-file directory: redeliver
-        # the WHOLE sequence twice, preserving within-delivery file
-        # order via ascending mtimes (round-12 — the single-file
-        # copyfile raised IsADirectoryError at the scale gate)
-        k = 0
-        for i in (0, 1):
-            for f in sorted(os.listdir(src)):
-                dst = os.path.join(tmp, f"delivery{i}_{f}")
-                shutil.copyfile(os.path.join(src, f), dst)
-                os.utime(dst, (now + k, now + k))
-                k += 1
-    else:
-        for i in (0, 1):
-            dst = os.path.join(tmp, f"delivery{i}.parquet")
-            shutil.copyfile(src, dst)
-            os.utime(dst, (now + 2 * i, now + 2 * i))
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # both deliveries are in the memory sink once the replay ends
     try:
+        src = os.path.join(sf_dir, "events.parquet")
+        now = time.time()
+        if os.path.isdir(src):
+            # .scale slices store events as an n-file directory: redeliver
+            # the WHOLE sequence twice, preserving within-delivery file
+            # order via ascending mtimes (round-12 — the single-file
+            # copyfile raised IsADirectoryError at the scale gate)
+            k = 0
+            for i in (0, 1):
+                for f in sorted(os.listdir(src)):
+                    dst = os.path.join(tmp, f"delivery{i}_{f}")
+                    shutil.copyfile(os.path.join(src, f), dst)
+                    os.utime(dst, (now + k, now + k))
+                    k += 1
+        else:
+            for i in (0, 1):
+                dst = os.path.join(tmp, f"delivery{i}.parquet")
+                shutil.copyfile(src, dst)
+                os.utime(dst, (now + 2 * i, now + 2 * i))
+
         stream = read_events_stream_from_dir(spark, tmp)
         deduped = stream.dropDuplicatesWithinWatermark(["event_id"])
         out = deduped.select(
@@ -385,11 +342,9 @@ def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "value",
         )
-        table = f"stream_dedup_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
+        return run_to_memory_table(out)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register("event_users_hll_rollup_1h")  # rows-only: sketch binaries are
@@ -454,35 +409,29 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        agg = event_metrics_exact_streaming(stream)
-        out = agg.select(
-            F.unix_millis("window_start").alias("window_start_ms"),
-            F.unix_millis("window_end").alias("window_end_ms"),
-            "event_type",
-            "event_count",
-            "user_count",
-        )
-        table = f"stream_topk_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        w = Window.partitionBy("window_start_ms").orderBy(
-            F.desc("event_count"), F.asc("event_type")
-        )
-        # rank over the finalization CORE (not the raw emitted set):
-        # the rank depends on which windows are present, so the
-        # replay-shape filter must come before it (see _finalized_core)
-        return (
-            _finalized_core(spark, sf_dir, spark.table(table))
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= 3)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    agg = event_metrics_exact_streaming(stream)
+    out = agg.select(
+        F.unix_millis("window_start").alias("window_start_ms"),
+        F.unix_millis("window_end").alias("window_end_ms"),
+        "event_type",
+        "event_count",
+        "user_count",
+    )
+    emitted = run_to_memory_table(out)
+    w = Window.partitionBy("window_start_ms").orderBy(
+        F.desc("event_count"), F.asc("event_type")
+    )
+    # rank over the finalization CORE (not the raw emitted set):
+    # the rank depends on which windows are present, so the
+    # replay-shape filter must come before it (see _finalized_core)
+    return (
+        _finalized_core(spark, sf_dir, emitted)
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= 3)
+    )
 
 
 _STREAM_ENRICH_SQL = """
@@ -510,46 +459,39 @@ def q_streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
     (empirically validated like streaming_session_metrics)."""
     from realtime_analytics_pipeline_spark.sources.batch import load_table
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # static dim: distinct users with a derived tier (the synthetic
-        # schema has no user dim table; the mapping is deterministic)
-        tier = (
-            F.when(F.col("uid") % 3 == 0, "gold")
-            .when(F.col("uid") % 3 == 1, "silver")
-            .otherwise("bronze")
+    # static dim: distinct users with a derived tier (the synthetic
+    # schema has no user dim table; the mapping is deterministic)
+    tier = (
+        F.when(F.col("uid") % 3 == 0, "gold")
+        .when(F.col("uid") % 3 == 1, "silver")
+        .otherwise("bronze")
+    )
+    dim = (
+        load_table(spark, sf_dir, "events")
+        .select(F.col("user_id").alias("uid"))
+        .distinct()
+        .select(
+            F.col("uid").cast("string").alias("d_user_id"), tier.alias("tier")
         )
-        dim = (
-            load_table(spark, sf_dir, "events")
-            .select(F.col("user_id").alias("uid"))
-            .distinct()
-            .select(
-                F.col("uid").cast("string").alias("d_user_id"), tier.alias("tier")
-            )
+    )
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    enriched = stream.join(
+        F.broadcast(dim), stream["user_id"] == F.col("d_user_id")
+    )
+    agg = (
+        enriched.groupBy(
+            F.window("event_time", "60 seconds").alias("w"), "tier"
         )
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        enriched = stream.join(
-            F.broadcast(dim), stream["user_id"] == F.col("d_user_id")
-        )
-        agg = (
-            enriched.groupBy(
-                F.window("event_time", "60 seconds").alias("w"), "tier"
-            )
-            .agg(F.count(F.lit(1)).alias("event_count"))
-        )
-        out = agg.select(
-            F.unix_millis("w.start").alias("window_start_ms"),
-            "tier",
-            "event_count",
-        )
-        table = f"stream_enrich_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        .agg(F.count(F.lit(1)).alias("event_count"))
+    )
+    out = agg.select(
+        F.unix_millis("w.start").alias("window_start_ms"),
+        "tier",
+        "event_count",
+    )
+    return run_to_memory_table(out)
 
 
 _STREAMING_OUTER_JOIN_SQL = """
@@ -600,24 +542,17 @@ def q_streaming_interval_join_outer(
         stream_attribution_join_outer,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        joined = stream_attribution_join_outer(stream).select(
-            "purchase_id",
-            "p_user",
-            F.unix_micros("p_time").alias("p_us"),
-            "view_id",
-            F.unix_micros("v_time").alias("v_us"),
-        )
-        table = f"stream_outer_join_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(joined, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    joined = stream_attribution_join_outer(stream).select(
+        "purchase_id",
+        "p_user",
+        F.unix_micros("p_time").alias("p_us"),
+        "view_id",
+        F.unix_micros("v_time").alias("v_us"),
+    )
+    return run_to_memory_table(joined)
 
 
 _STREAM_SLIDING_SQL = """
@@ -646,18 +581,11 @@ def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         sliding_event_counts,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        out = sliding_event_counts(stream)
-        table = f"stream_sliding_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    out = sliding_event_counts(stream)
+    return run_to_memory_table(out)
 
 
 _STATEFUL_TOTALS_SQL = """
@@ -681,22 +609,15 @@ def q_streaming_stateful_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_totals_per_type,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        out = running_totals_per_type(stream)
-        table = f"stream_stateful_final_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="update")
-        return (
-            spark.table(table)
-            .groupBy("event_type")
-            .agg(F.max("cumulative_events").alias("total_events"))
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    out = running_totals_per_type(stream)
+    return (
+        run_to_memory_table(out, output_mode="update")
+        .groupBy("event_type")
+        .agg(F.max("cumulative_events").alias("total_events"))
+    )
 
 
 _STREAM_OUTLIER_SQL = """
@@ -737,49 +658,42 @@ def q_streaming_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ finalized set = windows whose end the terminal watermark passed."""
     from realtime_analytics_pipeline_spark.sources.batch import load_events
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        batch = load_events(spark, sf_dir).where(F.col("value").isNotNull())
-        vals = batch.select("event_type", "value")
-        med = vals.groupBy("event_type").agg(F.median("value").alias("med"))
-        fences = (
-            vals.join(med, "event_type")
-            .withColumn("adev", F.abs(F.col("value") - F.col("med")))
-            .groupBy("event_type")
-            .agg(F.max("med").alias("med"), F.median("adev").alias("mad"))
-            .select(
-                F.col("event_type").alias("f_type"), "med", "mad"
-            )
+    batch = load_events(spark, sf_dir).where(F.col("value").isNotNull())
+    vals = batch.select("event_type", "value")
+    med = vals.groupBy("event_type").agg(F.median("value").alias("med"))
+    fences = (
+        vals.join(med, "event_type")
+        .withColumn("adev", F.abs(F.col("value") - F.col("med")))
+        .groupBy("event_type")
+        .agg(F.max("med").alias("med"), F.median("adev").alias("mad"))
+        .select(
+            F.col("event_type").alias("f_type"), "med", "mad"
         )
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        ).where(F.col("value").isNotNull())
-        enriched = stream.join(
-            F.broadcast(fences), stream["event_type"] == F.col("f_type")
-        )
-        agg = enriched.groupBy(
-            F.window("event_time", "60 seconds").alias("w"), "event_type"
-        ).agg(
-            F.avg("value").alias("win_avg"),
-            F.max("med").alias("med"),
-            F.max("mad").alias("mad"),
-        )
-        hi = F.col("med") + F.lit(3 * 1.4826) * F.col("mad")
-        lo = F.col("med") - F.lit(3 * 1.4826) * F.col("mad")
-        out = agg.select(
-            F.unix_millis("w.start").alias("window_start_ms"),
-            "event_type",
-            F.round("win_avg", 6).alias("win_avg"),
-            ((F.col("win_avg") > hi) | (F.col("win_avg") < lo)).alias(
-                "is_breach"
-            ),
-        )
-        table = f"stream_outliers_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    )
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    ).where(F.col("value").isNotNull())
+    enriched = stream.join(
+        F.broadcast(fences), stream["event_type"] == F.col("f_type")
+    )
+    agg = enriched.groupBy(
+        F.window("event_time", "60 seconds").alias("w"), "event_type"
+    ).agg(
+        F.avg("value").alias("win_avg"),
+        F.max("med").alias("med"),
+        F.max("mad").alias("mad"),
+    )
+    hi = F.col("med") + F.lit(3 * 1.4826) * F.col("mad")
+    lo = F.col("med") - F.lit(3 * 1.4826) * F.col("mad")
+    out = agg.select(
+        F.unix_millis("w.start").alias("window_start_ms"),
+        "event_type",
+        F.round("win_avg", 6).alias("win_avg"),
+        ((F.col("win_avg") > hi) | (F.col("win_avg") < lo)).alias(
+            "is_breach"
+        ),
+    )
+    return run_to_memory_table(out)
 
 
 _STREAM_HISTOGRAM_SQL = """
@@ -806,29 +720,22 @@ def q_streaming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of input rate. Finalized set = single-operator
     watermark rule. Bin width 10.0 is exact, so the floor-arithmetic
     oracle reproduces width_bucket bit-for-bit."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        ).where(F.col("value").isNotNull())
-        agg = (
-            stream.groupBy(
-                F.window("event_time", "60 seconds").alias("w"),
-                F.width_bucket(
-                    "value", F.lit(0.0), F.lit(100.0), F.lit(10)
-                ).cast("long").alias("bucket"),
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    ).where(F.col("value").isNotNull())
+    agg = (
+        stream.groupBy(
+            F.window("event_time", "60 seconds").alias("w"),
+            F.width_bucket(
+                "value", F.lit(0.0), F.lit(100.0), F.lit(10)
+            ).cast("long").alias("bucket"),
         )
-        out = agg.select(
-            F.unix_millis("w.start").alias("window_start_ms"), "bucket", "n"
-        )
-        table = f"stream_histogram_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    out = agg.select(
+        F.unix_millis("w.start").alias("window_start_ms"), "bucket", "n"
+    )
+    return run_to_memory_table(out)
 
 
 # Chained stateful aggregation: per-(day, bitmap-bucket) bitmaps built
@@ -857,40 +764,33 @@ def q_streaming_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmap per (day, bucket) in state (bounded, mergeable — new events
     OR into it); phase 2 merges buckets per finalized day. Append-mode
     emission; oracle = batch COUNT(DISTINCT) on the finalized set."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # read_events_stream_from_dir already assigns the 10 s watermark
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        phase1 = stream.groupBy(
-            F.window("event_time", "1 day").alias("win"),
-            F.expr("bitmap_bucket_number(CAST(user_id AS LONG))").alias(
-                "bucket"
-            ),
-        ).agg(
-            F.expr(
-                "bitmap_construct_agg("
-                "bitmap_bit_position(CAST(user_id AS LONG)))"
-            ).alias("bm"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        phase2 = phase1.groupBy("win").agg(
-            F.sum("n").alias("n_events"),
-            F.sum(F.expr("bitmap_count(bm)")).alias("distinct_users"),
-        )
-        out = phase2.select(
-            F.unix_millis(F.col("win.start")).alias("day_ms"),
-            F.unix_millis(F.col("win.end")).alias("day_end_ms"),
-            "n_events",
-            "distinct_users",
-        )
-        table = f"stream_bitmap_daily_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # read_events_stream_from_dir already assigns the 10 s watermark
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    phase1 = stream.groupBy(
+        F.window("event_time", "1 day").alias("win"),
+        F.expr("bitmap_bucket_number(CAST(user_id AS LONG))").alias(
+            "bucket"
+        ),
+    ).agg(
+        F.expr(
+            "bitmap_construct_agg("
+            "bitmap_bit_position(CAST(user_id AS LONG)))"
+        ).alias("bm"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    phase2 = phase1.groupBy("win").agg(
+        F.sum("n").alias("n_events"),
+        F.sum(F.expr("bitmap_count(bm)")).alias("distinct_users"),
+    )
+    out = phase2.select(
+        F.unix_millis(F.col("win.start")).alias("day_ms"),
+        F.unix_millis(F.col("win.end")).alias("day_end_ms"),
+        "n_events",
+        "distinct_users",
+    )
+    return run_to_memory_table(out)
 
 
 # Single stateful aggregation ⇒ the single-agg finalization law
@@ -917,35 +817,28 @@ def q_streaming_error_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-minute windowed error rates with breach flags emitted in append
     mode as windows finalize — the alerting job a reference operator
     would attach to the live topic."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        err = F.when(F.col("event_type") == "error", 1).otherwise(0)
-        agg = stream.groupBy(
-            F.window("event_time", "5 minutes").alias("win")
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(err).alias("n_errors"),
-        )
-        out = agg.select(
-            F.unix_millis(F.col("win.start")).alias("window_start_ms"),
-            "n_events",
-            "n_errors",
-            F.round(F.col("n_errors") / F.col("n_events"), 6).alias(
-                "error_rate"
-            ),
-            (F.col("n_errors") / F.col("n_events") > 0.05).alias(
-                "slo_breach"
-            ),
-        )
-        table = f"stream_error_slo_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    err = F.when(F.col("event_type") == "error", 1).otherwise(0)
+    agg = stream.groupBy(
+        F.window("event_time", "5 minutes").alias("win")
+    ).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(err).alias("n_errors"),
+    )
+    out = agg.select(
+        F.unix_millis(F.col("win.start")).alias("window_start_ms"),
+        "n_events",
+        "n_errors",
+        F.round(F.col("n_errors") / F.col("n_events"), 6).alias(
+            "error_rate"
+        ),
+        (F.col("n_errors") / F.col("n_events") > 0.05).alias(
+            "slo_breach"
+        ),
+    )
+    return run_to_memory_table(out)
 
 
 _STREAMING_FULL_JOIN_SQL = """
@@ -1002,25 +895,18 @@ def q_streaming_interval_join_full(
         stream_attribution_join_full_outer,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        joined = stream_attribution_join_full_outer(stream).select(
-            "purchase_id",
-            "p_user",
-            F.unix_micros("p_time").alias("p_us"),
-            "view_id",
-            "v_user",
-            F.unix_micros("v_time").alias("v_us"),
-        )
-        table = f"stream_full_join_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(joined, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    joined = stream_attribution_join_full_outer(stream).select(
+        "purchase_id",
+        "p_user",
+        F.unix_micros("p_time").alias("p_us"),
+        "view_id",
+        "v_user",
+        F.unix_micros("v_time").alias("v_us"),
+    )
+    return run_to_memory_table(joined)
 
 
 # Self-calibrating CUSUM: single stateful operator, so the single-agg
@@ -1084,18 +970,11 @@ def q_streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         cusum_stateful,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_events_stream_from_dir(
-            spark, os.path.join(sf_dir, "events.parquet")
-        )
-        out = cusum_stateful(stream)
-        table = f"stream_cusum_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(out, table, output_mode="append")
-        return spark.table(table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = read_events_stream_from_dir(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    out = cusum_stateful(stream)
+    return run_to_memory_table(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1197,8 +1076,6 @@ def q_streaming_session_metrics_bucketed(
     (applyInPandasWithState interval merge with the bucket-ceiling
     close rule) replays the handoff into the finalized session set.
     Oracle = the full composition in SQL (see block comment above)."""
-    import tempfile
-
     from realtime_analytics_pipeline_spark.operators.session_metrics import (
         session_partials_bucketed,
     )
@@ -1206,10 +1083,10 @@ def q_streaming_session_metrics_bucketed(
         merge_partials_stateful,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    tmp = tempfile.mkdtemp(prefix="tp_sess_")
+    # the partials and phase 1's checkpoint are spent once phase 2's
+    # result is in the memory sink
     try:
-        tmp = tempfile.mkdtemp(prefix="tp_sess_")
         pdir = os.path.join(tmp, "partials")
         stream = read_events_stream_from_dir(
             spark, os.path.join(sf_dir, "events.parquet")
@@ -1243,9 +1120,7 @@ def q_streaming_session_metrics_bucketed(
             .withWatermark("end_time", "10 seconds")
         )
         merged = merge_partials_stateful(pstream)
-        table = f"stream_tp_sessions_{os.getpid()}_{next(_counter)}"
-        run_to_memory_table(merged, table, output_mode="append")
-        return spark.table(table).select(
+        return run_to_memory_table(merged).select(
             "session_id",
             "user_id",
             F.expr("start_us DIV 1000").alias("start_ms"),
@@ -1254,4 +1129,4 @@ def q_streaming_session_metrics_bucketed(
             "page_count",
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(tmp, ignore_errors=True)

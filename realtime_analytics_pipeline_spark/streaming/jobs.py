@@ -22,6 +22,7 @@ The streaming file source splits input into per-file micro-batches;
 
 from __future__ import annotations
 
+import itertools
 import os
 import tempfile
 
@@ -241,19 +242,29 @@ def parse_wire_json_with_dlq(
     return good, dead
 
 
-def run_to_memory_table(
-    df: DataFrame,
-    table_name: str,
-    output_mode: str = "append",
-) -> None:
-    """Execute a (finite) streaming DataFrame to completion into an
-    in-memory table via availableNow — the harness used by tests and
-    the gated streaming-parity query."""
+_sink_ids = itertools.count()
+
+
+def run_to_memory_table(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Execute a (finite) streaming DataFrame to completion into a
+    memory sink via availableNow and return the result — the replay
+    harness of the gated streaming queries and the tests.
+
+    The sink's temp view is dropped before returning: the frame keeps
+    its own reference to the sink, so it (and every frame derived from
+    it) still reads the same rows, while the catalog holds nothing and
+    the rows are freed once the caller lets go of the frame."""
+    spark = df.sparkSession
+    name = f"replay_{os.getpid()}_{next(_sink_ids)}"
     q = (
         df.writeStream.format("memory")
-        .queryName(table_name)
+        .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)

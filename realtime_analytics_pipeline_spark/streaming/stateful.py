@@ -226,105 +226,6 @@ def sessionize_stateful(events: DataFrame, gap_us: int = 1800 * 1_000_000) -> Da
 
 
 # ---------------------------------------------------------------------------
-# The same sessionization on the state-v2 API (transformWithStateInPandas,
-# Spark 4): explicit typed state + named timers instead of the single
-# opaque tuple + setTimeoutTimestamp of applyInPandasWithState.
-# ---------------------------------------------------------------------------
-
-
-def _tws_session_processor(gap_us: int):
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState(
-                "open_session", SESSION_STATE_SCHEMA
-            )
-
-        def _emit(self, key, done):
-            return pd.DataFrame(
-                {
-                    "session_id": [key[0]] * len(done),
-                    "user_id": [key[1]] * len(done),
-                    "start_us": [d[0] for d in done],
-                    "end_us": [d[1] for d in done],
-                    "page_count": [d[2] for d in done],
-                }
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            cur = tuple(self.state.get()) if self.state.exists() else None
-            done = []
-            times: list[int] = []
-            for pdf in rows:
-                vals = (
-                    pdf["event_time"].astype("datetime64[us]").astype("int64")
-                )
-                times.extend(int(v) for v in vals)
-            times.sort()
-            for t in times:
-                if cur is None:
-                    cur = (t, t, 1)
-                elif t - cur[1] > gap_us:
-                    done.append(cur)
-                    cur = (t, t, 1)
-                else:
-                    cur = (cur[0], max(cur[1], t), cur[2] + 1)
-            if cur is not None:
-                expiry_ms = cur[1] // 1000 + gap_us // 1000
-                wm_ms = timerValues.getCurrentWatermarkInMs()
-                if expiry_ms <= wm_ms:
-                    done.append(cur)
-                    self.state.clear()
-                else:
-                    self.state.update(cur)
-                    # named timers are explicit state here: drop the
-                    # stale expiry before arming the new one
-                    for t_old in self.handle.listTimers():
-                        self.handle.deleteTimer(t_old)
-                    self.handle.registerTimer(expiry_ms)
-            if done:
-                yield self._emit(key, done)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if self.state.exists():
-                yield self._emit(key, [tuple(self.state.get())])
-                self.state.clear()
-
-        def close(self) -> None:
-            pass
-
-    return SessionProcessor()
-
-
-def sessionize_tws(events: DataFrame, gap_us: int = 1800 * 1_000_000) -> DataFrame:
-    """``sessionize_stateful`` on the state-v2 API
-    (transformWithStateInPandas): identical session semantics and
-    emission rule, expressed with a typed ValueState plus named timers
-    (registerTimer/handleExpiredTimer) instead of the opaque
-    state-tuple + setTimeoutTimestamp. Requires the RocksDB state
-    store provider — which is the right choice for large session
-    state anyway (config.state_store_provider).
-
-    ENVIRONMENT GATE: Spark's TransformWithStateInPySpark runner
-    needs the ``protobuf`` package (absent in this container, no
-    installs allowed), so executing the returned stream here fails at
-    query start with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE.
-    The plan construction and processor logic are real;
-    tests/test_stateful.py carries a skip-marked parity test that
-    runs wherever protobuf exists. The applyInPandasWithState twin
-    (``sessionize_stateful``) is the execution path in this image."""
-    prepared = events.select("session_id", "user_id", "event_time")
-    return prepared.groupBy("session_id", "user_id").transformWithStateInPandas(
-        _tws_session_processor(gap_us),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
-# ---------------------------------------------------------------------------
 # Self-calibrating CUSUM as a streaming stateful operator (round 6):
 # the online twin of operators/timeseries.py::cusum_drift, with the
 # target learned from the finalized prefix instead of a global pass.

@@ -137,10 +137,9 @@ def test_outer_join_null_pads_after_watermark(spark, tmp_path):
 
     stream = read_events_stream_from_dir(spark, src)
     out = stream_attribution_join_outer(stream)
-    run_to_memory_table(out, "t_outer_join", output_mode="append")
     got = {
         r["purchase_id"]: r["view_id"]
-        for r in spark.table("t_outer_join").collect()
+        for r in run_to_memory_table(out).collect()
     }
     assert got.get("2") == "1"  # matched in-batch
     assert "3" in got and got["3"] is None  # null-padded on expiry

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from realtime_analytics_pipeline_spark.sources.batch import load_table
 from realtime_analytics_pipeline_spark.streaming.jobs import (
     read_events_stream_from_dir,
+    run_to_memory_table,
 )
 from realtime_analytics_pipeline_spark.streaming.stateful import (
     running_totals_per_type,
@@ -23,16 +24,7 @@ def test_running_totals_accumulate_across_batches(spark, tmp_path):
 
     stream = read_events_stream_from_dir(spark, src, watermark="0 seconds")
     out = running_totals_per_type(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    rows = spark.table("running_totals").collect()
+    rows = run_to_memory_table(out, output_mode="update").collect()
     # multiple micro-batches → multiple emissions per type, monotone
     by_type = {}
     for r in rows:
@@ -81,15 +73,7 @@ def test_stateful_sessionization_multibatch_matches_finalized_set(spark, tmp_pat
 
     stream = read_events_stream_from_dir(spark, src)
     out = sessionize_stateful(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_stateful_mb")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("sess_stateful_mb")
+    got = run_to_memory_table(out)
 
     batch = session_metrics_by_lag(load_events(spark, SF_SMOKE)).select(
         "session_id",
@@ -117,93 +101,6 @@ def test_stateful_sessionization_multibatch_matches_finalized_set(spark, tmp_pat
         .count()
     )
     assert dupes == 0
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-import pytest  # noqa: E402
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs protobuf (absent in this "
-    "container; no installs allowed) — plan construction is still "
-    "exercised below",
-)
-def test_tws_sessionization_matches_finalized_set(spark, tmp_path):
-    """State-v2 twin parity: transformWithStateInPandas sessionization
-    must emit the identical finalized set as sessionize_stateful."""
-    from pyspark.sql import functions as F
-
-    from realtime_analytics_pipeline_spark.operators.session_metrics import (
-        session_metrics_by_lag,
-    )
-    from realtime_analytics_pipeline_spark.sources.batch import load_events
-    from realtime_analytics_pipeline_spark.streaming.stateful import (
-        sessionize_tws,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    stream = read_events_stream_from_dir(
-        spark, SF_SMOKE + "/events.parquet"
-    )
-    out = sessionize_tws(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_sess_parity")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("tws_sess_parity")
-
-    batch = session_metrics_by_lag(load_events(spark, SF_SMOKE)).select(
-        "session_id",
-        "user_id",
-        F.unix_micros("start_time").alias("start_us"),
-        F.unix_micros("end_time").alias("end_us"),
-        "page_count",
-    )
-    mx = (
-        load_events(spark, SF_SMOKE)
-        .agg(F.max(F.unix_micros("event_time")))
-        .first()[0]
-    )
-    fin = batch.where(
-        (F.col("end_us") + 1800 * 1_000_000) <= (mx - 10_000_000)
-    )
-    assert got.exceptAll(fin).count() == 0
-    assert fin.exceptAll(got).count() == 0
-
-
-def test_tws_sessionization_plan_constructs(spark):
-    """Even without protobuf the state-v2 plan must CONSTRUCT — the
-    analysis-time contract (typed state schema, event-time mode,
-    output schema) is checked by Catalyst before any runner starts."""
-    from realtime_analytics_pipeline_spark.streaming.stateful import (
-        sessionize_tws,
-    )
-
-    stream = read_events_stream_from_dir(
-        spark, SF_SMOKE + "/events.parquet"
-    )
-    out = sessionize_tws(stream)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "session_id", "user_id", "start_us", "end_us", "page_count",
-    ]
 
 
 def test_cusum_stateful_multibatch_equals_batch_fold(spark, tmp_path):

@@ -26,10 +26,10 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     )
 
     stream = read_events_stream_from_dir(spark, src)
-    run_to_memory_table(
-        stream_attribution_join(stream), "t_ssj", output_mode="append"
-    )
-    got = {tuple(r) for r in spark.table("t_ssj").collect()}
+    got = {
+        tuple(r)
+        for r in run_to_memory_table(stream_attribution_join(stream)).collect()
+    }
 
     batch = stream_attribution_join(load_events(spark, SF_SMOKE))
     want = {tuple(r) for r in batch.collect()}
@@ -72,8 +72,7 @@ def test_dedup_stream_drops_in_horizon_duplicates(spark, tmp_path):
 
     stream = read_events_stream_from_dir(spark, src)
     out = dedup_stream(stream, ["event_id"]).select("event_id")
-    run_to_memory_table(out, "t_dedup", output_mode="append")
-    got = sorted(r.event_id for r in spark.table("t_dedup").collect())
+    got = sorted(r.event_id for r in run_to_memory_table(out).collect())
     assert got == ["1", "2", "3", "4"]
 
 
@@ -132,8 +131,7 @@ def test_full_outer_join_null_pads_both_sides(spark, tmp_path):
 
     stream = read_events_stream_from_dir(spark, src)
     out = stream_attribution_join_full_outer(stream)
-    run_to_memory_table(out, "t_full_join", output_mode="append")
-    rows = spark.table("t_full_join").collect()
+    rows = run_to_memory_table(out).collect()
     by_p = {r.purchase_id: r for r in rows if r.purchase_id is not None}
     by_v = {r.view_id: r for r in rows if r.view_id is not None}
     assert by_p["2"].view_id == "1"  # matched in-batch

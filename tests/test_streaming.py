@@ -43,8 +43,7 @@ def test_streaming_complete_mode_equals_batch(spark, tmp_path):
         )
 
     stream = read_events_stream_from_dir(spark, src)
-    run_to_memory_table(counts(stream), "t_complete", output_mode="complete")
-    got = _rows_set(spark.table("t_complete"))
+    got = _rows_set(run_to_memory_table(counts(stream), output_mode="complete"))
     want = _rows_set(counts(load_events(spark, SF_SMOKE)))
     assert got == want
 
@@ -58,10 +57,7 @@ def test_streaming_append_exact_distinct_subset(spark, tmp_path):
     write_time_ordered_stream_fixture(raw, src, 4)
 
     stream = read_events_stream_from_dir(spark, src)
-    run_to_memory_table(
-        event_metrics_exact_streaming(stream), "t_append", output_mode="append"
-    )
-    got = _rows_set(spark.table("t_append"))
+    got = _rows_set(run_to_memory_table(event_metrics_exact_streaming(stream)))
     want = _rows_set(event_metrics(load_events(spark, SF_SMOKE)))
     assert got, "append mode over 4 micro-batches must finalize windows"
     assert got <= want
@@ -98,8 +94,7 @@ def test_streaming_session_windows_append_finalized_set(spark, tmp_path):
         _time.sleep(1.1)
 
     stream = read_events_stream_from_dir(spark, src)
-    run_to_memory_table(session_metrics(stream), "t_sess", output_mode="append")
-    got = _rows_set(spark.table("t_sess"))
+    got = _rows_set(run_to_memory_table(session_metrics(stream)))
 
     ev = load_events(spark, SF_SMOKE)
     max_ms = ev.agg(F.max(F.unix_millis("event_time"))).collect()[0][0]
@@ -158,10 +153,9 @@ def test_late_rows_beyond_watermark_dropped(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("event_count"))
         .select(F.col("window.start").alias("window_start"), "event_count")
     )
-    run_to_memory_table(counts, "t_late", output_mode="append")
     got = {
         (r.window_start.isoformat(), r.event_count)
-        for r in spark.table("t_late").collect()
+        for r in run_to_memory_table(counts).collect()
     }
     assert got == {
         # [0,60): only event 1 — late row 4 dropped
@@ -313,10 +307,9 @@ def test_streaming_bitmap_distinct_multibatch(spark, tmp_path):
         "n_events",
         "distinct_users",
     )
-    run_to_memory_table(out, "t_bm_daily", output_mode="append")
     got = {
         r["day_ms"]: (r["n_events"], r["distinct_users"])
-        for r in spark.table("t_bm_daily").collect()
+        for r in run_to_memory_table(out).collect()
     }
 
     ev = load_events(spark, SF_SMOKE)
@@ -491,3 +484,55 @@ def test_idle_source_watermark_policy_max(spark, tmp_path):
         n_max,
     )
     assert n_max > n_min
+
+
+def test_gated_replays_leave_no_sink_table(spark, monkeypatch):
+    """A gated memory-sink replay drops its sink's temp view before it
+    returns, and the returned frame still reads every row the sink held
+    just before the drop."""
+    from pyspark.sql.catalog import Catalog
+
+    from realtime_analytics_pipeline_spark.registry import QUERIES
+
+    held = []
+    drop = Catalog.dropTempView
+
+    def counting_drop(self, name):
+        held.append(spark.table(name).count())
+        return drop(self, name)
+
+    monkeypatch.setattr(Catalog, "dropTempView", counting_drop)
+    before = {t.name for t in spark.catalog.listTables()}
+    for name in (
+        "streaming_event_metrics",
+        "streaming_pyds_feed",
+        "streaming_feed_windows",
+    ):
+        n = len(held)
+        out = QUERIES[name](spark, SF_SMOKE)
+        assert len(held) == n + 1, name
+        assert held[-1] > 0, name
+        assert out.count() == held[-1], name
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+
+def test_gated_replays_remove_their_input_copies(spark, tmp_path, monkeypatch):
+    """The replay inputs staged on local disk (the dedup query's two
+    deliveries, the bucketed sessions' partials and phase-1 checkpoint)
+    are deleted once the result is in the memory sink."""
+    import tempfile
+
+    from realtime_analytics_pipeline_spark.registry import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    dedup = QUERIES["streaming_exact_dedup"](spark, SF_SMOKE)
+    sessions = QUERIES["streaming_session_metrics_bucketed"](spark, SF_SMOKE)
+    left = [
+        p.name
+        for p in tmp_path.iterdir()
+        if p.name.startswith(("dedup_stream_src_", "tp_sess_"))
+    ]
+    assert left == []
+    events = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
+    assert dedup.count() == events
+    assert sessions.count() > 0

@@ -74,15 +74,9 @@ def _replay_two_phase(spark, tmp_path, rows):
         .parquet(pdir)
         .withWatermark("end_time", "10 seconds")
     )
-    import uuid
-
-    table = f"tp_test_{uuid.uuid4().hex[:8]}"
-    run_to_memory_table(
-        merge_partials_stateful(pstream), table, output_mode="append"
-    )
     return [
         (r.session_id, r.start_us, r.end_us, r.page_count)
-        for r in spark.table(table).collect()
+        for r in run_to_memory_table(merge_partials_stateful(pstream)).collect()
     ]
 
 
