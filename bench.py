@@ -328,7 +328,9 @@ def main() -> None:
     # query reuses it — so their medians measured warm-memo reps.
     # Bumping the memo epoch before every timed rep makes each rep
     # rebuild everything it consumes inside its own timed region: the
-    # reported median is the honest COLD per-query cost. Queries that
+    # reported median is the honest COLD per-query cost. Each epoch
+    # change also frees the previous epoch's checkpointed frames, so
+    # the reps do not pile up pinned blocks. Queries that
     # did build a memo get ONE extra untimed-epoch (warm) rep, reported
     # separately in BENCH_LOCAL's queries_warm — the shared-index
     # production shape, measured instead of silently blended in.

@@ -9,6 +9,8 @@ check. Every exactly-computable op ships a DuckDB oracle.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -16,6 +18,7 @@ from realtime_analytics_pipeline_spark.operators import dedup as D
 from realtime_analytics_pipeline_spark.operators import similarity as S
 from realtime_analytics_pipeline_spark.operators import text_analysis as T
 from realtime_analytics_pipeline_spark.registry import register
+from realtime_analytics_pipeline_spark.session import SESSION_MEMO
 from realtime_analytics_pipeline_spark.sources.batch import load_table
 
 _SPLIT = "string_split(text, ' ')"
@@ -4594,42 +4597,15 @@ FROM metrics
 _LSH_BLOCKING_SQL = _lsh_blocking_sql()
 
 
-# Memo epoch (optimization r14, VERDICT r13 item 1): every session
-# memo key below carries this token. Outside the bench it stays ""
-# and the memos behave exactly as before (one build per app+sf_dir —
-# the production shape: an index/signature table is derived once and
-# consumed by many queries). bench.py bumps the epoch BEFORE EVERY
-# TIMED REP so each benched query rebuilds every intermediate it
-# consumes inside its own timed region — per-query medians measure
-# honest cold cost instead of warm-memo reps, while legitimate
-# within-one-query reuse (one build feeding several consumers in the
-# same plan) is unchanged. _MEMO_BUILDS counts builds so the bench
-# can tell which queries consumed a memo and report a warm rep too.
-_MEMO_EPOCH: list[str] = [""]
-_MEMO_BUILDS: list[int] = [0]
-
-
-def set_memo_epoch(epoch: str) -> None:
-    """Scope the session memos below to ``epoch`` (bench cold-timing
-    hook; "" = unscoped, the default)."""
-    _MEMO_EPOCH[0] = epoch
-
-
-def memo_build_count() -> int:
-    """Total memo builds this process — lets the bench detect that a
-    query's reps rebuilt shared intermediates (and therefore deserve
-    an extra warm rep for the warm-vs-cold report)."""
-    return _MEMO_BUILDS[0]
-
-
-_KMEANS_CELL_MEMO: dict[tuple, DataFrame] = {}
+# bench.py and perfbench scope the shared intermediates per timed rep
+set_memo_epoch = SESSION_MEMO.set_epoch
+memo_build_count = SESSION_MEMO.build_count
 
 
 def _kmeans_cells(
     spark: SparkSession, sf_dir: str, k: int = 8, iterations: int = 3
 ) -> DataFrame:
-    """Session-memoized kmeans_lite(embeddings) cell assignment
-    (localCheckpoint, eager), keyed by (app, sf_dir, k, iterations).
+    """Session-memoized kmeans_lite(embeddings) cell assignment.
     The deterministic coarse quantizer is re-trained identically by
     five gated queries (sim_kmeans_lite, blocking quality, semantic
     dedup at k=8/it=3; IVF and IVF-PQ at k=8/it=2) and is pure
@@ -4639,59 +4615,34 @@ def _kmeans_cells(
     every query. Values are bit-identical to an inline call (same
     function, checkpoint only cuts lineage), so oracles are
     unaffected."""
-    import os
-
     from realtime_analytics_pipeline_spark.operators.clustering import (
         kmeans_lite,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        _MEMO_EPOCH[0],
-        os.path.realpath(sf_dir),
-        k,
-        iterations,
-    )
-    got = _KMEANS_CELL_MEMO.get(key)
-    if got is None:
-        _MEMO_BUILDS[0] += 1
-        got = kmeans_lite(
+    return SESSION_MEMO.get_or_build(
+        spark,
+        (os.path.realpath(sf_dir), "kmeans", k, iterations),
+        lambda: kmeans_lite(
             load_table(spark, sf_dir, "embeddings"), k=k, iterations=iterations
-        ).localCheckpoint(eager=True)
-        _memo_put(spark, _KMEANS_CELL_MEMO, key, got)
-    return got
-
-
-_MD5_SIG_MEMO: dict[tuple[str, str], DataFrame] = {}
+        ),
+    )
 
 
 def _md5_corpus_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized 16-perm md5 MinHash signature table over the
-    FULL documents table (localCheckpoint, eager) — the single most
-    expensive derived frame in the docs family (16 md5+conv per
-    distinct trigram). Shared by docs_lsh_blocking_quality and the
+    FULL documents table — the single most expensive derived frame in
+    the docs family (16 md5+conv per distinct trigram). Shared by docs_lsh_blocking_quality and the
     3-gram half of docs_lsh_recall_audit (VERDICT r12 item 6; the
     signature is a pure per-doc function, so the audit's bounded
     doc_id < 300 slice is a filter of this frame, not a re-derivation).
     dedup_incremental_minhash deliberately does NOT use it: its row
     measures the bootstrap shape (see the stored twin for the daily
     shape). num_docs x 16 longs, a few MB at any slice SF."""
-    import os
-
-    key = (
-        spark.sparkContext.applicationId,
-        _MEMO_EPOCH[0],
-        os.path.realpath(sf_dir),
-        "md5sigs",
+    return SESSION_MEMO.get_or_build(
+        spark,
+        (os.path.realpath(sf_dir), "md5sigs"),
+        lambda: D.minhash_md5_signatures(load_table(spark, sf_dir, "documents")),
     )
-    got = _MD5_SIG_MEMO.get(key)
-    if got is None:
-        _MEMO_BUILDS[0] += 1
-        got = D.minhash_md5_signatures(
-            load_table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-        _memo_put(spark, _MD5_SIG_MEMO, key, got)
-    return got
 
 
 @register("docs_lsh_blocking_quality", _LSH_BLOCKING_SQL)
@@ -5106,85 +5057,52 @@ FROM labeled
 # dedup_keep_best_survivors) need the IDENTICAL doc_id < 300
 # pairs -> connected-components -> singleton-coalesce label set; each
 # re-deriving it cost ~8 s of every gate/bench run (VERDICT r11
-# "What's wrong" #1). Memoize the ~300-row label table per
-# (application, sf_dir) with an eager localCheckpoint: the expensive
-# jaccard_pairs + iterative CC runs once per session, both queries
-# read the materialized labels, and outputs are bit-identical to the
-# un-shared form (the helper is the same composition, just hoisted).
-_BOUNDED_CC_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _memo_put(
-    spark: SparkSession, memo: dict, key: tuple, df: DataFrame
-) -> None:
-    """Insert into a per-session DataFrame memo, first evicting
-    entries from dead SparkContexts (their localCheckpoint blocks are
-    gone with the context) and from other keys of the live app beyond
-    a small cap — long sessions sweeping many slices must not pin
-    dead DataFrame references (ADVICE r12). Every memo key starts
-    with the applicationId."""
-    app = spark.sparkContext.applicationId
-    stale = [k for k in memo if k[0] != app]
-    live = [k for k in memo if k[0] == app]
-    for k in stale:
-        del memo[k]
-    if len(live) >= 8:  # 4 sf_dirs x 2 kinds is plenty for any sweep
-        del memo[live[0]]
-    memo[key] = df
-
-
+# "What's wrong" #1). The ~300-row label table and its pair scan are
+# session-memoized, so outputs are bit-identical to the un-shared form.
 def _bounded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b) 1-gram Jaccard >= 0.95 pairs on the doc_id < 300
     gate subgraph — the expensive half (shingle explode + prefix
-    candidates + verify) of every bounded-CC diagnostic, memoized and
-    materialized once per (application, sf_dir). Round-12: hoisted out
-    of _bounded_cc_labels so the incremental-components query shares
-    the pair scan too (three consumers, one computation)."""
-    key = (spark.sparkContext.applicationId, _MEMO_EPOCH[0], sf_dir, "pairs")
-    got = _BOUNDED_CC_MEMO.get(key)
-    if got is None:
-        _MEMO_BUILDS[0] += 1
-        docs = load_table(spark, sf_dir, "documents").where("doc_id < 300")
-        got = (
-            D.jaccard_pairs(docs, n=1, threshold=0.95)
-            .select("doc_a", "doc_b")
-            .localCheckpoint(eager=True)
-        )
-        _memo_put(spark, _BOUNDED_CC_MEMO, key, got)
-    return got
+    candidates + verify) of every bounded-CC diagnostic. Round-12:
+    hoisted out of _bounded_cc_labels so the incremental-components
+    query shares the pair scan too (three consumers, one computation)."""
+    return SESSION_MEMO.get_or_build(
+        spark,
+        (os.path.realpath(sf_dir), "pairs"),
+        lambda: D.jaccard_pairs(
+            load_table(spark, sf_dir, "documents").where("doc_id < 300"),
+            n=1,
+            threshold=0.95,
+        ).select("doc_a", "doc_b"),
+    )
 
 
 def _bounded_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, component) for the doc_id < 300 gate subgraph:
     connected components of 1-gram Jaccard >= 0.95 pairs, singletons
     labeled by their own doc_id."""
-    key = (spark.sparkContext.applicationId, _MEMO_EPOCH[0], sf_dir, "labels")
-    got = _BOUNDED_CC_MEMO.get(key)
-    if got is not None:
-        return got
     from realtime_analytics_pipeline_spark.operators.clustering import (
         dedup_cluster_representatives,
     )
 
-    _MEMO_BUILDS[0] += 1
-    docs = load_table(spark, sf_dir, "documents").where("doc_id < 300")
-    pairs = _bounded_pairs(spark, sf_dir)
-    comp = dedup_cluster_representatives(pairs, bounded=True).select(
-        F.col("vertex").alias("doc_id"), "component"
-    )
-    labeled = (
-        docs.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("doc_id"))
-            .cast("bigint")
-            .alias("component"),
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents").where("doc_id < 300")
+        comp = dedup_cluster_representatives(
+            _bounded_pairs(spark, sf_dir), bounded=True
+        ).select(F.col("vertex").alias("doc_id"), "component")
+        return (
+            docs.select("doc_id")
+            .join(comp, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.coalesce(F.col("component"), F.col("doc_id"))
+                .cast("bigint")
+                .alias("component"),
+            )
         )
-        .localCheckpoint(eager=True)
+
+    return SESSION_MEMO.get_or_build(
+        spark, (os.path.realpath(sf_dir), "labels"), build
     )
-    _memo_put(spark, _BOUNDED_CC_MEMO, key, labeled)
-    return labeled
 
 
 @register("split_docs_dedup_aware", _DEDUP_SPLIT_SQL)
@@ -5772,7 +5690,6 @@ def _minhash_bucket_store(spark: SparkSession, sf_dir: str) -> str:
     key still carries documents.parquet's identity so a slice
     regenerated MID-process invalidates the store."""
     import hashlib
-    import os
     import shutil
     import tempfile
 
@@ -5828,8 +5745,6 @@ def q_dedup_incremental_minhash_stored(
     3). Output + oracle identical to the in-plan twin: the store holds
     exactly what it derives (md5 16-perm, 4x4 banding)."""
     root = _minhash_bucket_store(spark, sf_dir)
-    import os
-
     store_buckets = spark.read.parquet(os.path.join(root, "buckets"))
     store_sigs = spark.read.parquet(os.path.join(root, "sigs"))
     batch = load_table(spark, sf_dir, "documents").where(

@@ -2743,6 +2743,8 @@ def _rl_em_sql() -> str:
     order-insensitive in practice and immune to the
     shuffled-partial-merge-order ulp flake a 92k-double sum invites
     (round-10 ADVICE)."""
+    # `cells` is MATERIALIZED: otherwise DuckDB re-plans the candidate
+    # join inside every nested scalar subquery of the E/M steps.
     gamma = """
 cand AS (
     SELECT a.c_custkey AS ka, b.twin_id AS kb,
@@ -2755,7 +2757,7 @@ cand AS (
            CASE WHEN abs(a.c_acctbal - b.bal_b) <= 0.7e0 THEN 1
                 ELSE 0 END AS g_bal
     FROM base a JOIN b ON a.c_nationkey = b.nation_b),
-cells AS (
+cells AS MATERIALIZED (
     SELECT g_name, g_seg, g_bal, count(*) AS cnt
     FROM cand GROUP BY 1, 2, 3)"""
     # EM runs on the NATION-ONLY block deliberately: parameter fitting

@@ -8,8 +8,10 @@ thresholds) are identical — only master/memory differ.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "realtime-analytics-pipeline-spark") -> SparkSession:
@@ -71,3 +73,60 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
     )
     return spark
+
+
+class SessionMemo:
+    """Eagerly localCheckpointed DataFrames that several gated queries
+    share, built once per (applicationId, epoch).
+
+    Outside the bench the epoch stays "": an index or signature table
+    is derived once per application and read by many queries. bench.py
+    and perfbench move the epoch before every timed rep so each rep
+    rebuilds what it consumes. Nothing can reuse an entry once its
+    epoch ends, so a new epoch frees its checkpoint blocks; a new
+    application only drops references (the old context is gone).
+    """
+
+    CAP = 24  # entries per application: every kind for 4 slices
+
+    def __init__(self) -> None:
+        self._app: str | None = None
+        self._epoch = ""
+        self._entries: dict[tuple, DataFrame] = {}
+        self._builds = 0
+
+    def set_epoch(self, epoch: str) -> None:
+        if epoch == self._epoch:
+            return
+        self._epoch = epoch
+        stale, self._entries = self._entries, {}
+        sc = SparkContext._active_spark_context
+        if sc is not None and sc.applicationId == self._app:
+            for df in stale.values():
+                # DataFrame.unpersist() keeps a localCheckpoint's blocks:
+                # they belong to the RDD under its analyzed LogicalRDD
+                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+    def build_count(self) -> int:
+        """Builds so far in this process (the bench's warm-rep cue)."""
+        return self._builds
+
+    def get_or_build(
+        self, spark: SparkSession, key: tuple, build: Callable[[], DataFrame]
+    ) -> DataFrame:
+        app = spark.sparkContext.applicationId
+        if app != self._app:
+            self._app, self._entries = app, {}
+        got = self._entries.get(key)
+        if got is None:
+            self._builds += 1
+            got = build().localCheckpoint(eager=True)
+            if len(self._entries) >= self.CAP:
+                # drop the oldest reference only: a frame still being
+                # composed (not yet run) may read that entry
+                del self._entries[next(iter(self._entries))]
+            self._entries[key] = got
+        return got
+
+
+SESSION_MEMO = SessionMemo()

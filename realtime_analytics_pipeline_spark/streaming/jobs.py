@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,14 +82,14 @@ def configure_state_store(
     return spark
 
 
-# (applicationId, realpath, mtime_ns) -> (inferred schema, wrap dir).
+# (applicationId, realpath, mtime_ns) -> inferred schema.
 # Every gated streaming replay calls read_events_stream_from_dir, and
 # the footer-only schema inference is a full batch-read job — ~0.1-0.3 s
 # of fixed machinery PER REP across 8+ streaming headliners (r13,
 # guide §1.2 "don't compute things you throw away"). The key carries
 # the file's mtime so a rewritten fixture re-infers; the memo dies
 # with the process (no cross-run persistence).
-_STREAM_SRC_MEMO: dict[tuple, tuple] = {}
+_STREAM_SRC_MEMO: dict[tuple, StructType] = {}
 
 
 def read_events_stream_from_dir(
@@ -99,7 +98,8 @@ def read_events_stream_from_dir(
     watermark: str | None = None,
     config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """File-based streaming source over testdata-layout parquet.
+    """File-based streaming source over testdata-layout parquet (a
+    directory, or a single file).
 
     One micro-batch per file by default — write the fixture with
     multiple files to exercise multi-batch watermark progression.
@@ -114,18 +114,8 @@ def read_events_stream_from_dir(
         )
     except OSError:
         key = None
-    memo = _STREAM_SRC_MEMO.get(key) if key is not None else None
-    if memo is not None:
-        file_schema, directory = memo
-    else:
-        if os.path.isfile(directory):
-            # the file source only accepts directories; wrap a single
-            # parquet file in a symlink dir (read-only testdata stays put)
-            wrap = tempfile.mkdtemp(prefix="stream_src_")
-            os.symlink(
-                directory, os.path.join(wrap, os.path.basename(directory))
-            )
-            directory = wrap
+    file_schema = _STREAM_SRC_MEMO.get(key) if key is not None else None
+    if file_schema is None:
         # infer the schema from the files themselves (footer-only batch
         # read): `ts` may be a nanos bigint, an INT64 timestamp, or an
         # INT96 timestamp (Spark-rewritten fixtures) depending on which
@@ -136,12 +126,14 @@ def read_events_stream_from_dir(
         if key is not None:
             if len(_STREAM_SRC_MEMO) >= 32:  # sweeps over many slices
                 _STREAM_SRC_MEMO.pop(next(iter(_STREAM_SRC_MEMO)))
-            _STREAM_SRC_MEMO[key] = (file_schema, directory)
-    raw = (
-        spark.readStream.schema(file_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(directory)
-    )
+            _STREAM_SRC_MEMO[key] = file_schema
+    reader = spark.readStream.schema(file_schema).option("maxFilesPerTrigger", 1)
+    if os.path.isfile(directory):
+        # the file source only reads directories: read the file's own
+        # directory, filtered to its name
+        reader = reader.option("pathGlobFilter", os.path.basename(directory))
+        directory = os.path.dirname(directory)
+    raw = reader.parquet(directory)
     events = normalize_testdata_events(raw)
     return events.withWatermark(
         "event_time", watermark or config.watermark_delay

@@ -536,3 +536,28 @@ def test_gated_replays_remove_their_input_copies(spark, tmp_path, monkeypatch):
     events = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
     assert dedup.count() == events
     assert sessions.count() > 0
+
+
+def test_single_file_stream_source_leaves_no_temp_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A single-file source is read in place: a replay over
+    events.parquet creates no stream_src_* directory, and its frame
+    still holds every oracle row."""
+    import tempfile
+
+    import duckdb
+
+    from realtime_analytics_pipeline_spark.registry import ORACLES, QUERIES
+    from realtime_analytics_pipeline_spark.streaming import jobs
+    from tests.conftest import duck_with_views
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    # an empty schema memo: this replay must infer, as a first one does
+    monkeypatch.setattr(jobs, "_STREAM_SRC_MEMO", {})
+    out = QUERIES["streaming_event_metrics"](spark, SF_SMOKE)
+    assert [p.name for p in tmp_path.glob("stream_src_*")] == []
+    con = duck_with_views(duckdb.connect(), SF_SMOKE)
+    expected = con.execute(ORACLES["streaming_event_metrics"]).fetchall()
+    con.close()
+    assert out.count() == len(expected) > 0
