@@ -14,9 +14,10 @@ Redis; these are the same capabilities as DataFrame operators:
 
 Scale notes: the pivots aggregate to one row per window — cardinality
 (#windows) is tiny relative to input, so these run after the heavy
-windowed aggregation and shuffle almost nothing. ``pivot`` with an
-explicit value list avoids the extra distinct-scan Spark otherwise runs
-to discover pivot values (and keeps the plan static at 100 TB).
+windowed aggregation and shuffle almost nothing. They are one
+conditional aggregation over an explicit key list: no distinct-scan to
+discover pivot values (the plan stays static at 100 TB), and one
+shuffle where ``.pivot()`` plans two.
 Top-N uses a global sort LIMIT — Spark's TakeOrderedAndProject, which
 does per-partition top-N then merges on the driver: no full sort.
 """
@@ -31,6 +32,26 @@ from pyspark.sql import functions as F
 from realtime_analytics_pipeline_spark.config import DEFAULT_CONFIG, EngineConfig
 
 
+def _pivot_by_window(
+    df: DataFrame, key_col: str, keys: Sequence[str], values: dict[str, str]
+) -> DataFrame:
+    """One row per (window_start, window_end); for each key ``k`` and
+    each ``suffix: col`` in ``values`` a column ``{k}_{suffix}`` holding
+    ``col`` of the key's row (NULL when the window has no such row).
+
+    A single conditional aggregation: ``max(when(key == k, col))`` is
+    the key's value because the input has at most one row per
+    (window, key). ``.pivot()`` would plan a (window, key) aggregation
+    and a second one for the pivot, i.e. two shuffles; this is one."""
+    return df.groupBy("window_start", "window_end").agg(
+        *[
+            F.max(F.when(F.col(key_col) == k, F.col(col))).alias(f"{k}_{suffix}")
+            for k in keys
+            for suffix, col in values.items()
+        ]
+    )
+
+
 def pivot_event_metrics(
     event_metrics_df: DataFrame, event_types: Sequence[str]
 ) -> DataFrame:
@@ -38,19 +59,12 @@ def pivot_event_metrics(
     ``{type}_count``, ``{type}_users`` (message_parser.py:16-27;
     Redis hash keys ``{type}.count`` — '.' swapped for '_' to stay
     SQL-addressable)."""
-    pivoted = (
-        event_metrics_df.groupBy("window_start", "window_end")
-        .pivot("event_type", list(event_types))
-        .agg(
-            F.first("event_count").alias("count"),
-            F.first("user_count").alias("users"),
-        )
+    return _pivot_by_window(
+        event_metrics_df,
+        "event_type",
+        event_types,
+        {"count": "event_count", "users": "user_count"},
     )
-    cols = [F.col("window_start"), F.col("window_end")]
-    for t in event_types:
-        cols.append(F.col(f"{t}_count"))
-        cols.append(F.col(f"{t}_users"))
-    return pivoted.select(*cols)
 
 
 def pivot_performance_metrics(
@@ -59,19 +73,12 @@ def pivot_performance_metrics(
     """T2: (window, category, avg, p95) rows → per-window columns
     ``{cat}_avg_load_time``, ``{cat}_p95_load_time``
     (message_parser.py:28-43)."""
-    pivoted = (
-        performance_metrics_df.groupBy("window_start", "window_end")
-        .pivot("device_category", list(categories))
-        .agg(
-            F.first("avg_load_time").alias("avg_load_time"),
-            F.first("p95_load_time").alias("p95_load_time"),
-        )
+    return _pivot_by_window(
+        performance_metrics_df,
+        "device_category",
+        categories,
+        {"avg_load_time": "avg_load_time", "p95_load_time": "p95_load_time"},
     )
-    cols = [F.col("window_start"), F.col("window_end")]
-    for c in categories:
-        cols.append(F.col(f"{c}_avg_load_time"))
-        cols.append(F.col(f"{c}_p95_load_time"))
-    return pivoted.select(*cols)
 
 
 def top_n_windows(df: DataFrame, n: int, time_col: str = "window_start") -> DataFrame:

@@ -9,9 +9,9 @@ key. Shuffle #1 spreads each hot key over ``salts`` reducers; shuffle
 
 Works for any algebraic aggregate (count/sum/min/max and their
 compositions: avg = sum/count). Exact distinct is NOT algebraic — for
-that, the chained (key, member) two-phase form in
-``event_metrics_exact_streaming`` is the salted equivalent, since the
-member column itself spreads the key.
+that, group on (key, member) first, so the member column itself
+spreads the key (the batch COUNT DISTINCT plan does this), or keep a
+mergeable set per key as ``event_metrics_exact_streaming`` does.
 """
 
 from __future__ import annotations

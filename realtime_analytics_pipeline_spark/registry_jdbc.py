@@ -113,7 +113,7 @@ WHERE window_start_ms + 60000 <=
 @register("streaming_jdbc_upsert", _STREAM_JDBC_SQL)
 def q_streaming_jdbc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full write path under the oracle: a REAL
-    Structured Streaming job (file micro-batches → watermark → chained
+    Structured Streaming job (file micro-batches → watermark → one
     stateful aggregation, append mode) delivering finalized windows
     through the idempotent JDBC upsert sink
     (sources/jdbc.py::foreach_batch_jdbc_upsert — the delete-then-
@@ -121,7 +121,7 @@ def q_streaming_jdbc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ReplacingMergeTree, ddl.py:11-35) into embedded Derby, read back
     over JDBC. Oracle = the batch SQL restricted to the finalized set
     (window_end ≤ max event time − 10 s watermark − 60 s window, the
-    empirically pinned chained-stateful emission law). Fresh database
+    bound ``_finalized_core`` pins the stream's output to). Fresh database
     + checkpoint per call keeps it deterministic and replayable."""
     import os as _os
 
@@ -157,10 +157,9 @@ def q_streaming_jdbc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     back = read_jdbc(spark, url, "event_metrics_live")
-    # restrict to the replay-shape-independent finalization core: a
-    # chained stateful agg emits one window MORE on a multi-file
-    # replay than on the driver's single-file one (round-12, caught by
-    # the sf0.3 scale gate — same fix as streaming_event_metrics)
+    # restrict to the replay-shape-independent core the oracle gates
+    # (same bound as streaming_event_metrics): what an append-mode
+    # replay has emitted depends on its micro-batch shape
     from realtime_analytics_pipeline_spark.registry_streaming import (
         _finalized_core,
     )

@@ -1,19 +1,14 @@
 """Gated query: streaming parity.
 
 Runs the EventAggregator graph as a real Structured Streaming query —
-file micro-batch source → watermark → chained stateful aggregation
-(exact distinct users) → append-mode memory sink, availableNow — and
-returns the materialized table.
+file micro-batch source → watermark → one stateful aggregation (exact
+distinct users) → append-mode memory sink, availableNow — and returns
+the materialized table.
 
-Oracle: the batch event-metrics SQL restricted to the finalized set a
-CHAINED windowed aggregation emits: window_end ≤ max event time −
-watermark delay (10 s) − window size (60 s). The extra window-length
-lag is Spark's multi-stateful watermark propagation — the downstream
-aggregate's effective watermark is delayed by the upstream window
-duration, so the window generation that phase 1 emits in the terminal
-no-data batch stays open in phase 2 until more data arrives (verified
-empirically at sf0.001/0.01/0.1; a single-aggregate stream has no such
-lag).
+Oracle: the batch event-metrics SQL restricted to windows with
+window_end ≤ max event time − 70 s (the watermark delay plus one
+window). ``_finalized_core`` applies the same bound to the stream's
+output, so the gated set is pinned whatever the replay shape.
 """
 
 from __future__ import annotations
@@ -154,8 +149,7 @@ def q_streaming_session_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     SINGLE stateful session aggregation emits in append mode: a
     session is evicted when the watermark passes its window end
     (last event + 30 min gap), and the final watermark is
-    max event time − 10 s delay. Unlike the CHAINED aggregation in
-    streaming_event_metrics there is no extra window-generation lag —
+    max event time − 10 s delay; no extra window-generation lag —
     verified empirically at sf0.001 (945/946 sessions, the held-back
     one being the stream tail) and sf0.01 (9542/9549, zero diff rows
     vs this filter; the next-lag candidate mismatches by 6).
@@ -182,20 +176,14 @@ def _finalized_core(
     end_col: str = "window_end_ms",
     lag_ms: int = 70000,
 ) -> DataFrame:
-    """Restrict an append-mode emitted set to its replay-shape-
-    INDEPENDENT finalization core: windows with end <= max event time
-    - lag_ms. A chained stateful aggregation's emitted set depends on
-    how many micro-batches the replay used — a single-file replay
-    (the driver's testdata) finalizes windows only up to
-    max - 10 s - 60 s (the watermark delay plus one window of
-    propagation lag through the second stateful operator), while an
-    8-file replay (the .scale slices) advances the watermark
-    incrementally and finalizes one window more (round-12, found by
-    the sf1 oracle spot-check). Emission is MONOTONE in batch count,
-    so the single-file set is the minimal core and every replay shape
-    emits a superset — filtering to the core makes the gated output
-    identical everywhere without changing what the driver sees. The
-    1-row max() read is the documented bounded-collect convention."""
+    """Restrict an append-mode emitted set to a replay-shape-
+    INDEPENDENT core: windows with end <= max event time - lag_ms.
+    Which windows a replay has emitted when it ends depends on how its
+    micro-batches advanced the watermark; the default 70 s (the 10 s
+    watermark delay plus one 60 s window) lies inside what every
+    replay shape emits, and the oracles use the same ``- 70000``
+    bound, so it pins the gated set. The 1-row max() read is the
+    documented bounded-collect convention."""
     from realtime_analytics_pipeline_spark.sources.batch import load_events
 
     mx = (
@@ -400,7 +388,7 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so this uses the standard two-tier shape the reference's serving
     layer also embodies (api/main.py reads ClickHouse tables the job
     wrote): the STREAMING tier materializes finalized per-window
-    counts (same chained exact-distinct aggregation as
+    counts (same exact-distinct aggregation as
     streaming_event_metrics), and the SERVING tier ranks the
     materialized windows — at 100 TB the rank runs over the compact
     metrics table (windows × types), never the raw stream. Oracle:
@@ -576,7 +564,7 @@ def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful count aggregation, so the append-mode finalized set is
     exactly the windows whose end the terminal watermark passed
     (max event time − 10 s), same single-operator eviction rule as
-    streaming_session_metrics — no chained-agg window-generation lag."""
+    streaming_session_metrics."""
     from realtime_analytics_pipeline_spark.operators.relational import (
         sliding_event_counts,
     )
@@ -744,8 +732,7 @@ def q_streaming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # HLL state). Finalized set measured empirically at sf0.001/sf0.01:
 # window_end ≤ max − delay (the SINGLE-agg law, no extra window-length
 # lag) — phase 2 groups on the SAME window struct phase 1 emits, and
-# both phases finalize in the same terminal no-data batch, unlike the
-# 1m chained-distinct case where the second grouping re-keys.
+# both phases finalize in the same terminal no-data batch.
 _STREAM_BITMAP_SQL = """
 WITH daily AS (
     SELECT (epoch_ms(ts) // 86400000) * 86400000 AS day_ms,

@@ -24,6 +24,7 @@ def progress_summary(progress: dict[str, Any]) -> dict[str, Any]:
         op.get("memoryUsedBytes", 0)
         for op in progress.get("stateOperators", [])
     )
+    dur = progress.get("durationMs", {})
     return {
         "batch_id": progress.get("batchId"),
         "num_input_rows": progress.get("numInputRows", 0),
@@ -35,6 +36,13 @@ def progress_summary(progress: dict[str, Any]) -> dict[str, Any]:
         "state_rows": state_rows,
         "state_bytes": state_bytes,
         "watermark": progress.get("eventTime", {}).get("watermark"),
+        # where the trigger's time went (Spark's durationMs split)
+        "trigger_ms": dur.get("triggerExecution", 0),
+        "add_batch_ms": dur.get("addBatch", 0),
+        "query_planning_ms": dur.get("queryPlanning", 0),
+        "wal_commit_ms": dur.get("walCommit", 0),
+        "commit_offsets_ms": dur.get("commitOffsets", 0),
+        "latest_offset_ms": dur.get("latestOffset", 0),
     }
 
 

@@ -80,22 +80,20 @@ def foreach_batch_partitioned_parquet(
     """S6-equivalent storage sink: each micro-batch is written
     partitioned by window and sorted within partitions — the
     Parquet analog of ClickHouse MergeTree ORDER BY (window_start,
-    key). dynamic partitionOverwriteMode makes replays idempotent
-    (exactly-once effect per window partition, X5)."""
+    key). A dynamic partition overwrite makes replays idempotent
+    (exactly-once effect per window partition, X5); it is a writer
+    option, so the session's ``partitionOverwriteMode`` is untouched."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.columns:
             return
-        spark = batch_df.sparkSession
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         (
             batch_df.withColumn(
                 "_part", F.date_format(partition_col, "yyyyMMddHH")
             )
             .sortWithinPartitions(*sort_cols)
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_part")
             .parquet(out_dir)
         )

@@ -556,3 +556,62 @@ def test_bpe_encode_vocab_sized_fold_no_python(spark):
     plan = plan_of(QUERIES["text_bpe_encode_tokens"](spark, SF_SMOKE))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "aggregate" in plan.lower()
+
+
+def test_serving_pivots_single_shuffle_equal_pivot(spark, tmp_path):
+    """Both cache pivots plan exactly one Exchange over a stored
+    metrics table (``.pivot()`` plans two), and return the rows and
+    schema of the ``.pivot()`` form — including windows that lack a
+    key, whose columns are NULL."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from realtime_analytics_pipeline_spark.operators import serving
+    from realtime_analytics_pipeline_spark.operators.performance_metrics import (
+        performance_metrics,
+    )
+
+    ev = load_events(spark, SF_SMOKE)
+    event_types = ["view", "click", "purchase", "signup"]
+    cats = ["view", "click", "purchase", "signup", "error"]
+    cases = [
+        (
+            event_metrics(ev),
+            lambda df: serving.pivot_event_metrics(df, event_types),
+            "event_type",
+            event_types,
+            {"count": "event_count", "users": "user_count"},
+        ),
+        (
+            performance_metrics(ev),
+            lambda df: serving.pivot_performance_metrics(df, cats),
+            "device_category",
+            cats,
+            {"avg_load_time": "avg_load_time", "p95_load_time": "p95_load_time"},
+        ),
+    ]
+    for i, (metrics, pivot, key_col, keys, values) in enumerate(cases):
+        path = str(tmp_path / f"metrics_{i}")
+        metrics.write.parquet(path)
+        stored = spark.read.parquet(path)
+        got = pivot(stored)
+        plan = plan_of(got)
+        assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) == 1, plan
+
+        want = (
+            stored.groupBy("window_start", "window_end")
+            .pivot(key_col, keys)
+            .agg(*[F.first(c).alias(s) for s, c in values.items()])
+            .select(
+                "window_start",
+                "window_end",
+                *[f"{k}_{s}" for k in keys for s in values],
+            )
+        )
+        assert got.schema == want.schema
+        rows = got.collect()
+        assert sorted(map(tuple, rows), key=repr) == sorted(
+            map(tuple, want.collect()), key=repr
+        )
+        assert any(None in tuple(r) for r in rows), "no window lacks a key"

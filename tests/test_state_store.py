@@ -53,7 +53,7 @@ def _run_append(spark, df, name):
 
 def test_rocksdb_provider_selected_and_equivalent(rocksdb_session):
     """Provider selection is observable (rocksdb* custom metrics in
-    query progress) and the chained stateful aggregation produces
+    query progress) and the stateful exact-distinct aggregation produces
     byte-identical results to the default provider."""
     spark = rocksdb_session
     src = SF_SMOKE + "/events.parquet"
@@ -63,7 +63,7 @@ def test_rocksdb_provider_selected_and_equivalent(rocksdb_session):
         spark, event_metrics_exact_streaming(stream), "t_rocks_em"
     )
     ops = prog["stateOperators"]
-    assert ops, "chained aggregation must report state operators"
+    assert ops, "the stateful aggregation must report its state operator"
     custom = {k for op in ops for k in op.get("customMetrics", {})}
     assert any(k.startswith("rocksdb") for k in custom), custom
     # state-size metrics are populated (rows touched + bytes held; the

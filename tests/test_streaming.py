@@ -11,6 +11,7 @@ from realtime_analytics_pipeline_spark.operators.event_metrics import (
     event_metrics,
     event_metrics_exact_streaming,
 )
+from realtime_analytics_pipeline_spark.schema import normalize_testdata_events
 from realtime_analytics_pipeline_spark.sources.batch import load_events, load_table
 from realtime_analytics_pipeline_spark.streaming import sinks
 from realtime_analytics_pipeline_spark.streaming.jobs import (
@@ -29,8 +30,8 @@ def _rows_set(df):
 def test_streaming_complete_mode_equals_batch(spark, tmp_path):
     """availableNow + complete mode over multi-file input must equal
     the batch result exactly (no watermark eviction in complete).
-    Distinct-free aggregation (exact distinct needs the chained
-    two-phase form, covered in the append test)."""
+    Distinct-free aggregation (exact distinct in streaming is covered
+    by the append tests)."""
     src = str(tmp_path / "stream_src")
     raw = load_table(spark, SF_SMOKE, "events")
     write_time_ordered_stream_fixture(raw, src, 4)
@@ -49,7 +50,7 @@ def test_streaming_complete_mode_equals_batch(spark, tmp_path):
 
 
 def test_streaming_append_exact_distinct_subset(spark, tmp_path):
-    """Chained stateful aggregation (exact distinct users) in append
+    """Stateful exact-distinct aggregation (distinct users) in append
     mode: emits only watermark-finalized windows — a non-empty subset
     of the batch result, with values identical where emitted."""
     src = str(tmp_path / "stream_src_append")
@@ -64,10 +65,70 @@ def test_streaming_append_exact_distinct_subset(spark, tmp_path):
     assert len(got) < len(want)  # the last watermark-open windows are held back
 
 
+def test_streaming_exact_distinct_skips_null_users(spark, tmp_path):
+    """Users {1, 2, null} in one window, then user 1 again in the next
+    micro-batch: the stream counts 2 users, as batch ``event_metrics``
+    (COUNT DISTINCT skips NULL) does, from ONE stateful operator."""
+    import datetime as dt
+    import os
+    import time as _time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "null_users"
+    src.mkdir()
+    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+    batches = [
+        [(1, 5, 1), (2, 6, 2), (3, 7, None)],
+        [(4, 30, 1), (5, 120, 3)],  # 10:02 closes the 10:00 window
+    ]
+    now = _time.time()
+    for i, rows in enumerate(batches):
+        path = str(src / f"part-{i}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "ts": pa.array(
+                        [t0 + dt.timedelta(seconds=r[1]) for r in rows],
+                        pa.timestamp("us"),
+                    ),
+                    "user_id": pa.array([r[2] for r in rows], pa.int64()),
+                    "event_type": ["view"] * len(rows),
+                    "value": [1.0] * len(rows),
+                    "props": ["{}"] * len(rows),
+                }
+            ),
+            path,
+        )
+        os.utime(path, (now + 2 * i, now + 2 * i))
+
+    stream = read_events_stream_from_dir(spark, str(src))
+    q = (
+        event_metrics_exact_streaming(stream)
+        .writeStream.format("memory")
+        .queryName("t_null_users")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        got = _rows_set(spark.table("t_null_users"))
+    finally:
+        spark.catalog.dropTempView("t_null_users")
+    batch = event_metrics(normalize_testdata_events(spark.read.parquet(str(src))))
+    want = _rows_set(batch.where(F.col("window_end") <= t0 + dt.timedelta(minutes=1)))
+    assert got == want
+    assert [r[-1] for r in got] == [2]  # user_count
+    assert len(q.lastProgress["stateOperators"]) == 1
+
+
 def test_streaming_session_windows_append_finalized_set(spark, tmp_path):
     """Streaming session windows in append mode emit exactly the batch
     sessions whose window end (last event + gap) the final watermark
-    (max event time − delay) has passed — no chained-aggregation lag
+    (max event time − delay) has passed — no extra window lag
     (single stateful operator). Pin of the streaming_session_metrics
     oracle semantics."""
     from realtime_analytics_pipeline_spark.operators.session_metrics import (
@@ -213,6 +274,20 @@ def test_foreach_batch_partitioned_parquet_idempotent(spark, tmp_path):
     assert n1 == n2 == em.count()
 
 
+def test_foreach_batch_partitioned_parquet_keeps_session_conf(spark, tmp_path):
+    """The sink's dynamic overwrite is a writer option: the session's
+    partitionOverwriteMode must read as it did before the batch."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        em = event_metrics(load_events(spark, SF_SMOKE))
+        sinks.foreach_batch_partitioned_parquet(str(tmp_path / "storage"))(em, 0)
+        assert spark.conf.get(key).lower() == "static"
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_foreach_batch_retention_view(spark, tmp_path):
     out_dir = str(tmp_path / "cache_sink")
     em = event_metrics(load_events(spark, SF_SMOKE))
@@ -266,6 +341,19 @@ def test_progress_metrics_trace(spark, tmp_path):
     assert any(t["state_rows"] > 0 for t in trace)  # stateful agg visible
     assert any(t["state_bytes"] > 0 for t in trace)
     assert trace[-1]["watermark"] is not None  # advanced by the replay
+    # the trigger's durationMs split, in ms, 0 where a phase was absent
+    for t in trace:
+        for k in (
+            "add_batch_ms",
+            "query_planning_ms",
+            "wal_commit_ms",
+            "commit_offsets_ms",
+            "latest_offset_ms",
+        ):
+            assert 0 <= t[k] <= t["trigger_ms"], (k, t)
+    assert all(t["trigger_ms"] > 0 for t in trace)
+    assert any(t["add_batch_ms"] > 0 for t in trace)
+    assert any(t["query_planning_ms"] > 0 for t in trace)
 
 
 def test_streaming_bitmap_distinct_multibatch(spark, tmp_path):
