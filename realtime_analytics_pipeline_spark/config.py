@@ -26,15 +26,12 @@ class EngineConfig:
     performance_window: str = "300 seconds"
     session_gap: str = "30 minutes"
     watermark_delay: str = "10 seconds"
-    checkpoint_interval: str = "30 seconds"
-    shuffle_partitions: int = 32
 
     # filtering (reference config.py:31-36)
     allowed_event_types: tuple[str, ...] = ("view", "click", "purchase", "signup")
 
     # serving/cache (reference services/cache/src/core/config.py:23-36)
     window_retention_count: int = 120
-    recent_windows_limit: int = 20
 
     # streaming state backend (SURVEY §4): None = Spark's default
     # HDFS-backed in-memory provider (state must fit in executor
@@ -42,14 +39,6 @@ class EngineConfig:
     # the 100 TB configuration for large session/distinct state, same
     # role as Flink's RocksDB state backend in the reference deployment
     state_store_provider: str | None = None
-
-    # extension defaults (driver-mandated LLM-data ops)
-    shingle_size: int = 3
-    minhash_permutations: int = 64
-    lsh_bands: int = 16
-    jaccard_threshold: float = 0.5
-    cosine_dup_threshold: float = 0.95
-    topk_neighbors: int = 5
 
 
 ROCKSDB_STATE_STORE_PROVIDER = (

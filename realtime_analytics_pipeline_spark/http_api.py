@@ -1,29 +1,31 @@
-"""HTTP layer over the serving facade — reference wire-format parity.
+"""HTTP layer over the RESP cache — reference wire-format parity.
 
 The reference exposes its cache over FastAPI (services/cache/src/api/
 endpoints/metrics.py:8-31 behind an APIRouter prefix="/metrics", and
-health.py:6-19), with payload shapes fixed by the Redis repository
-(repository.py:80-140): a window is a flat JSON object
+health.py:6-19). Each route reads through CacheService and
+CacheRepository: ZREVRANGE over the recency index, then HGETALL of
+each window hash (repository.py:80-140). Here each route is one call
+on ``resp.RespCacheRepository``, the same store the live pipeline
+writes through ``streaming.sinks.foreach_batch_resp_sink``.
+
+Payload shapes are the repository's: a window is a flat JSON object
 ``{"window_start": <epoch_ms int>, "<key>.count": int, ...}`` whose
 dotted field names come from the Kafka message parser
 (message_parser.py:23-42) and whose metric fields are ABSENT (not
 null) for types that produced no message in that window; list
 endpoints wrap newest-first windows as ``{"windows": [...]}``; the
 overview combines the latest event and performance snapshots
-(cache_service.py:31-39); /readyz answers plain-text 503 until ready.
+(cache_service.py:31-39); /readyz answers plain-text 503 until the
+cache answers PING. A ``limit`` below 1 goes to ZREVRANGE(0, limit-1)
+unchanged, as in the reference (no ``ge=`` bound), so Redis's
+negative end index gives the wrap: 0 reads every retained window, -k
+all but the k oldest.
 
 FastAPI is not in this container, so the server is the stdlib
 ``ThreadingHTTPServer`` — the routes, query parsing, status codes and
 JSON bodies are the wire contract, and they are golden-tested in
-tests/test_http_api.py. Serving-store reads with ``limit >= 1`` are
-``limit``-bounded (`TakeOrderedAndProject`-sized), so those requests
-never scan history regardless of table size. The ``limit < 1`` path
-mirrors Redis ``zrevrange(0, -1)`` full-range semantics but fetches at
-most ``_FULL_RANGE_CAP`` (1e6) windows — the serving store's retention
-trim (T5, 120 windows) keeps real tables ~4 orders of magnitude below
-that cap, so the cap is a safety bound, not a live truncation; a
-hypothetical store retaining more than 1e6 windows would be silently
-truncated here where Redis would return everything.
+tests/test_http_api.py. Handler threads share the repository's one
+``RespClient``, whose lock makes each command a whole round trip.
 """
 
 from __future__ import annotations
@@ -34,182 +36,85 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import Row
+from realtime_analytics_pipeline_spark import prom
+from realtime_analytics_pipeline_spark.resp import RespCacheRepository
 
-from realtime_analytics_pipeline_spark.serving_api import ServingApi
-
-# ---------------------------------------------------------------------------
-# wire-format serializers (repository.py:80-140 / message_parser.py:23-42)
-# ---------------------------------------------------------------------------
-
-
-def _ms(ts: Any) -> int:
-    return int(ts.timestamp() * 1000)
-
-
-def _window_payload(row: Row, suffix_types: dict[str, type]) -> dict[str, Any]:
-    """Pivot row -> the Redis-hash wire object: ``window_start`` epoch-ms
-    int plus dotted ``<name>.<metric>`` fields; null pivot cells are
-    DROPPED, matching a hash that never received that type's message."""
-    d = row.asDict()
-    out: dict[str, Any] = {"window_start": _ms(d.pop("window_start"))}
-    d.pop("window_end", None)
-    for col, val in d.items():
-        if val is None:
-            continue
-        for suffix, typ in suffix_types.items():
-            if col.endswith(f"_{suffix}"):
-                name = col[: -len(suffix) - 1]
-                out[f"{name}.{suffix}"] = typ(val)
-                break
-    return out
-
-
-_EVENT_FIELDS = {"count": int, "users": int}
-_PERF_FIELDS = {"avg_load_time": float, "p95_load_time": float}
-
-# Safety bound for the limit<1 "full range" path (see module docstring):
-# Redis zrevrange(0,-1) returns everything; we fetch at most this many
-# windows. Retention trim (T5) keeps real stores at 120 windows/type.
-_FULL_RANGE_CAP = 10**6
-
-
-def event_wire(rows: list[Row]) -> list[dict[str, Any]]:
-    return [_window_payload(r, _EVENT_FIELDS) for r in rows]
-
-
-def perf_wire(rows: list[Row]) -> list[dict[str, Any]]:
-    return [_window_payload(r, _PERF_FIELDS) for r in rows]
-
-
-# ---------------------------------------------------------------------------
-# routes
-# ---------------------------------------------------------------------------
-
-
-class _Routes:
-    """Endpoint logic shared by the HTTP handler and direct tests.
-
-    Each method returns ``(status_code, payload)`` where a dict payload
-    is sent as JSON and a str as text/plain — mirroring FastAPI's
-    dict-return vs ``Response(status_code=503, content=...)`` split in
-    health.py:6-19.
-    """
-
-    def __init__(self, api: ServingApi) -> None:
-        self._api = api
-
-    def healthz(self) -> tuple[int, Any]:
-        try:
-            return 200, self._api.healthz()
-        except Exception as e:  # liveness failure -> 503, health.py:10-12
-            return 503, str(e)
-
-    def readyz(self) -> tuple[int, Any]:
-        if self._api.readyz()["status"] == "ok":
-            return 200, {"status": "ready"}
-        return 503, "not ready"  # health.py:15-19
-
-    def event_latest(self) -> tuple[int, Any]:
-        rows = event_wire(self._api.event_latest().collect())
-        return 200, (rows[0] if rows else {})  # cache_service.py:22-23
-
-    @staticmethod
-    def _zrevrange_slice(rows: list, limit: int) -> list:
-        """Redis ``zrevrange(key, 0, limit - 1)`` index semantics for
-        limit < 1 (the reference's ``limit: int = 20`` has no ``ge``
-        bound, so negatives reach the repository): end index ≤ -1
-        wraps from the tail — 0 → the whole retained set, -k → all but
-        the k oldest."""
-        if limit >= 1:
-            return rows[:limit]
-        return rows[: max(0, len(rows) + limit)]
-
-    def event_windows(self, limit: int = 20) -> tuple[int, Any]:
-        fetch = limit if limit >= 1 else _FULL_RANGE_CAP  # capped full range
-        rows = event_wire(self._api.event_windows(fetch).collect())
-        return 200, {"windows": self._zrevrange_slice(rows, limit)}
-
-    def performance_windows(self, limit: int = 20) -> tuple[int, Any]:
-        fetch = limit if limit >= 1 else _FULL_RANGE_CAP
-        rows = perf_wire(self._api.performance_windows(fetch).collect())
-        return 200, {"windows": self._zrevrange_slice(rows, limit)}
-
-    def overview(self) -> tuple[int, Any]:
-        ev = event_wire(self._api.event_latest().collect())
-        pf = perf_wire(self._api.performance_windows(1).collect())
-        return 200, {  # cache_service.py:31-39
-            "event_latest": ev[0] if ev else {},
-            "performance_latest": pf[0] if pf else {},
+_LIMIT_ROUTES = ("/metrics/event/windows", "/metrics/performance/windows")
+_BAD_LIMIT = {
+    "detail": [
+        {
+            "loc": ["query", "limit"],
+            "msg": "value is not a valid integer",
+            "type": "int_parsing",
         }
+    ]
+}
 
 
-# ---------------------------------------------------------------------------
-# server
-# ---------------------------------------------------------------------------
+def _readyz(repo: RespCacheRepository) -> tuple[int, Any]:
+    try:
+        repo.r.execute("PING")
+    except (OSError, RuntimeError):
+        return 503, "not ready"  # health.py:15-19
+    return 200, {"status": "ready"}
 
 
-def _make_handler(routes: _Routes, prom_registry=None):
+def _overview(repo: RespCacheRepository) -> dict[str, Any]:
+    perf = repo.get_last_performance_windows(1)
+    return {  # cache_service.py:31-39
+        "event_latest": repo.get_latest_event_window() or {},
+        "performance_latest": perf[0] if perf else {},
+    }
+
+
+def _make_handler(repo: RespCacheRepository, prom_registry):
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *args: Any) -> None:  # quiet test output
             pass
 
+        def _reply(
+            self, status: int, text: str, ctype: str = "application/json"
+        ) -> None:
+            body = text.encode()
+            self.send_response(status)
+            self.send_header("Content-Type", ctype)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
         def do_GET(self) -> None:  # noqa: N802 (http.server API)
             url = urlparse(self.path)
-            if url.path == "/metrics" and prom_registry is not None:
+            if url.path == "/metrics":
                 # cache main.py:87-89 — Prometheus exposition lives at
                 # the bare /metrics, beside the /metrics/... JSON routes
-                from realtime_analytics_pipeline_spark.prom import (
-                    PROM_CONTENT_TYPE,
-                )
-
-                body = prom_registry.render().encode()
-                self.send_response(200)
-                self.send_header("Content-Type", PROM_CONTENT_TYPE)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self._reply(200, prom_registry.render(), prom.PROM_CONTENT_TYPE)
                 return
-            q = parse_qs(url.query)
             # FastAPI 422s a non-int limit (`limit: int = 20`,
             # metrics.py:15) — mirror that instead of letting int()
             # blow up the handler (dropped connection, no status).
-            # Negative/zero ints are NOT rejected by the reference
-            # (no ge= bound); they flow to the zrevrange-wrap slice.
             try:
-                limit = int(q.get("limit", ["20"])[0])
+                limit = int(parse_qs(url.query).get("limit", ["20"])[0])
             except ValueError:
-                if url.path in (
-                    "/metrics/event/windows",
-                    "/metrics/performance/windows",
-                ):
-                    body = json.dumps(
-                        {
-                            "detail": [
-                                {
-                                    "loc": ["query", "limit"],
-                                    "msg": "value is not a valid integer",
-                                    "type": "int_parsing",
-                                }
-                            ]
-                        }
-                    ).encode()
-                    self.send_response(422)
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
+                if url.path in _LIMIT_ROUTES:
+                    self._reply(422, json.dumps(_BAD_LIMIT))
                     return
                 limit = 20  # routes that never read it
             table = {
-                "/healthz": routes.healthz,
-                "/readyz": routes.readyz,
-                "/metrics/event/latest": routes.event_latest,
-                "/metrics/event/windows": lambda: routes.event_windows(limit),
-                "/metrics/performance/windows": lambda: (
-                    routes.performance_windows(limit)
+                "/healthz": lambda: (200, {"status": "ok"}),
+                "/readyz": lambda: _readyz(repo),
+                "/metrics/event/latest": lambda: (
+                    200,
+                    repo.get_latest_event_window() or {},  # cache_service.py:22-23
                 ),
-                "/metrics/overview": routes.overview,
+                "/metrics/event/windows": lambda: (
+                    200,
+                    {"windows": repo.get_last_event_windows(limit)},
+                ),
+                "/metrics/performance/windows": lambda: (
+                    200,
+                    {"windows": repo.get_last_performance_windows(limit)},
+                ),
+                "/metrics/overview": lambda: (200, _overview(repo)),
             }
             fn = table.get(url.path)
             if fn is None:
@@ -217,27 +122,18 @@ def _make_handler(routes: _Routes, prom_registry=None):
                 self.end_headers()
                 return
             status, payload = fn()
-            body = (
-                json.dumps(payload).encode()
-                if isinstance(payload, (dict, list))
-                else str(payload).encode()
-            )
-            self.send_response(status)
-            self.send_header(
-                "Content-Type",
-                "application/json"
-                if isinstance(payload, (dict, list))
-                else "text/plain",
-            )
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            # FastAPI's dict-return vs Response(content=...) split,
+            # health.py:6-19
+            if isinstance(payload, str):
+                self._reply(status, payload, "text/plain")
+            else:
+                self._reply(status, json.dumps(payload))
 
     return Handler
 
 
 class MetricsHttpServer:
-    """The cache service's HTTP surface over a ServingApi instance.
+    """The cache service's HTTP surface over a RESP cache repository.
 
     ``port=0`` binds an ephemeral port (tests); ``.port`` reports the
     bound one. The server thread is a daemon — ``close()`` for an
@@ -246,25 +142,20 @@ class MetricsHttpServer:
 
     def __init__(
         self,
-        api: ServingApi,
+        repo: RespCacheRepository,
         host: str = "127.0.0.1",
         port: int = 0,
         cache_metrics: dict | None = None,
     ):
         """``cache_metrics``: a ``prom.cache_metrics()`` dict (share it
-        with the retention-view sink feeding this store); when given,
-        ``GET /metrics`` serves the cache worker's Prometheus families
-        exactly as reference cache main.py:87-89 does."""
-        if cache_metrics is None:
-            from realtime_analytics_pipeline_spark.prom import (
-                cache_metrics as _mk,
-            )
-
-            cache_metrics = _mk()
-        self.metrics = cache_metrics
+        with the ``foreach_batch_resp_sink`` feeding this cache); when
+        given, ``GET /metrics`` serves the cache worker's Prometheus
+        families exactly as reference cache main.py:87-89 does."""
+        self.metrics = (
+            prom.cache_metrics() if cache_metrics is None else cache_metrics
+        )
         self._httpd = ThreadingHTTPServer(
-            (host, port),
-            _make_handler(_Routes(api), cache_metrics["registry"]),
+            (host, port), _make_handler(repo, self.metrics["registry"])
         )
         self._thread = threading.Thread(
             target=self._httpd.serve_forever, daemon=True
@@ -278,3 +169,4 @@ class MetricsHttpServer:
     def close(self) -> None:
         self._httpd.shutdown()
         self._httpd.server_close()
+

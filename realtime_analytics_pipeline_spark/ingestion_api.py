@@ -54,7 +54,13 @@ from typing import Any
 
 import pyarrow as pa
 
-from realtime_analytics_pipeline_spark.prom import PROM_CONTENT_TYPE
+from realtime_analytics_pipeline_spark.prom import (
+    PROM_CONTENT_TYPE,
+    Counter,
+    Histogram,
+    PromRegistry,
+    ingestion_metrics,
+)
 
 from realtime_analytics_pipeline_spark.sources.feed import produce_keyed
 
@@ -236,34 +242,13 @@ class BufferedEventProducer:
         return len(batch)
 
 
-class PromMetrics:
-    """The reference's three ingestion metric families (track.py:21-23)
-    over the shared text-exposition renderer (prom.py)."""
-
-    def __init__(self) -> None:
-        from realtime_analytics_pipeline_spark.prom import ingestion_metrics
-
-        (
-            self._registry,
-            self._requests,
-            self._latency,
-            self._errors,
-        ) = ingestion_metrics()
-
-    def inc_requests(self) -> None:
-        self._requests.inc()
-
-    def inc_producer_errors(self) -> None:
-        self._errors.inc()
-
-    def observe_latency(self, seconds: float) -> None:
-        self._latency.observe(seconds)
-
-    def render(self) -> str:
-        return self._registry.render()
-
-
-def _make_handler(producer: BufferedEventProducer, metrics: PromMetrics):
+def _make_handler(
+    producer: BufferedEventProducer,
+    registry: PromRegistry,
+    requests: Counter,
+    latency: Histogram,
+    errors: Counter,
+):
     class Handler(BaseHTTPRequestHandler):
         # HTTP/1.1 ⇒ persistent connections. The reference runs under
         # uvicorn (keep-alive by default); without this every request
@@ -291,7 +276,7 @@ def _make_handler(producer: BufferedEventProducer, metrics: PromMetrics):
             if self.path == "/healthz":  # health.py:6-8
                 self._reply(200, {"status": "ok"})
             elif self.path == "/metrics":  # main.py:33-37
-                body = metrics.render().encode()
+                body = registry.render().encode()
                 self.send_response(200)
                 self.send_header("Content-Type", PROM_CONTENT_TYPE)
                 self.send_header("Content-Length", str(len(body)))
@@ -324,15 +309,15 @@ def _make_handler(producer: BufferedEventProducer, metrics: PromMetrics):
                 self._reply(422, {"detail": errs})
                 return
             start = time.time()
-            metrics.inc_requests()  # track.py:52
+            requests.inc()  # track.py:52
             try:
                 producer.send(payload)
             except Exception:
-                metrics.inc_producer_errors()  # track.py:55-56
+                errors.inc()  # track.py:55-56
                 self._reply(500, {"detail": "produce failed"})
                 return
             finally:
-                metrics.observe_latency(time.time() - start)  # :79
+                latency.observe(time.time() - start)  # :79
             self._reply(202, {"status": "accepted"})  # track.py:31-34,79
 
     return Handler
@@ -353,9 +338,19 @@ class IngestionHttpServer:
         num_partitions: int = 8,
     ) -> None:
         self.producer = BufferedEventProducer(feed_path, num_partitions)
-        self.metrics = PromMetrics()
+        # the three families of track.py:21-23
+        self.registry, self.requests, self.latency, self.errors = (
+            ingestion_metrics()
+        )
         self._httpd = ThreadingHTTPServer(
-            (host, port), _make_handler(self.producer, self.metrics)
+            (host, port),
+            _make_handler(
+                self.producer,
+                self.registry,
+                self.requests,
+                self.latency,
+                self.errors,
+            ),
         )
         self._thread = threading.Thread(
             target=self._httpd.serve_forever, daemon=True

@@ -44,6 +44,7 @@ import threading
 import time
 from typing import Any
 
+from realtime_analytics_pipeline_spark.config import DEFAULT_CONFIG
 from realtime_analytics_pipeline_spark.functions.coerce import convert_types
 
 # --- shared/constants/redis_keys.py mirror -------------------------------
@@ -54,8 +55,8 @@ WINDOW_EVENT_INDEX = "metrics:event:windows"
 WINDOW_PERF_INDEX = "metrics:perf:windows"
 PUBSUB_CHANNEL_UPDATES = "cache:updates"
 
-# cache core/config.py:23-24 defaults
-WINDOW_RETENTION_COUNT = 120
+# cache core/config.py:24 default (the retention count is
+# EngineConfig.window_retention_count)
 WINDOW_HASH_TTL = 21600
 
 
@@ -247,7 +248,7 @@ class RespCacheRepository:
     def __init__(
         self,
         client: RespClient,
-        window_retention_count: int = WINDOW_RETENTION_COUNT,
+        window_retention_count: int = DEFAULT_CONFIG.window_retention_count,
         window_hash_ttl: int = WINDOW_HASH_TTL,
     ) -> None:
         self.r = client

@@ -7,10 +7,12 @@ Reference parity (SURVEY §2.1 S5-S7, §2.6 T8, §2.5 X5):
   replaced by idempotent-by-key downstream writes (deterministic
   window keys), the standard Spark pattern.
 - S6 ClickHouse batch insert → ``foreach_batch_partitioned_parquet``:
-  idempotent per-window-partition overwrite, partition + sort layout
-  mirroring the MergeTree ORDER BY keys (ddl.py:11,24,35).
-- S7 Redis windowed cache → ``foreach_batch_retention_view``: keeps
-  the newest N windows materialized, the T5 retention semantics.
+  per-batch partition overwrite (idempotent per epoch, X5), partition
+  + sort layout mirroring the MergeTree ORDER BY keys
+  (ddl.py:11,24,35).
+- S7 Redis windowed cache → ``foreach_batch_resp_sink``: each batch of
+  the pivot stream is one pipelined HSET/EXPIRE/ZADD + retention trim
+  (T5) against a RESP server, the store ``http_api`` serves from.
 - T8 micro-batch size / retry discipline maps to
   ``maxOffsetsPerTrigger`` + checkpointing (offset commit after
   successful write comes free from the checkpoint protocol).
@@ -18,9 +20,11 @@ Reference parity (SURVEY §2.1 S5-S7, §2.6 T8, §2.5 X5):
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 # micro-precision wire timestamps; consumers parse with the same format
@@ -77,12 +81,15 @@ def foreach_batch_partitioned_parquet(
     partition_col: str = "window_start",
     sort_cols: tuple[str, ...] = ("window_start",),
 ) -> Callable[[DataFrame, int], None]:
-    """S6-equivalent storage sink: each micro-batch is written
-    partitioned by window and sorted within partitions — the
-    Parquet analog of ClickHouse MergeTree ORDER BY (window_start,
-    key). A dynamic partition overwrite makes replays idempotent
-    (exactly-once effect per window partition, X5); it is a writer
-    option, so the session's ``partitionOverwriteMode`` is untouched."""
+    """S6-equivalent storage sink: each micro-batch is written under
+    ``_part=<hour of partition_col>/_batch=<batch_id>`` and sorted
+    within partitions — the Parquet analog of ClickHouse MergeTree
+    ORDER BY (window_start, key). The dynamic partition overwrite
+    replaces only the partitions this batch id writes, so batches in
+    the same hour coexist and a replayed batch id (Spark reuses it on
+    recovery) overwrites its own output: an exactly-once effect per
+    epoch (X5). The overwrite mode is a writer option, so the
+    session's ``partitionOverwriteMode`` is untouched."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.columns:
@@ -91,67 +98,60 @@ def foreach_batch_partitioned_parquet(
             batch_df.withColumn(
                 "_part", F.date_format(partition_col, "yyyyMMddHH")
             )
+            .withColumn("_batch", F.lit(batch_id))
             .sortWithinPartitions(*sort_cols)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_part")
+            .partitionBy("_part", "_batch")
             .parquet(out_dir)
         )
 
     return write
 
 
-def foreach_batch_retention_view(
-    out_dir: str,
-    retain: int,
-    time_col: str = "window_start",
-    metrics: dict | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """S7-equivalent cache sink: materialize only the newest ``retain``
-    windows of the running result (Redis ZREMRANGEBYRANK semantics,
-    repository.py:111-115) as a small serving parquet.
+# ---------------------------------------------------------------------------
+# cache wire format (repository.py:80-140 / message_parser.py:23-42)
+# ---------------------------------------------------------------------------
 
-    ``metrics``: an optional ``prom.cache_metrics()`` dict — each batch
-    then feeds the reference cache worker's Prometheus families
-    (infrastructure/kafka/metrics.py / worker.py): records consumed,
-    commit batches, batch apply latency, batch errors; the queue/
-    pending gauges read 0 after a batch because this mirror applies
-    synchronously inside foreachBatch (no intermediate queue)."""
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
+def _ms(ts: Any) -> int:
+    return int(ts.timestamp() * 1000)
 
-        from realtime_analytics_pipeline_spark.operators.serving import (
-            retention_trim,
-        )
 
-        t0 = _time.time()
-        try:
-            # the record counter costs an extra action — only when the
-            # caller asked for metrics; the unmetered hot path is
-            # untouched
-            n = batch_df.count() if metrics is not None else 0
-            trimmed = retention_trim(batch_df, retain, time_col=time_col)
-            trimmed.write.mode("overwrite").parquet(out_dir)
-        except Exception:
-            if metrics is not None:
-                metrics["batch_errors"].inc()
-            raise
-        finally:
-            if metrics is not None:
-                metrics["batch_latency"].observe(_time.time() - t0)
-        if metrics is not None:
-            metrics["records"].inc(n)
-            metrics["commit_batches"].inc()
-            metrics["queue_size"].set(0)
-            metrics["pending"].set(0)
+def _window_payload(row: Row, suffix_types: dict[str, type]) -> dict[str, Any]:
+    """Pivot row -> the Redis-hash wire object: ``window_start`` epoch-ms
+    int plus dotted ``<name>.<metric>`` fields; null pivot cells are
+    DROPPED, matching a hash that never received that type's message."""
+    d = row.asDict()
+    out: dict[str, Any] = {"window_start": _ms(d.pop("window_start"))}
+    d.pop("window_end", None)
+    for col, val in d.items():
+        if val is None:
+            continue
+        for suffix, typ in suffix_types.items():
+            if col.endswith(f"_{suffix}"):
+                name = col[: -len(suffix) - 1]
+                out[f"{name}.{suffix}"] = typ(val)
+                break
+    return out
 
-    return write
+
+_EVENT_FIELDS = {"count": int, "users": int}
+_PERF_FIELDS = {"avg_load_time": float, "p95_load_time": float}
+
+
+def event_wire(rows: list[Row]) -> list[dict[str, Any]]:
+    return [_window_payload(r, _EVENT_FIELDS) for r in rows]
+
+
+def perf_wire(rows: list[Row]) -> list[dict[str, Any]]:
+    return [_window_payload(r, _PERF_FIELDS) for r in rows]
 
 
 def foreach_batch_resp_sink(
     repo,
     kind: str = "event",
+    metrics: dict | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """S7 with the REAL wire protocol: each micro-batch of the pivot
     stream becomes one pipelined RESP batch against a Redis(-protocol)
@@ -163,23 +163,42 @@ def foreach_batch_resp_sink(
     The collect is serving-sized by contract: the pivot stream emits
     per-window rows and the store retains ≤120 windows per type
     (cache config.py:23); nothing event-scale crosses the socket.
+
+    ``metrics``: an optional ``prom.cache_metrics()`` dict — each batch
+    then feeds the reference cache worker's Prometheus families
+    (infrastructure/kafka/metrics.py / worker.py): records consumed
+    (the batch's rows), commit batches, batch apply latency, batch
+    errors; the queue/pending gauges read 0 after a batch because the
+    sink applies synchronously inside foreachBatch (no intermediate
+    queue).
     """
+    wire = event_wire if kind == "event" else perf_wire
+    op_type = "event" if kind == "event" else "perf"
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        from realtime_analytics_pipeline_spark.http_api import (
-            event_wire,
-            perf_wire,
-        )
-
+    def apply(batch_df: DataFrame) -> int:
         rows = batch_df.collect()
-        payloads = (
-            event_wire(rows) if kind == "event" else perf_wire(rows)
-        )
-        op_type = "event" if kind == "event" else "perf"
         ops = []
-        for p in payloads:
+        for p in wire(rows):
             w = p.pop("window_start")
             ops.append({"type": op_type, "window_start": w, "fields": p})
         repo.pipeline_apply(ops)
+        return len(rows)
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        if metrics is None:
+            apply(batch_df)
+            return
+        t0 = time.time()
+        try:
+            n = apply(batch_df)
+        except Exception:
+            metrics["batch_errors"].inc()
+            raise
+        finally:
+            metrics["batch_latency"].observe(time.time() - t0)
+        metrics["records"].inc(n)
+        metrics["commit_batches"].inc()
+        metrics["queue_size"].set(0)
+        metrics["pending"].set(0)
 
     return write

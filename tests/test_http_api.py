@@ -1,6 +1,7 @@
 """Golden wire-format tests for the HTTP layer vs the reference's
 documented responses (metrics.py:8-31, health.py:6-19,
-repository.py:80-140, cache_service.py:31-39)."""
+repository.py:80-140, cache_service.py:31-39), served from a RESP
+cache that ``foreach_batch_resp_sink`` filled."""
 
 from __future__ import annotations
 
@@ -16,8 +17,15 @@ from realtime_analytics_pipeline_spark.operators.event_metrics import event_metr
 from realtime_analytics_pipeline_spark.operators.performance_metrics import (
     performance_metrics,
 )
-from realtime_analytics_pipeline_spark.serving_api import ServingApi
+from realtime_analytics_pipeline_spark.resp import (
+    MiniRedisServer,
+    RespCacheRepository,
+    RespClient,
+)
 from realtime_analytics_pipeline_spark.sources.batch import load_events
+from realtime_analytics_pipeline_spark.streaming.sinks import (
+    foreach_batch_resp_sink,
+)
 
 from tests.conftest import SF_SMOKE
 
@@ -25,13 +33,31 @@ CATS = ["view", "click", "purchase", "signup", "error"]
 
 
 @pytest.fixture(scope="module")
-def server(spark):
+def pivots(spark):
     ev = load_events(spark, SF_SMOKE)
-    api = ServingApi(
-        serving.pivot_event_metrics(event_metrics(ev), ["view", "click", "purchase", "signup"]),
+    return (
+        serving.pivot_event_metrics(
+            event_metrics(ev), ["view", "click", "purchase", "signup"]
+        ),
         serving.pivot_performance_metrics(performance_metrics(ev), CATS),
     )
-    srv = MetricsHttpServer(api)
+
+
+@pytest.fixture(scope="module")
+def cache():
+    redis = MiniRedisServer()
+    cli = RespClient("127.0.0.1", redis.port)
+    yield RespCacheRepository(cli)
+    cli.close()
+    redis.close()
+
+
+@pytest.fixture(scope="module")
+def server(pivots, cache):
+    event_pivot, perf_pivot = pivots
+    foreach_batch_resp_sink(cache, "event")(event_pivot, 0)
+    foreach_batch_resp_sink(cache, "performance")(perf_pivot, 0)
+    srv = MetricsHttpServer(cache)
     yield srv
     srv.close()
 
@@ -120,11 +146,13 @@ def test_unknown_route_404(server):
     assert ei.value.code == 404
 
 
-def test_readyz_503_when_store_unready(spark):
+def test_readyz_503_when_store_unready():
     """health.py:15-19: plain-text 503 'not ready' before readiness."""
-    empty = spark.createDataFrame([], "window_start timestamp")
-    api = ServingApi(empty.drop("window_start"), empty.drop("window_start"))
-    srv = MetricsHttpServer(api)
+    redis = MiniRedisServer()
+    cli = RespClient("127.0.0.1", redis.port)
+    cli.close()  # the cache is unreachable: PING cannot be sent
+    redis.close()
+    srv = MetricsHttpServer(RespCacheRepository(cli))
     try:
         with pytest.raises(urllib.error.HTTPError) as ei:
             _get(srv, "/readyz")
@@ -159,35 +187,24 @@ def test_negative_limit_zrevrange_wrap(server):
     assert minus["windows"] == everything["windows"][: n - 3]
 
 
-def test_cache_prometheus_metrics_endpoint(spark, tmp_path):
+def test_cache_prometheus_metrics_endpoint(pivots):
     """GET /metrics (bare path, beside the /metrics/... JSON routes —
     cache main.py:87-89): the six worker families from
-    infrastructure/kafka/metrics.py, fed by a retention-view batch."""
+    infrastructure/kafka/metrics.py, fed by a metered RESP sink batch."""
     from realtime_analytics_pipeline_spark.prom import (
         PROM_CONTENT_TYPE,
         cache_metrics,
     )
-    from realtime_analytics_pipeline_spark.streaming.sinks import (
-        foreach_batch_retention_view,
-    )
 
     m = cache_metrics()
-    ev = load_events(spark, SF_SMOKE)
-    pivot = serving.pivot_event_metrics(
-        event_metrics(ev), ["view", "click", "purchase", "signup"]
-    )
-    out = str(tmp_path / "store")
-    write = foreach_batch_retention_view(
-        out, retain=120, time_col="window_start", metrics=m
-    )
-    write(pivot, 0)
-    n_windows = pivot.count()
+    event_pivot, _ = pivots
+    redis = MiniRedisServer()
+    cli = RespClient("127.0.0.1", redis.port)
+    repo = RespCacheRepository(cli)
+    foreach_batch_resp_sink(repo, "event", metrics=m)(event_pivot, 0)
+    n_windows = event_pivot.count()
 
-    api = ServingApi(
-        spark.read.parquet(out),
-        serving.pivot_performance_metrics(performance_metrics(ev), CATS),
-    )
-    srv = MetricsHttpServer(api, cache_metrics=m)
+    srv = MetricsHttpServer(repo, cache_metrics=m)
     try:
         status, ctype, body = _get(srv, "/metrics")
         assert status == 200 and ctype == PROM_CONTENT_TYPE
@@ -208,3 +225,56 @@ def test_cache_prometheus_metrics_endpoint(spark, tmp_path):
         assert status == 200 and "json" in ctype
     finally:
         srv.close()
+        cli.close()
+        redis.close()
+
+
+def test_concurrent_reads_during_sink_batch(pivots):
+    """Handler threads share the repository's one RESP client with the
+    sink: GETs racing a ``foreach_batch_resp_sink`` batch on that same
+    repository each get a whole, well-formed, newest-first reply."""
+    import threading
+
+    event_pivot, _ = pivots
+    redis = MiniRedisServer()
+    cli = RespClient("127.0.0.1", redis.port)
+    repo = RespCacheRepository(cli)
+    srv = MetricsHttpServer(repo)
+    stop = threading.Event()
+    replies: list[tuple[int, dict]] = []
+    errors: list[BaseException] = []
+
+    def reader():
+        try:
+            while not stop.is_set():
+                status, _, payload = _get(srv, "/metrics/event/windows?limit=0")
+                replies.append((status, payload))
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader) for _ in range(4)]
+    try:
+        for t in threads:
+            t.start()
+        sink = foreach_batch_resp_sink(repo, "event")
+        for batch_id in range(3):
+            sink(event_pivot, batch_id)
+        stop.set()
+        for t in threads:
+            t.join()
+        _, _, final = _get(srv, "/metrics/event/windows?limit=0")
+    finally:
+        stop.set()
+        srv.close()
+        cli.close()
+        redis.close()
+    assert not errors
+    assert len(replies) >= len(threads)
+    for status, payload in replies:
+        assert status == 200 and set(payload) == {"windows"}
+        starts = [w["window_start"] for w in payload["windows"]]
+        assert all(isinstance(s, int) for s in starts)
+        assert starts == sorted(set(starts), reverse=True)
+        assert all(len(w) > 1 for w in payload["windows"])
+    # once the batches are applied, the retained set is whole
+    assert len(final["windows"]) == min(event_pivot.count(), 120)

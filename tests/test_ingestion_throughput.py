@@ -136,6 +136,6 @@ def test_ingestion_throughput_envelope(tmp_path, target_rps):
         # the buffer accumulates across attempts, so >= the last one)
         assert srv.producer.pending() >= results["ok"]
         # and the Prometheus counter agrees with the producer's view
-        assert srv.metrics._requests.value == srv.producer.pending()
+        assert srv.requests.value == srv.producer.pending()
     finally:
         srv.close()

@@ -119,14 +119,15 @@ def test_repository_pipeline_apply_mixed(redis_pair):
 def test_foreach_batch_resp_sink_end_to_end(spark, redis_pair):
     """Pivot batch -> RESP pipeline -> repository reads match the HTTP
     cache wire shape for the same data (same dotted fields, newest
-    first, absent-not-null)."""
-    from realtime_analytics_pipeline_spark.http_api import event_wire
+    first, absent-not-null), and the retention trim keeps exactly the
+    newest windows."""
     from realtime_analytics_pipeline_spark.operators.event_metrics import (
         event_metrics,
     )
     from realtime_analytics_pipeline_spark.operators import serving
     from realtime_analytics_pipeline_spark.sources.batch import load_events
     from realtime_analytics_pipeline_spark.streaming.sinks import (
+        event_wire,
         foreach_batch_resp_sink,
     )
     from tests.conftest import SF_SMOKE
@@ -146,6 +147,15 @@ def test_foreach_batch_resp_sink_end_to_end(spark, redis_pair):
     assert got == want
     # full store respects the 120-window retention default
     assert cli.execute("ZCARD", WINDOW_EVENT_INDEX) <= 120
+
+    # a smaller retention keeps exactly the newest windows (T5)
+    cli.execute("FLUSHALL")
+    repo7 = RespCacheRepository(cli, window_retention_count=7)
+    foreach_batch_resp_sink(repo7, "event")(pivot, 1)
+    newest7 = event_wire(
+        pivot.orderBy(pivot.window_start.desc()).limit(7).collect()
+    )
+    assert repo7.get_last_event_windows(0) == newest7
 
 
 def test_expiry_evicts_lazily(redis_pair):

@@ -4,6 +4,7 @@ wire-JSON parsing, idempotent partitioned sink."""
 from __future__ import annotations
 
 import json
+from datetime import datetime
 
 from pyspark.sql import functions as F
 
@@ -262,14 +263,14 @@ def test_parse_wire_json_lenient(spark):
 
 
 def test_foreach_batch_partitioned_parquet_idempotent(spark, tmp_path):
-    """Replaying the same batch must not duplicate rows (dynamic
-    partition overwrite = idempotent upsert-by-window, X5 parity)."""
+    """Replaying a batch id must not duplicate rows (dynamic overwrite
+    of that batch's partitions = idempotent per epoch, X5 parity)."""
     out_dir = str(tmp_path / "storage_sink")
     em = event_metrics(load_events(spark, SF_SMOKE))
     write = sinks.foreach_batch_partitioned_parquet(out_dir)
     write(em, 0)
     n1 = spark.read.parquet(out_dir).count()
-    write(em, 1)  # replay
+    write(em, 0)  # replay: Spark reuses the batch id on recovery
     n2 = spark.read.parquet(out_dir).count()
     assert n1 == n2 == em.count()
 
@@ -288,18 +289,20 @@ def test_foreach_batch_partitioned_parquet_keeps_session_conf(spark, tmp_path):
         spark.conf.set(key, before)
 
 
-def test_foreach_batch_retention_view(spark, tmp_path):
-    out_dir = str(tmp_path / "cache_sink")
-    em = event_metrics(load_events(spark, SF_SMOKE))
-    write = sinks.foreach_batch_retention_view(out_dir, retain=7)
-    write(em, 0)
+def test_foreach_batch_partitioned_parquet_keeps_earlier_batches(spark, tmp_path):
+    """Two micro-batches whose windows fall in the same hour both stay
+    stored: a later batch must not overwrite the hour partition an
+    earlier batch wrote."""
+    out_dir = str(tmp_path / "storage_sink")
+    write = sinks.foreach_batch_partitioned_parquet(out_dir)
+    schema = "window_start timestamp, event_type string, count long"
+    for batch_id, (minute, n) in enumerate([(1, 5), (2, 7)]):
+        batch = spark.createDataFrame(
+            [(datetime(2024, 1, 1, 10, minute), "view", n)], schema
+        )
+        write(batch, batch_id)
     got = spark.read.parquet(out_dir)
-    assert got.count() == 7
-    newest_batch = {
-        r.window_start
-        for r in em.orderBy(F.col("window_start").desc()).limit(7).collect()
-    }
-    assert {r.window_start for r in got.collect()} == newest_batch
+    assert sorted(r["count"] for r in got.collect()) == [5, 7]
 
 
 def test_progress_metrics_trace(spark, tmp_path):
