@@ -16,7 +16,10 @@ null) for types that produced no message in that window; list
 endpoints wrap newest-first windows as ``{"windows": [...]}``; the
 overview combines the latest event and performance snapshots
 (cache_service.py:31-39); /readyz answers plain-text 503 until the
-cache answers PING. A ``limit`` below 1 goes to ZREVRANGE(0, limit-1)
+cache answers PING; a data route whose cache call fails answers
+plain-text 500 ``Internal Server Error``, as Starlette does for an
+unhandled error, and the client dials the cache again on the next
+request. A ``limit`` below 1 goes to ZREVRANGE(0, limit-1)
 unchanged, as in the reference (no ``ge=`` bound), so Redis's
 negative end index gives the wrap: 0 reads every retained window, -k
 all but the k oldest.
@@ -25,12 +28,13 @@ FastAPI is not in this container, so the server is the stdlib
 ``ThreadingHTTPServer`` — the routes, query parsing, status codes and
 JSON bodies are the wire contract, and they are golden-tested in
 tests/test_http_api.py. Handler threads share the repository's one
-``RespClient``, whose lock makes each command a whole round trip.
+``RespClient``, whose lock makes each pipeline a whole round trip.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
@@ -39,6 +43,7 @@ from urllib.parse import parse_qs, urlparse
 from realtime_analytics_pipeline_spark import prom
 from realtime_analytics_pipeline_spark.resp import RespCacheRepository
 
+_log = logging.getLogger(__name__)
 _LIMIT_ROUTES = ("/metrics/event/windows", "/metrics/performance/windows")
 _BAD_LIMIT = {
     "detail": [
@@ -121,7 +126,12 @@ def _make_handler(repo: RespCacheRepository, prom_registry):
                 self.send_response(404)
                 self.end_headers()
                 return
-            status, payload = fn()
+            try:
+                status, payload = fn()
+            except Exception:  # noqa: BLE001 — Starlette's 500 reply
+                _log.exception("GET %s failed", url.path)
+                self._reply(500, "Internal Server Error", "text/plain")
+                return
             # FastAPI's dict-return vs Response(content=...) split,
             # health.py:6-19
             if isinstance(payload, str):

@@ -8,8 +8,7 @@ Reference parity (SURVEY §2.1, §2.4, §2.5):
   ``DataFrame -> DataFrame`` so ``readStream`` swaps in directly
 - X1/X3: three independent ``writeStream`` queries, one checkpoint
   each (vs Flink's StatementSet, job_coordinator.py:66-77 — Spark
-  idiom is per-query checkpoints; a shared-scan ``foreachBatch``
-  variant is in sinks.py)
+  idiom is per-query checkpoints)
 - W5: late rows beyond the watermark are dropped by the streaming
   aggregation, matching Flink's no-allowed-lateness configuration
 - W6 (idle-source timeout) has no Spark knob; Spark's watermark is

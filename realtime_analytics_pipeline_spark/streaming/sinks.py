@@ -11,8 +11,10 @@ Reference parity (SURVEY §2.1 S5-S7, §2.6 T8, §2.5 X5):
   + sort layout mirroring the MergeTree ORDER BY keys
   (ddl.py:11,24,35).
 - S7 Redis windowed cache → ``foreach_batch_resp_sink``: each batch of
-  the pivot stream is one pipelined HSET/EXPIRE/ZADD + retention trim
-  (T5) against a RESP server, the store ``http_api`` serves from.
+  the pivot stream is one RESP pipeline, one round trip, against a
+  RESP server, the store ``http_api`` serves from: HSET/EXPIRE/ZADD
+  per window plus the retention trim (T5) as a ZREMRANGEBYRANK in the
+  same pipeline.
 - T8 micro-batch size / retry discipline maps to
   ``maxOffsetsPerTrigger`` + checkpointing (offset commit after
   successful write comes free from the checkpoint protocol).
@@ -154,9 +156,10 @@ def foreach_batch_resp_sink(
     metrics: dict | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """S7 with the REAL wire protocol: each micro-batch of the pivot
-    stream becomes one pipelined RESP batch against a Redis(-protocol)
-    server — the exact HSET/EXPIRE/ZADD + trim sequence of reference
-    repository.py:47-77, via resp.RespCacheRepository.
+    stream becomes one RESP pipeline, one round trip, against a
+    Redis(-protocol) server — the HSET/EXPIRE/ZADD writes of reference
+    repository.py:47-77 with the retention trim riding the same
+    pipeline as a ZREMRANGEBYRANK, via resp.RespCacheRepository.
 
     ``kind``: "event" or "performance" — selects the dotted-field wire
     shape (message_parser.py:23-42) and the index the batch lands in.

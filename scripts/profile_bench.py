@@ -6,10 +6,11 @@ $SPARK_GRAFT_SF_DIR:
     EXECUTION (noop sink) separately, over N reps;
   - count Spark jobs/stages/tasks launched during execution via the
     status tracker deltas;
-  - optionally dump .explain("formatted") to plans/<tag>/<q>.txt.
+  - optionally dump .explain("formatted") to <dir>/<q><suffix>.txt
+    (keep dumps under the gitignored .tmp/).
 
 Usage:
-  python scripts/profile_bench.py [--reps 3] [--plans plans/r13 --suffix _before]
+  python scripts/profile_bench.py [--reps 3] [--plans .tmp/plans/r13 --suffix _before]
                                   [--only q1,q2,...] [--json OUT.json]
 """
 

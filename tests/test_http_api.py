@@ -162,6 +162,38 @@ def test_readyz_503_when_store_unready():
         srv.close()
 
 
+def test_cache_down_replies_500_then_recovers(pivots):
+    """A data route whose cache call fails answers plain-text 500, as
+    Starlette does for an unhandled error, instead of dropping the
+    connection; once the cache is back on the same port, the next
+    request dials it again and is served."""
+    event_pivot, _ = pivots
+    redis = MiniRedisServer()
+    port = redis.port
+    cli = RespClient("127.0.0.1", port)
+    srv = MetricsHttpServer(RespCacheRepository(cli))
+    try:
+        cli.close()
+        redis.close()
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _get(srv, "/metrics/event/windows")
+        assert ei.value.code == 500
+        assert ei.value.read().decode() == "Internal Server Error"
+
+        redis = MiniRedisServer(port=port)
+        status, _, r = _get(srv, "/readyz")
+        assert status == 200 and r == {"status": "ready"}
+        foreach_batch_resp_sink(RespCacheRepository(cli), "event")(
+            event_pivot, 0
+        )
+        status, _, payload = _get(srv, "/metrics/event/windows")
+        assert status == 200 and len(payload["windows"]) == 20
+    finally:
+        srv.close()
+        cli.close()
+        redis.close()
+
+
 def test_bad_limit_replies_422_not_dropped_connection(server):
     """FastAPI 422s a non-int limit (`limit: int = 20`, metrics.py:15);
     the stdlib mirror must reply with a status, not a stack trace."""

@@ -16,6 +16,10 @@ from realtime_analytics_pipeline_spark.resp import (
 )
 
 
+def _event(window_start, fields):
+    return {"type": "event", "window_start": window_start, "fields": fields}
+
+
 @pytest.fixture()
 def redis_pair():
     srv = MiniRedisServer()
@@ -72,8 +76,8 @@ def test_pipeline_is_one_roundtrip(redis_pair):
 def test_repository_store_and_reads(redis_pair):
     srv, cli = redis_pair
     repo = RespCacheRepository(cli, window_retention_count=3)
-    repo.store_event_window(60000, {"view.count": 5, "view.users": 3})
-    repo.store_event_window(120000, {"view.count": 7, "click.count": 2})
+    repo.pipeline_apply([_event(60000, {"view.count": 5, "view.users": 3})])
+    repo.pipeline_apply([_event(120000, {"view.count": 7, "click.count": 2})])
     latest = repo.get_latest_event_window()
     # types converted through the reference int->float->str cascade
     assert latest == {
@@ -86,12 +90,12 @@ def test_repository_store_and_reads(redis_pair):
 
 
 def test_repository_trim_keeps_newest(redis_pair):
-    """repository.py:109-115: ZCARD over the cap -> ZREMRANGEBYRANK
-    drops the OLDEST (lowest-rank) excess."""
+    """repository.py:109-115: over the cap, ZREMRANGEBYRANK drops the
+    OLDEST (lowest-rank) excess."""
     srv, cli = redis_pair
     repo = RespCacheRepository(cli, window_retention_count=3)
     for i in range(1, 8):
-        repo.store_event_window(i * 60000, {"view.count": i})
+        repo.pipeline_apply([_event(i * 60000, {"view.count": i})])
     assert cli.execute("ZCARD", WINDOW_EVENT_INDEX) == 3
     wins = repo.get_last_event_windows(10)
     assert [w["window_start"] for w in wins] == [420000, 360000, 300000]
@@ -114,6 +118,67 @@ def test_repository_pipeline_apply_mixed(redis_pair):
     pf = repo.get_last_performance_windows(10)
     assert [w["window_start"] for w in ev] == [120000, 60000]
     assert pf == [{"window_start": 60000, "view.avg_load_time": 120.5}]
+
+
+def test_error_reply_keeps_pipeline_in_step(redis_pair):
+    """An error reply mid-pipeline is raised only after every reply is
+    read, so the next command gets its own reply, not a stale one."""
+    srv, cli = redis_pair
+    with pytest.raises(RuntimeError, match="unknown command"):
+        cli.pipeline([("FOO",), ("ZCARD", "x")])
+    assert cli.execute("PING") == "PONG"
+
+
+class _CountingClient(RespClient):
+    def __init__(self, *args):
+        super().__init__(*args)
+        self.round_trips = 0
+
+    def pipeline(self, commands):
+        self.round_trips += 1
+        return super().pipeline(commands)
+
+
+def test_repository_round_trips(redis_pair):
+    """A mixed write batch, trim included, is one round trip; a
+    window-list read is two (ZREVRANGE, then every HGETALL)."""
+    srv, _ = redis_pair
+    cli = _CountingClient("127.0.0.1", srv.port)
+    repo = RespCacheRepository(cli, window_retention_count=5)
+    ops = [_event(i * 60000, {"view.count": i}) for i in range(1, 25)]
+    ops += [
+        {"type": "perf", "window_start": i * 60000,
+         "fields": {"view.avg_load_time": 1.5}}
+        for i in range(1, 8)
+    ]
+    repo.pipeline_apply(ops)
+    assert cli.round_trips == 1
+    assert cli.execute("ZCARD", WINDOW_EVENT_INDEX) == 5
+    assert len(repo.get_last_performance_windows(0)) == 5
+
+    cli.round_trips = 0
+    wins = repo.get_last_event_windows(20)
+    assert cli.round_trips == 2
+    assert [w["window_start"] for w in wins] == [
+        i * 60000 for i in range(24, 19, -1)
+    ]
+    cli.close()
+
+
+def test_back_to_back_pipelines_do_not_stall(redis_pair):
+    """Each mini-server reply is its own send; a pipeline's later
+    replies must not wait on the client's delayed ACK (Nagle), which
+    costs tens of ms per call."""
+    import time
+
+    srv, cli = redis_pair
+    repo = RespCacheRepository(cli)
+    t0 = time.perf_counter()
+    for i in range(50):
+        repo.pipeline_apply(
+            [_event(i * 60000, {"view.count": i, "view.users": 1})]
+        )
+    assert time.perf_counter() - t0 < 1.0
 
 
 def test_foreach_batch_resp_sink_end_to_end(spark, redis_pair):
@@ -161,7 +226,7 @@ def test_foreach_batch_resp_sink_end_to_end(spark, redis_pair):
 def test_expiry_evicts_lazily(redis_pair):
     srv, cli = redis_pair
     repo = RespCacheRepository(cli, window_hash_ttl=-1)  # already past
-    repo.store_event_window(60000, {"view.count": 5})
+    repo.pipeline_apply([_event(60000, {"view.count": 5})])
     # index survives (only the hash got the TTL); hash is gone
     assert cli.execute("HGETALL", "metrics:event:60000") == []
     assert repo.get_latest_event_window() is None
