@@ -24,27 +24,21 @@ unchanged, as in the reference (no ``ge=`` bound), so Redis's
 negative end index gives the wrap: 0 reads every retained window, -k
 all but the k oldest.
 
-FastAPI is not in this container, so the server is the stdlib
-``ThreadingHTTPServer`` — the routes, query parsing, status codes and
-JSON bodies are the wire contract, and they are golden-tested in
-tests/test_http_api.py. Handler threads share the repository's one
-``RespClient``, whose lock makes each pipeline a whole round trip.
+The routes, query parsing, status codes and JSON bodies are the wire
+contract, golden-tested in tests/test_http_api.py. Handler threads
+share the repository's one ``RespClient``, whose lock makes each
+pipeline a whole round trip.
 """
 
 from __future__ import annotations
 
-import json
-import logging
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
-from urllib.parse import parse_qs, urlparse
+from urllib.parse import parse_qs
 
 from realtime_analytics_pipeline_spark import prom
 from realtime_analytics_pipeline_spark.resp import RespCacheRepository
+from realtime_analytics_pipeline_spark.server import RouteHandler, TcpServer
 
-_log = logging.getLogger(__name__)
-_LIMIT_ROUTES = ("/metrics/event/windows", "/metrics/performance/windows")
 _BAD_LIMIT = {
     "detail": [
         {
@@ -72,83 +66,22 @@ def _overview(repo: RespCacheRepository) -> dict[str, Any]:
     }
 
 
-def _make_handler(repo: RespCacheRepository, prom_registry):
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, *args: Any) -> None:  # quiet test output
-            pass
+def _windows(get_last):
+    """A list route: FastAPI 422s a non-int ``limit`` (``limit: int =
+    20``, metrics.py:15); no other route reads it."""
 
-        def _reply(
-            self, status: int, text: str, ctype: str = "application/json"
-        ) -> None:
-            body = text.encode()
-            self.send_response(status)
-            self.send_header("Content-Type", ctype)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+    def route(query: str, body: bytes) -> tuple[int, Any]:
+        try:
+            limit = int(parse_qs(query).get("limit", ["20"])[0])
+        except ValueError:
+            return 422, _BAD_LIMIT
+        return 200, {"windows": get_last(limit)}
 
-        def do_GET(self) -> None:  # noqa: N802 (http.server API)
-            url = urlparse(self.path)
-            if url.path == "/metrics":
-                # cache main.py:87-89 — Prometheus exposition lives at
-                # the bare /metrics, beside the /metrics/... JSON routes
-                self._reply(200, prom_registry.render(), prom.PROM_CONTENT_TYPE)
-                return
-            # FastAPI 422s a non-int limit (`limit: int = 20`,
-            # metrics.py:15) — mirror that instead of letting int()
-            # blow up the handler (dropped connection, no status).
-            try:
-                limit = int(parse_qs(url.query).get("limit", ["20"])[0])
-            except ValueError:
-                if url.path in _LIMIT_ROUTES:
-                    self._reply(422, json.dumps(_BAD_LIMIT))
-                    return
-                limit = 20  # routes that never read it
-            table = {
-                "/healthz": lambda: (200, {"status": "ok"}),
-                "/readyz": lambda: _readyz(repo),
-                "/metrics/event/latest": lambda: (
-                    200,
-                    repo.get_latest_event_window() or {},  # cache_service.py:22-23
-                ),
-                "/metrics/event/windows": lambda: (
-                    200,
-                    {"windows": repo.get_last_event_windows(limit)},
-                ),
-                "/metrics/performance/windows": lambda: (
-                    200,
-                    {"windows": repo.get_last_performance_windows(limit)},
-                ),
-                "/metrics/overview": lambda: (200, _overview(repo)),
-            }
-            fn = table.get(url.path)
-            if fn is None:
-                self.send_response(404)
-                self.end_headers()
-                return
-            try:
-                status, payload = fn()
-            except Exception:  # noqa: BLE001 — Starlette's 500 reply
-                _log.exception("GET %s failed", url.path)
-                self._reply(500, "Internal Server Error", "text/plain")
-                return
-            # FastAPI's dict-return vs Response(content=...) split,
-            # health.py:6-19
-            if isinstance(payload, str):
-                self._reply(status, payload, "text/plain")
-            else:
-                self._reply(status, json.dumps(payload))
-
-    return Handler
+    return route
 
 
-class MetricsHttpServer:
-    """The cache service's HTTP surface over a RESP cache repository.
-
-    ``port=0`` binds an ephemeral port (tests); ``.port`` reports the
-    bound one. The server thread is a daemon — ``close()`` for an
-    orderly stop.
-    """
+class MetricsHttpServer(TcpServer):
+    """The cache service's HTTP surface over a RESP cache repository."""
 
     def __init__(
         self,
@@ -164,19 +97,24 @@ class MetricsHttpServer:
         self.metrics = (
             prom.cache_metrics() if cache_metrics is None else cache_metrics
         )
-        self._httpd = ThreadingHTTPServer(
-            (host, port), _make_handler(repo, self.metrics["registry"])
-        )
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, daemon=True
-        )
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._httpd.server_address[1]
-
-    def close(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-
+        registry = self.metrics["registry"]
+        routes = {
+            # cache main.py:87-89 — Prometheus exposition lives at the
+            # bare /metrics, beside the /metrics/... JSON routes
+            ("GET", "/metrics"): lambda q, b: (
+                200, registry.render(), prom.PROM_CONTENT_TYPE
+            ),
+            ("GET", "/healthz"): lambda q, b: (200, {"status": "ok"}),
+            ("GET", "/readyz"): lambda q, b: _readyz(repo),
+            ("GET", "/metrics/event/latest"): lambda q, b: (
+                200, repo.get_latest_event_window() or {}  # cache_service.py:22-23
+            ),
+            ("GET", "/metrics/event/windows"): _windows(
+                repo.get_last_event_windows
+            ),
+            ("GET", "/metrics/performance/windows"): _windows(
+                repo.get_last_performance_windows
+            ),
+            ("GET", "/metrics/overview"): lambda q, b: (200, _overview(repo)),
+        }
+        super().__init__(host, port, RouteHandler, routes)

@@ -49,19 +49,15 @@ import threading
 import time
 import urllib.parse
 import uuid
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
 import pyarrow as pa
 
 from realtime_analytics_pipeline_spark.prom import (
     PROM_CONTENT_TYPE,
-    Counter,
-    Histogram,
-    PromRegistry,
     ingestion_metrics,
 )
-
+from realtime_analytics_pipeline_spark.server import RouteHandler, TcpServer
 from realtime_analytics_pipeline_spark.sources.feed import produce_keyed
 
 
@@ -197,7 +193,8 @@ class BufferedEventProducer:
     produce order preserved via the monotone ``seq``). The flush is a
     driver-side Arrow append — a table of ``user_id, seq, value`` routed
     and committed without a Spark job — so its cost is the rows
-    flushed, not a job launch."""
+    flushed, not a job launch. A flush that fails puts its batch back,
+    so the next flush writes it."""
 
     def __init__(self, feed_path: str, num_partitions: int = 8) -> None:
         self.feed_path = feed_path
@@ -225,110 +222,36 @@ class BufferedEventProducer:
         if not batch:
             return 0
         users, seqs, values = zip(*batch)
-        table = pa.table(
-            {
-                "user_id": pa.array(users, pa.string()),
-                "seq": pa.array(seqs, pa.int64()),
-                "value": pa.array(values, pa.string()),
-            }
-        )
-        produce_keyed(
-            table,
-            self.feed_path,
-            key_col="user_id",
-            seq_col="seq",
-            num_partitions=self.num_partitions,
-        )
+        try:
+            table = pa.table(
+                {
+                    "user_id": pa.array(users, pa.string()),
+                    "seq": pa.array(seqs, pa.int64()),
+                    "value": pa.array(values, pa.string()),
+                }
+            )
+            produce_keyed(
+                table,
+                self.feed_path,
+                key_col="user_id",
+                seq_col="seq",
+                num_partitions=self.num_partitions,
+            )
+        except BaseException:
+            # every event here was answered 202: back at the head, in
+            # seq order, ahead of the sends that arrived meanwhile
+            with self._lock:
+                self._buf[:0] = batch
+            raise
         return len(batch)
 
 
-def _make_handler(
-    producer: BufferedEventProducer,
-    registry: PromRegistry,
-    requests: Counter,
-    latency: Histogram,
-    errors: Counter,
-):
-    class Handler(BaseHTTPRequestHandler):
-        # HTTP/1.1 ⇒ persistent connections. The reference runs under
-        # uvicorn (keep-alive by default); without this every request
-        # pays a TCP handshake and the 1000-RPS envelope test caps at
-        # ~400 RPS on connection setup alone. Every reply path must
-        # then carry Content-Length (all of ours do).
-        protocol_version = "HTTP/1.1"
-        # TCP_NODELAY: a keep-alive request/response ping-pong of small
-        # packets otherwise hits the Nagle x delayed-ACK stall (~40 ms
-        # per exchange) — uvicorn sets this too.
-        disable_nagle_algorithm = True
-
-        def log_message(self, *args: Any) -> None:
-            pass
-
-        def _reply(self, status: int, payload: dict) -> None:
-            body = json.dumps(payload).encode()
-            self.send_response(status)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def do_GET(self) -> None:  # noqa: N802
-            if self.path == "/healthz":  # health.py:6-8
-                self._reply(200, {"status": "ok"})
-            elif self.path == "/metrics":  # main.py:33-37
-                body = registry.render().encode()
-                self.send_response(200)
-                self.send_header("Content-Type", PROM_CONTENT_TYPE)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-            else:
-                self.send_response(404)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
-
-        def do_POST(self) -> None:  # noqa: N802
-            if self.path != "/analytics/track":  # track.py:29
-                self.send_response(404)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
-                return
-            n = int(self.headers.get("Content-Length", "0"))
-            try:
-                payload = json.loads(self.rfile.read(n))
-            except Exception:
-                self._reply(
-                    422, {"detail": [{"loc": "body", "msg": "invalid JSON"}]}
-                )
-                return
-            errs = validate_event(payload)
-            if errs:
-                # FastAPI model validation rejects BEFORE the handler
-                # body runs — 422s touch no counter (track.py:52 is
-                # only reached with a valid AnalyticsEvent)
-                self._reply(422, {"detail": errs})
-                return
-            start = time.time()
-            requests.inc()  # track.py:52
-            try:
-                producer.send(payload)
-            except Exception:
-                errors.inc()  # track.py:55-56
-                self._reply(500, {"detail": "produce failed"})
-                return
-            finally:
-                latency.observe(time.time() - start)  # :79
-            self._reply(202, {"status": "accepted"})  # track.py:31-34,79
-
-    return Handler
-
-
-class IngestionHttpServer:
+class IngestionHttpServer(TcpServer):
     """POST /analytics/track + GET /healthz + GET /metrics (Prometheus
-    text exposition) over a buffered keyed producer. ``port=0`` binds
-    ephemeral; ``.flush(spark)`` commits the buffered epoch to the
-    feed table (``spark`` is accepted for callers' sake; the flush
-    needs no session)."""
+    text exposition) over a buffered keyed producer, as a
+    ``RouteHandler`` table. ``.flush(spark)`` commits the buffered
+    epoch to the feed table (``spark`` is accepted for callers' sake;
+    the flush needs no session)."""
 
     def __init__(
         self,
@@ -342,28 +265,36 @@ class IngestionHttpServer:
         self.registry, self.requests, self.latency, self.errors = (
             ingestion_metrics()
         )
-        self._httpd = ThreadingHTTPServer(
-            (host, port),
-            _make_handler(
-                self.producer,
-                self.registry,
-                self.requests,
-                self.latency,
-                self.errors,
+        routes = {
+            ("POST", "/analytics/track"): self._track,  # track.py:29
+            ("GET", "/healthz"): lambda q, b: (200, {"status": "ok"}),
+            ("GET", "/metrics"): lambda q, b: (  # main.py:33-37
+                200, self.registry.render(), PROM_CONTENT_TYPE
             ),
-        )
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, daemon=True
-        )
-        self._thread.start()
+        }
+        super().__init__(host, port, RouteHandler, routes)
 
-    @property
-    def port(self) -> int:
-        return self._httpd.server_address[1]
+    def _track(self, query: str, body: bytes) -> tuple[int, Any]:
+        try:
+            payload = json.loads(body)
+        except (ValueError, RecursionError):
+            return 422, {"detail": [{"loc": "body", "msg": "invalid JSON"}]}
+        errs = validate_event(payload)
+        if errs:
+            # FastAPI model validation rejects BEFORE the handler body
+            # runs — 422s touch no counter (track.py:52 is only reached
+            # with a valid AnalyticsEvent)
+            return 422, {"detail": errs}
+        start = time.time()
+        self.requests.inc()  # track.py:52
+        try:
+            self.producer.send(payload)
+        except Exception:  # noqa: BLE001 — the producer-error reply
+            self.errors.inc()  # track.py:55-56
+            return 500, {"detail": "produce failed"}
+        finally:
+            self.latency.observe(time.time() - start)  # :79
+        return 202, {"status": "accepted"}  # track.py:31-34,79
 
     def flush(self, spark) -> int:
         return self.producer.flush()
-
-    def close(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()

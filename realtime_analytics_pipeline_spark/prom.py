@@ -67,6 +67,8 @@ class PromRegistry:
 
 
 class Counter:
+    _type = "counter"
+
     def __init__(self, name: str, help_: str, lock: threading.Lock) -> None:
         self.name, self.help, self._lock = name, help_, lock
         self._value = 0.0
@@ -82,38 +84,23 @@ class Counter:
     def _render(self) -> list[str]:
         return [
             f"# HELP {self.name} {self.help}",
-            f"# TYPE {self.name} counter",
+            f"# TYPE {self.name} {self._type}",
             f"{self.name} {_fmt(self._value)}",
         ]
 
 
-class Gauge:
-    def __init__(self, name: str, help_: str, lock: threading.Lock) -> None:
-        self.name, self.help, self._lock = name, help_, lock
-        self._value = 0.0
+class Gauge(Counter):
+    """A counter that may also be set and go down."""
+
+    _type = "gauge"
 
     def set(self, v: float) -> None:
         with self._lock:
             self._value = v
 
-    def inc(self, amount: float = 1.0) -> None:
-        with self._lock:
-            self._value += amount
-
     def dec(self, amount: float = 1.0) -> None:
         with self._lock:
             self._value -= amount
-
-    @property
-    def value(self) -> float:
-        return self._value
-
-    def _render(self) -> list[str]:
-        return [
-            f"# HELP {self.name} {self.help}",
-            f"# TYPE {self.name} gauge",
-            f"{self.name} {_fmt(self._value)}",
-        ]
 
 
 class Histogram:

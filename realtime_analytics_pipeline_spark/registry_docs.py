@@ -3153,8 +3153,7 @@ FROM cand WHERE rn = 1
 """
 
 
-@register("docs_winnowing_fingerprints", _WINNOW_SQL)
-def q_docs_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS winnowing fingerprints (Schleimer et al., SIGMOD'03): k=5
     polynomial rolling hash + rightmost-min winnow over w=4 windows —
     the brief's rolling-hash document fingerprint, fingerprint-for-
@@ -3178,6 +3177,9 @@ def q_docs_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pos").cast("bigint").alias("pos"),
         F.col("fp_hash").cast("bigint").alias("fp_hash"),
     )
+
+
+register("docs_winnowing_fingerprints", _WINNOW_SQL)(_winnowing)
 
 
 _WINNOW_OVERLAP_SQL = f"""
@@ -3236,25 +3238,8 @@ def q_docs_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("docs_winnowing_fingerprints_kernel", _WINNOW_SQL)
-def q_docs_winnowing_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-kernel twin of docs_winnowing_fingerprints (same oracle):
-    the 100 TB winnowing path — vectorized numpy rolling hash +
-    rightmost-min winnow over mapInPandas, ~30 µs/doc vs the
-    expression-tree spec form's ~4 ms/doc. Row-set parity with the
-    spec form is pytest-pinned (tests/test_text_dedup_properties.py)."""
-    from realtime_analytics_pipeline_spark.operators.text_analysis import (
-        winnowing_fingerprints_kernel,
-    )
-
-    fps = winnowing_fingerprints_kernel(
-        load_table(spark, sf_dir, "documents")
-    )
-    return fps.select(
-        "doc_id",
-        F.col("pos").cast("bigint").alias("pos"),
-        F.col("fp_hash").cast("bigint").alias("fp_hash"),
-    )
+# the kernel twin's name runs the same body under the same oracle
+register("docs_winnowing_fingerprints_kernel", _WINNOW_SQL)(_winnowing)
 
 
 # --------------------------------------------------------------------------

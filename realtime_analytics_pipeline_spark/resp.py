@@ -13,8 +13,8 @@ RESP2 over TCP with true pipelining (one write, N replies).
 ``RespCacheRepository`` makes each write batch one round trip
 (HSET/EXPIRE/ZADD per window, then one ZREMRANGEBYRANK per touched
 index) and each window-list read two (ZREVRANGE, then every HGETALL
-in one pipeline). ``MiniRedisServer`` is a stdlib-socketserver Redis
-subset (hashes, sorted sets, expiry); a production Redis is a
+in one pipeline). ``MiniRedisServer`` is a Redis subset (hashes, sorted
+sets, expiry) served by ``server.TcpServer``; a production Redis is a
 host:port change. Only serving-sized data crosses this socket: the
 store keeps window_retention_count=120 windows per type.
 """
@@ -29,6 +29,7 @@ from typing import Any
 
 from realtime_analytics_pipeline_spark.config import DEFAULT_CONFIG
 from realtime_analytics_pipeline_spark.functions.coerce import convert_types
+from realtime_analytics_pipeline_spark.server import TcpServer
 
 # --- shared/constants/redis_keys.py mirror -------------------------------
 
@@ -259,11 +260,8 @@ class _Store:
 
 class _MiniHandler(socketserver.BaseRequestHandler):
     def handle(self) -> None:
-        # one sendall per reply: without TCP_NODELAY, Nagle holds a
-        # pipeline's second reply until the client's delayed ACK
-        self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         reader = _Reader(self.request)
-        store: _Store = self.server.store  # type: ignore[attr-defined]
+        store: _Store = self.server.app  # type: ignore[attr-defined]
         while True:
             try:
                 cmd = reader.read_reply()
@@ -341,26 +339,9 @@ class _MiniHandler(socketserver.BaseRequestHandler):
             raise ValueError(f"unknown command '{name}'")
 
 
-class MiniRedisServer:
+class MiniRedisServer(TcpServer):
     """In-process RESP2 server over the command subset the cache
-    repository uses. ``port=0`` binds ephemeral."""
+    repository uses."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0) -> None:
-        class _Srv(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self._srv = _Srv((host, port), _MiniHandler)
-        self._srv.store = _Store()  # type: ignore[attr-defined]
-        self._thread = threading.Thread(
-            target=self._srv.serve_forever, daemon=True
-        )
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.server_address[1]
-
-    def close(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
+        super().__init__(host, port, _MiniHandler, _Store())

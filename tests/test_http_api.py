@@ -146,6 +146,27 @@ def test_unknown_route_404(server):
     assert ei.value.code == 404
 
 
+def test_keepalive_survives_404(server):
+    """The cache app speaks HTTP/1.1 keep-alive: a 404 carries
+    Content-Length, so a second GET on the same connection is served
+    without a reconnect."""
+    import http.client
+
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=5)
+    try:
+        conn.request("GET", "/metrics/nope")
+        r = conn.getresponse()
+        r.read()
+        assert r.status == 404
+        sock = conn.sock
+        conn.request("GET", "/healthz")
+        r = conn.getresponse()
+        assert r.status == 200 and json.loads(r.read()) == {"status": "ok"}
+        assert sock is not None and conn.sock is sock
+    finally:
+        conn.close()
+
+
 def test_readyz_503_when_store_unready():
     """health.py:15-19: plain-text 503 'not ready' before readiness."""
     redis = MiniRedisServer()

@@ -292,3 +292,65 @@ def test_metrics_endpoint_prometheus_wire_format(tmp_path):
         assert counts == sorted(counts)
     finally:
         srv.close()
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_bad_content_length_replies_400(tmp_path, length):
+    """A Content-Length that is not a non-negative integer gets a 400
+    that closes the connection, as uvicorn answers a malformed
+    request; it does not drop the connection unanswered or wait for a
+    body whose end is unknown."""
+    import http.client
+
+    srv = IngestionHttpServer(str(tmp_path / "t"))
+    conn = http.client.HTTPConnection("127.0.0.1", srv.port, timeout=3)
+    try:
+        conn.putrequest("POST", "/analytics/track")
+        conn.putheader("Content-Type", "application/json")
+        conn.putheader("Content-Length", length)
+        conn.endheaders(json.dumps(_wire_event(0, "u1")).encode())
+        r = conn.getresponse()
+        r.read()
+        assert r.status == 400
+        assert r.getheader("Connection") == "close"
+        assert srv.producer.pending() == 0
+    finally:
+        conn.close()
+        srv.close()
+
+
+def test_failed_flush_keeps_its_events(spark, tmp_path, monkeypatch):
+    """Every buffered event was answered 202, so a flush whose produce
+    raises puts its batch back: the next flush writes it, in seq
+    order, ahead of the sends that arrived meanwhile."""
+    from realtime_analytics_pipeline_spark import ingestion_api
+
+    feed = str(tmp_path / "t")
+    producer = ingestion_api.BufferedEventProducer(feed)
+    real = ingestion_api.produce_keyed
+    calls = []
+
+    def flaky(table, *args, **kwargs):
+        calls.append(table.column("seq").to_pylist())
+        if len(calls) == 1:
+            raise OSError("injected produce failure")
+        return real(table, *args, **kwargs)
+
+    monkeypatch.setattr(ingestion_api, "produce_keyed", flaky)
+    for i in range(3):
+        ev = _wire_event(i, f"u{i}")
+        assert validate_event(ev) == []
+        producer.send(ev)
+    with pytest.raises(OSError, match="injected"):
+        producer.flush()
+    assert producer.pending() == 3
+    ev = _wire_event(3, "u0")
+    validate_event(ev)
+    producer.send(ev)
+    assert producer.flush() == 4
+    assert calls == [[0, 1, 2], [0, 1, 2, 3]]
+    assert producer.pending() == 0
+    rows = read_committed(spark, feed).select("seq", "value").collect()
+    assert sorted(
+        (r.seq, json.loads(r.value)["timestamp"]) for r in rows
+    ) == [(i, 1704067200000 + i * 1000) for i in range(4)]
