@@ -32,8 +32,7 @@ def coerce_ts_ms(col: Column | str) -> Column:
     - otherwise try ISO-8601: ``try_to_timestamp`` after the ``Z`` →
       ``+00:00`` normalization the reference applies, fractional
       seconds included;
-    - unparseable → null (the reference logs-and-drops; the DLQ parse
-      chain is the observable variant).
+    - unparseable → null (the reference logs-and-drops).
 
     DELIBERATE DIVERGENCE (documented, parity-test-pinned): the
     reference's ``_coerce_ts`` only int-passes values that are already

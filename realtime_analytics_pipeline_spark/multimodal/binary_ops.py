@@ -12,10 +12,10 @@ Design (100 TB posture):
   (``decode_ppm``, round-11) and RIFF/PCM WAV audio (``decode_wav``,
   round-12) — both are genuine on-disk formats whose parsers are
   ~25 lines of stdlib+numpy, so the decode slot is working code, not
-  a stub. COMPRESSED codecs (JPEG/PNG/mp3/video) still dispatch to
-  NotImplementedError: PIL/ffmpeg are not in this container; the
-  Spark-side plumbing — schema, batch shape, partitioning, UDF
-  signature — is identical either way.
+  a stub. COMPRESSED codecs (JPEG/PNG/mp3/video) have no decoder
+  here: PIL/ffmpeg are not in this container; the Spark-side
+  plumbing — schema, batch shape, partitioning, UDF signature — is
+  identical either way.
 """
 
 from __future__ import annotations
@@ -146,20 +146,6 @@ def decode_ppm_stream(payload: bytes) -> list:
         w, h, px, i = _parse_p6(payload, i)
         frames.append((w, h, px))
     return frames
-
-
-def decode_image(payload: bytes) -> object:
-    """Decoder dispatch: binary PPM decodes for real (decode_ppm);
-    compressed codecs (JPEG/PNG/audio/video) still need libraries not
-    present in this container — wire PIL/torchvision/ffmpeg here in
-    production."""
-    if payload[:2] == b"P6":
-        return decode_ppm(payload)
-    raise NotImplementedError(
-        "non-PPM media decoding requires codec libraries (e.g. PIL) not "
-        "present in this container; extract_features uses a "
-        "deterministic fake for those"
-    )
 
 
 PPM_W, PPM_H = 16, 10

@@ -15,7 +15,9 @@ convergence checks in this repo).
 At 100 TB the word-frequency dict after the first aggregation is
 vocabulary-sized, not corpus-sized — exactly how production BPE
 training scales: one heavy distributed pass, then cheap iterations on
-the dict. Merge application to full documents reuses the same fold.
+the dict. Encoding with a learned merge table is
+``encode_tokens_kernel``, which applies the same greedy merges per
+distinct word.
 """
 
 from __future__ import annotations
@@ -118,56 +120,6 @@ def train_bpe(docs: DataFrame, n_merges: int = 8) -> list[dict]:
             _merge_expr("syms", left, right, merged).alias("syms"),
         ).localCheckpoint()
     return merges
-
-
-def apply_bpe(docs: DataFrame, merges: list[dict], text_col: str = "text") -> DataFrame:
-    """Tokenize documents with a learned merge table: per-word char
-    split, merges applied in rank order — same fold, full corpus."""
-    out = docs.select(
-        "doc_id",
-        F.expr(
-            f"transform(split({text_col}, ' '), w -> split(w, ''))"
-        ).alias("words"),
-    )
-    # apply merges word-wise: fold each word's symbol array in rank order
-    col = "words"
-    for m in merges:
-        def q(s: str) -> str:
-            return "'" + s.replace("'", "\\'") + "'"
-        out = out.select(
-            "doc_id",
-            F.expr(
-                f"""
-                transform({col}, syms ->
-                    aggregate(
-                        syms,
-                        struct(cast(array() as array<string>) AS out,
-                               '' AS prev),
-                        (acc, t) -> CASE
-                            WHEN acc.prev = {q(m["left"])}
-                                 AND t = {q(m["right"])}
-                                THEN struct(
-                                    array_append(acc.out, {q(m["merged"])})
-                                        AS out, '' AS prev)
-                            WHEN acc.prev = ''
-                                THEN struct(acc.out AS out, t AS prev)
-                            ELSE struct(array_append(acc.out, acc.prev)
-                                        AS out, t AS prev)
-                            END,
-                        acc -> CASE WHEN acc.prev = '' THEN acc.out
-                                    ELSE array_append(acc.out, acc.prev)
-                               END))
-                """
-            ).alias("words"),
-        )
-        col = "words"
-    return out.select(
-        "doc_id",
-        F.expr("aggregate(words, 0L, (n, w) -> n + size(w))").alias(
-            "n_tokens"
-        ),
-        F.expr("size(flatten(words))").alias("n_tokens_check"),
-    )
 
 
 def encode_tokens_kernel(

@@ -103,50 +103,3 @@ def event_metrics_exact_streaming(
             "user_count",
         )
     )
-
-
-def event_metrics_proctime(
-    events: DataFrame,
-    window: str | None = None,
-    allowed_types: Sequence[str] | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """PROCESSING-TIME twin of ``event_metrics`` (SURVEY §2 S4).
-
-    The reference engine exposes a proc-time attribute alongside event
-    time (event_source.py); the engine's default stance is event-time
-    only (deterministic, oracle-checkable, replay-stable). This twin
-    exists for the workloads where proc-time is genuinely right —
-    freshness/ops dashboards ("what arrived in the last minute")
-    where replays SHOULD re-bucket: each row is stamped with the
-    processing-time clock at aggregation and windowed on that stamp.
-
-    Deliberately NOT oracle-gated: proc-time results depend on when
-    the job runs — the semantics pinned in tests are the invariants
-    that survive nondeterminism (nothing lost/duplicated, window
-    bounds aligned to the window size, stamps within the run's clock
-    envelope). In streaming, pair with a watermark on ``proc_time``;
-    state then evicts by wall clock, Flink's proc-time window
-    semantics.
-    """
-    window = window or config.metrics_window
-    allowed = list(allowed_types or config.allowed_event_types)
-    stamped = events.where(F.col("event_type").isin(allowed)).withColumn(
-        "proc_time", F.current_timestamp()
-    )
-    agg = (
-        stamped.groupBy(
-            F.window("proc_time", window).alias("w"), F.col("event_type")
-        )
-        .agg(
-            F.count("*").alias("event_count"),
-            F.count_distinct("user_id").alias("user_count"),
-        )
-    )
-    return agg.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        "event_type",
-        "event_count",
-        "user_count",
-    )

@@ -199,21 +199,6 @@ def kmv_sketches(
     )
 
 
-def kmv_distinct_estimates(sketches: DataFrame, k: int = 256) -> DataFrame:
-    """Distinct-count estimate per segment: exact when the segment has
-    fewer than k keys (the sketch holds them all), else (k−1)/τ with
-    τ = the k-th smallest hash."""
-    agg = sketches.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n_kept"), F.max("h").alias("tau")
-    )
-    return agg.select(
-        "segment",
-        F.when(F.col("n_kept") < k, F.col("n_kept").cast("double"))
-        .otherwise((F.lit(float(k - 1))) / F.col("tau"))
-        .alias("est_distinct"),
-    )
-
-
 def kmv_intersection_estimate(
     sketches: DataFrame, seg_a: str, seg_b: str, k: int = 256
 ) -> DataFrame:

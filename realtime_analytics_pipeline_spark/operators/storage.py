@@ -1,4 +1,4 @@
-"""Storage layout operators: partitioned + bucketed tables.
+"""Storage layout operators: file compaction and Z-ordered layout.
 
 The reference's at-rest layout is ClickHouse MergeTree with
 ``ORDER BY (window_start, key)`` (ddl.py:11,24,35). The Spark-native
@@ -7,38 +7,18 @@ equivalents, in increasing strength:
 1. partition + sortWithinPartitions parquet (streaming sink,
    streaming/sinks.py) — pruning on the partition key, clustered rows
    inside files for scan locality;
-2. **bucketed tables** (this module) — pre-shuffled storage by join
-   key: two tables bucketed identically join with ZERO exchange. At
-   100 TB this is the difference between re-shuffling a fact table per
-   query and never shuffling it at all.
+2. bucketed tables (``DataFrameWriter.bucketBy``) — pre-shuffled
+   storage by join key: two tables bucketed identically join with ZERO
+   exchange. At 100 TB this is the difference between re-shuffling a
+   fact table per query and never shuffling it at all.
+
+This module adds small-file compaction and a Z-order (Morton) layout
+whose footer min/max statistics prune on two columns at once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed managed table (hash-pre-partitioned by the
-    join key, optionally sorted inside buckets)."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> DataFrame:
-    """Join two identically bucketed tables — Catalyst sees the
-    matching output partitioning and elides both exchanges."""
-    return spark.table(left_table).join(spark.table(right_table), on)
 
 
 def compact_files(

@@ -202,45 +202,3 @@ def cache_metrics() -> dict[str, object]:
             "Latency of Redis batch apply operations.",
         ),
     }
-
-
-def storage_metrics() -> dict[str, object]:
-    """The storage service's nine families (core/metrics.py:3-22),
-    name-for-name and type-for-type."""
-    reg = PromRegistry()
-    return {
-        "registry": reg,
-        "batches": reg.counter(
-            "storage_batches_total", "Total successful batches processed"
-        ),
-        "records": reg.counter(
-            "storage_records_total", "Total records stored"
-        ),
-        "errors": reg.counter(
-            "storage_errors_total", "Total storage processing errors"
-        ),
-        "commits": reg.counter(
-            "storage_commits_total", "Total successful commits"
-        ),
-        "retries": reg.counter(
-            "storage_retries_total", "Total retry attempts for inserts"
-        ),
-        "batch_size": reg.histogram(
-            "storage_batch_size", "Distribution of per-topic batch sizes"
-        ),
-        "consume_cycle": reg.histogram(
-            "storage_consume_cycle_seconds",
-            "Total time of a consume + insert + commit cycle",
-        ),
-        "insert_latency": reg.histogram(
-            "storage_insert_latency_seconds",
-            "Time spent inserting a batch into ClickHouse",
-        ),
-        "in_flight": reg.gauge(
-            "storage_in_flight_inserts", "Current in-flight insert operations"
-        ),
-        "adaptive_batch_target": reg.gauge(
-            "storage_adaptive_batch_target",
-            "Current adaptive batch size target",
-        ),
-    }

@@ -14,7 +14,9 @@ payload[, content_type])``: a ``str`` is text/plain, anything else
 JSON. Every reply carries ``Content-Length``; an unknown route gets
 Starlette's JSON 404, a route that raises a logged plain-text 500, and
 a ``Content-Length`` that is not a non-negative integer a 400 that
-closes the connection, as h11 answers a malformed request.
+closes the connection, as h11 answers a malformed request. A
+connection idle for ``timeout`` seconds is closed, so an idle client
+does not hold its thread for ever.
 """
 
 from __future__ import annotations
@@ -83,6 +85,9 @@ class TcpServer(socketserver.TCPServer):
 
 class RouteHandler(BaseHTTPRequestHandler):
     protocol_version = "HTTP/1.1"
+    # uvicorn's keep-alive timeout is 5 s; 10 s also covers a client
+    # that connects a few seconds before its first request
+    timeout = 10.0
 
     def log_message(self, *args: Any) -> None:  # quiet test output
         pass

@@ -37,32 +37,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet normalized to the canonical engine layout."""
     return normalize_testdata_events(load_table(spark, sf_dir, "events"))
-
-
-def load_events_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Events from CSV with an EXPLICIT schema (never inferSchema — a
-    schema-inference pass reads the whole dataset twice at 100 TB) and
-    ISO-microsecond timestamp parsing; normalized to the same canonical
-    layout as the parquet source, so every downstream operator is
-    format-agnostic."""
-    raw = (
-        spark.read.schema(
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string"
-        )
-        .option("header", "true")
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-        .csv(path)
-    )
-    return normalize_testdata_events(raw)
-
-
-def load_events_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """Events from JSON-lines with an explicit schema (same rationale
-    as CSV: no inference pass, malformed rows surface under PERMISSIVE
-    null semantics rather than failing the scan)."""
-    raw = spark.read.schema(
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double, props string"
-    ).json(path)
-    return normalize_testdata_events(raw)

@@ -753,15 +753,3 @@ def topic_partitions(path: str) -> int | None:
         return None
     with open(meta_path) as fh:
         return json.load(fh)["num_partitions"]
-
-
-def list_topics(base: str) -> list[dict]:
-    out = []
-    if not os.path.isdir(base):
-        return out
-    for d in sorted(os.listdir(base)):
-        meta = os.path.join(base, d, TOPIC_META)
-        if os.path.exists(meta):
-            with open(meta) as fh:
-                out.append(json.load(fh))
-    return out

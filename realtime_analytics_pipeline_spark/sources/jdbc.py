@@ -141,10 +141,11 @@ def foreach_batch_jdbc_upsert(
         # the key column MUST be quoted: Spark's JDBC writer creates
         # case-sensitive quoted columns, so an unquoted reference folds
         # to uppercase and fails — and a swallowed DELETE failure
-        # silently breaks replay idempotence (caught in round 6 by the
-        # metered-sink test; the set-based replay assertion had masked
-        # it). The table name stays UNquoted — Spark emits it verbatim
-        # into CREATE TABLE, so the folded form is the real identifier.
+        # silently breaks replay idempotence. An unquoted key fails
+        # test_streaming_jdbc_upsert_idempotent_replay and
+        # test_streaming_jdbc_upsert_kill_restart_exactly_once. The
+        # table name stays UNquoted — Spark emits it verbatim into
+        # CREATE TABLE, so the folded form is the real identifier.
         ok, err = _jdbc_execute(
             spark,
             url,
@@ -153,65 +154,5 @@ def foreach_batch_jdbc_upsert(
         if not ok and "does not exist" not in err:
             raise RuntimeError(f"upsert DELETE failed on {table}: {err}")
         write_jdbc(batch_df, url, table, mode="append", driver=driver)
-
-    return write
-
-
-def foreach_batch_jdbc_upsert_metered(
-    url: str,
-    table: str,
-    key_col: str,
-    driver: str = DERBY_DRIVER,
-    metrics: dict | None = None,
-    max_retries: int = 3,
-    backoff_base: float = 0.5,
-) -> Callable[[DataFrame, int], None]:
-    """The storage processor's operational discipline wrapped around
-    the idempotent JDBC upsert (reference processor.py:95-145): a
-    bounded retry loop with capped exponential backoff around the
-    insert (STORAGE_RETRIES per attempt, STORAGE_ERRORS when
-    exhausted), batch-size/insert-latency/cycle histograms, in-flight
-    gauge, and a commit counter AFTER success — the commit-follows-
-    insert ordering the reference gets from committing Kafka offsets
-    only after every topic's insert landed. The retried unit is the
-    WHOLE delete+append upsert, which is idempotent by key, so a retry
-    after a partial failure converges instead of duplicating.
-
-    ``metrics``: a ``prom.storage_metrics()`` dict; pass None for the
-    bare unmetered sink (identical write path).
-    """
-    import time as _time
-
-    inner = foreach_batch_jdbc_upsert(url, table, key_col, driver)
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        if metrics is None:
-            inner(batch_df, batch_id)
-            return
-        cycle_t0 = _time.time()
-        n = batch_df.count()
-        metrics["batch_size"].observe(n)
-        metrics["in_flight"].inc()
-        insert_t0 = _time.time()
-        try:
-            attempts = 0
-            while True:
-                try:
-                    inner(batch_df, batch_id)
-                    break
-                except Exception:
-                    attempts += 1
-                    metrics["retries"].inc()
-                    if attempts >= max_retries:
-                        metrics["errors"].inc()
-                        raise
-                    _time.sleep(min(backoff_base * attempts, 2.0))
-            metrics["insert_latency"].observe(_time.time() - insert_t0)
-            metrics["batches"].inc()
-            metrics["records"].inc(n)
-            metrics["commits"].inc()  # commit follows successful insert
-        finally:
-            metrics["in_flight"].dec()
-            metrics["consume_cycle"].observe(_time.time() - cycle_t0)
 
     return write

@@ -182,57 +182,6 @@ def parse_wire_json(raw: DataFrame, watermark: str) -> DataFrame:
     )
 
 
-def parse_wire_json_with_dlq(
-    raw: DataFrame, watermark: str
-) -> tuple[DataFrame, DataFrame]:
-    """Dead-letter-queue variant of the parse chain: returns
-    (good_events, dead_letters).
-
-    The reference's envelope budgets ≤5% errors but silently drops
-    them (lenient JSON parse); operationally you want the rejects ON
-    A TABLE — raw payload + rejection reason — so ingest regressions
-    are observable and replayable. Same single pass over the source:
-    both branches are projections of one parsed frame, so Spark reads
-    each micro-batch once per sink (the DLQ side is a second sink on
-    the same lineage, coordinated like any multi-sink job).
-    """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    # the canonical Spark corrupt-record channel: PERMISSIVE mode puts
-    # the raw text of unparseable rows into the named extra field
-    # (from_json returns an all-null struct otherwise — a null check on
-    # the struct cannot tell malformed JSON from an empty envelope).
-    # Fresh StructType, NOT .add(): add() mutates the shared schema.
-    schema = StructType(
-        list(ANALYTICS_EVENT_SCHEMA.fields)
-        + [StructField("_corrupt_record", StringType())]
-    )
-    decoded = raw.select(F.col("value").cast("string").alias("payload"))
-    parsed = decoded.select(
-        "payload",
-        F.from_json(
-            F.col("payload"),
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-        ).alias("e"),
-    )
-    ok = parsed.where(
-        F.col("e._corrupt_record").isNull() & F.col("e.event.id").isNotNull()
-    )
-    good = normalize_wire_events(
-        ok.select("e.*").drop("_corrupt_record")
-    ).withWatermark("event_time", watermark)
-    dead = parsed.where(
-        F.col("e._corrupt_record").isNotNull() | F.col("e.event.id").isNull()
-    ).select(
-        "payload",
-        F.when(F.col("e._corrupt_record").isNotNull(), F.lit("malformed_json"))
-        .otherwise(F.lit("missing_event_id"))
-        .alias("reject_reason"),
-    )
-    return good, dead
-
-
 _sink_ids = itertools.count()
 
 

@@ -44,9 +44,3 @@ def progress_summary(progress: dict[str, Any]) -> dict[str, Any]:
         "commit_offsets_ms": dur.get("commitOffsets", 0),
         "latest_offset_ms": dur.get("latestOffset", 0),
     }
-
-
-def run_summary(query) -> list[dict[str, Any]]:
-    """All retained progress events of a (finished) query as metric
-    rows — the per-micro-batch throughput/state trace."""
-    return [progress_summary(p) for p in query.recentProgress]

@@ -1,4 +1,4 @@
-"""Generate QUERIES.md — the full gated-query inventory with
+"""Generate .tmp/QUERIES.md — the full gated-query inventory with
 verification provenance.
 
 One row per `queries()` entry: registering module, oracle kind
@@ -16,6 +16,8 @@ import sys
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entry  # noqa: E402
+
+OUT = ".tmp/QUERIES.md"
 
 
 def main() -> None:
@@ -64,9 +66,10 @@ def main() -> None:
         okind = "DuckDB SQL" if name in oracles else "rows-only"
         ev = driver.get(name, "replica")
         lines.append(f"| {name}{star} | {mod_of[name]} | {okind} | {ev} |")
-    with open("QUERIES.md", "w") as fh:
+    os.makedirs(".tmp", exist_ok=True)
+    with open(OUT, "w") as fh:
         fh.write("\n".join(lines) + "\n")
-    print(f"wrote QUERIES.md ({len(qs)} rows)")
+    print(f"wrote {OUT} ({len(qs)} rows)")
 
 
 if __name__ == "__main__":

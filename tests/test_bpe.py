@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from realtime_analytics_pipeline_spark.operators.bpe import (
-    apply_bpe,
     train_bpe,
     word_freq_dict,
 )
@@ -55,24 +54,6 @@ def test_bpe_training_matches_reference(spark):
     assert any(
         m["left"] in vocab_out or m["right"] in vocab_out for m in merges
     )
-
-
-def test_bpe_apply_reduces_token_count(spark):
-    docs = load_table(spark, SF_SMOKE, "documents").limit(50)
-    merges = train_bpe(
-        load_table(spark, SF_SMOKE, "documents"), 8
-    )
-    tok = apply_bpe(docs, merges).collect()
-    assert all(r.n_tokens == r.n_tokens_check for r in tok)
-    # merging strictly reduces symbol count vs raw char tokenization
-    raw = {
-        r.doc_id: r.n_chars_nospace
-        for r in docs.selectExpr(
-            "doc_id",
-            "length(replace(text, ' ', '')) AS n_chars_nospace",
-        ).collect()
-    }
-    assert all(r.n_tokens < raw[r.doc_id] for r in tok)
 
 
 # ---------------------------------------------------------------------------

@@ -231,33 +231,8 @@ def test_quota_sample_properties(spark):
 
 
 # --------------------------------------------------------------------------
-# dead-letter parse path + winsorization
+# winsorization
 # --------------------------------------------------------------------------
-
-
-def test_parse_wire_json_dlq_routes_rejects(spark):
-    from realtime_analytics_pipeline_spark.streaming.jobs import (
-        parse_wire_json_with_dlq,
-    )
-
-    payloads = [
-        ('{"event": {"id": "1", "type": "view"}, "user": {"id": "u1"},'
-         ' "timestamp": 1704067200000}'),
-        "not json at all {{{",
-        # valid JSON but the envelope is missing event.id
-        '{"user": {"id": "u2"}, "timestamp": 1704067200001}',
-    ]
-    raw = spark.createDataFrame(
-        [(p.encode("utf-8"),) for p in payloads], "value binary"
-    )
-    good, dead = parse_wire_json_with_dlq(raw, "10 seconds")
-    good_ids = [r["event_id"] for r in good.collect()]
-    assert good_ids == ["1"]
-    rejects = {r["reject_reason"] for r in dead.collect()}
-    assert dead.count() == 2
-    assert rejects == {"malformed_json", "missing_event_id"}
-    # the raw payload is preserved for replay
-    assert {r["payload"] for r in dead.collect()} == set(payloads[1:])
 
 
 def test_winsorized_clamps_only_tails(spark):

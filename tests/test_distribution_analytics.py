@@ -566,47 +566,6 @@ def test_basket_lift_identities(spark):
 
 
 # --------------------------------------------------------------------------
-# source-format breadth: CSV / JSON-lines roundtrip into the canonical
-# layout
-# --------------------------------------------------------------------------
-
-
-def test_csv_and_jsonl_sources_match_parquet(spark, tmp_path):
-    from realtime_analytics_pipeline_spark.sources.batch import (
-        load_events,
-        load_events_csv,
-        load_events_jsonl,
-    )
-
-    raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    csv_dir = str(tmp_path / "ev_csv")
-    json_dir = str(tmp_path / "ev_json")
-    iso = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-    raw.withColumn("ts", iso).write.option("header", "true").csv(csv_dir)
-    raw.withColumn("ts", iso).write.json(json_dir)
-
-    want = {
-        tuple(r)
-        for r in load_events(spark, "/root/testdata/sf0.001")
-        .select("event_id", "event_time", "event_type", "user_id", "value")
-        .collect()
-    }
-    for loader, path in (
-        (load_events_csv, csv_dir),
-        (load_events_jsonl, json_dir),
-    ):
-        got = {
-            tuple(r)
-            for r in loader(spark, path)
-            .select(
-                "event_id", "event_time", "event_type", "user_id", "value"
-            )
-            .collect()
-        }
-        assert got == want, loader.__name__
-
-
-# --------------------------------------------------------------------------
 # A-ES weighted sampling / CDC merge / null-safe join
 # --------------------------------------------------------------------------
 

@@ -619,7 +619,6 @@ def test_topic_admin_create_idempotent_and_conflict(feed, tmp_path):
         KEY_PARTITION_COL,
         TopicExistsError,
         create_topic,
-        list_topics,
         produce_keyed,
         read_committed,
         topic_partitions,
@@ -635,11 +634,6 @@ def test_topic_admin_create_idempotent_and_conflict(feed, tmp_path):
     with pytest.raises(TopicExistsError):
         create_topic(t1, num_partitions=5)
     assert topic_partitions(t1) == 3
-    create_topic(str(base / "session_metrics"), num_partitions=3)
-    assert [t["name"] for t in list_topics(str(base))] == [
-        "event_metrics",
-        "session_metrics",
-    ]
 
     # produce WITHOUT an explicit partition count: the topic's wins
     df = _keyed_input(feed, n_rows=60, n_users=10)

@@ -119,77 +119,6 @@ def test_streaming_jdbc_upsert_idempotent_replay(spark, tmp_path):
     assert replayed <= batch
 
 
-def test_metered_upsert_storage_metrics_and_retry(spark, tmp_path):
-    """The storage processor's operational envelope (processor.py:
-    95-145) around the JDBC upsert: success counts
-    batches/records/commits and returns in_flight to 0; a permanently
-    failing insert burns max_retries-1 retry increments, one error,
-    and raises — commit is NEVER counted on the failure path."""
-    from realtime_analytics_pipeline_spark.prom import storage_metrics
-    from realtime_analytics_pipeline_spark.sources.jdbc import (
-        foreach_batch_jdbc_upsert_metered,
-    )
-
-    url = derby_url(str(tmp_path / "derbydb3"))
-    df = spark.createDataFrame(
-        [(60000, "view", 3), (120000, "view", 4)],
-        "window_start_ms long, event_type string, event_count long",
-    )
-    # create the table through the plain writer first
-    from realtime_analytics_pipeline_spark.sources.jdbc import (
-        read_jdbc,
-        write_jdbc,
-    )
-
-    write_jdbc(df.limit(0), url, "metered_tbl", mode="overwrite")
-
-    m = storage_metrics()
-    sink = foreach_batch_jdbc_upsert_metered(
-        url, "metered_tbl", "window_start_ms", metrics=m
-    )
-    sink(df, 0)
-    assert m["batches"].value == 1
-    assert m["records"].value == 2
-    assert m["commits"].value == 1
-    assert m["retries"].value == 0
-    assert m["in_flight"].value == 0
-    assert read_jdbc(spark, url, "metered_tbl").count() == 2
-    # idempotent replay through the metered wrapper still converges
-    sink(df, 0)
-    assert read_jdbc(spark, url, "metered_tbl").count() == 2
-    assert m["commits"].value == 2
-
-    # permanent failure: the target exists with an incompatible schema,
-    # so every append attempt raises (a missing table would be benign —
-    # append auto-creates it)
-    write_jdbc(
-        spark.createDataFrame([("x",)], "other_col string"),
-        url, "bad_tbl", mode="overwrite",
-    )
-    bad = foreach_batch_jdbc_upsert_metered(
-        url, "bad_tbl", "window_start_ms", metrics=m,
-        max_retries=3, backoff_base=0.0,
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        bad(df, 1)
-    assert m["retries"].value == 3
-    assert m["errors"].value == 1
-    assert m["commits"].value == 2  # unchanged — commit follows success
-    assert m["in_flight"].value == 0
-    # wire rendering carries all ten storage families
-    body = m["registry"].render()
-    for fam in (
-        "storage_batches_total", "storage_records_total",
-        "storage_errors_total", "storage_commits_total",
-        "storage_retries_total", "storage_batch_size",
-        "storage_consume_cycle_seconds", "storage_insert_latency_seconds",
-        "storage_in_flight_inserts", "storage_adaptive_batch_target",
-    ):
-        assert f"# TYPE {fam} " in body, fam
-
-
 def test_streaming_jdbc_upsert_kill_restart_exactly_once(spark, tmp_path):
     """Chaos drill (VERDICT r08 item 8): CRASH the stream after the
     sink write but BEFORE Spark commits the epoch — the exact

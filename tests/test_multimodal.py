@@ -8,7 +8,6 @@ import pytest
 
 from realtime_analytics_pipeline_spark.multimodal.binary_ops import (
     attach_payload,
-    decode_image,
     extract_features,
 )
 from realtime_analytics_pipeline_spark.sources.batch import load_table
@@ -42,11 +41,6 @@ def test_extract_features_deterministic_and_total(spark):
         assert len(head) == 16  # 8 bytes hex
 
 
-def test_decode_stub_raises(spark):
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-
-
 def test_decode_ppm_roundtrip():
     """The real codec path (round-11): hand-build a tiny P6, decode,
     and check dims + exact pixels — including an uneven header layout
@@ -77,21 +71,6 @@ def test_decode_ppm_roundtrip():
     assert (w3, h3, got3.tobytes()) == (3, 2, px.tobytes())
     with pytest.raises(ValueError):
         decode_ppm(b"P5\n3 2\n255\n" + px.tobytes())
-
-
-def test_decode_image_dispatch():
-    """PPM decodes for real; compressed formats still raise."""
-    import numpy as np
-
-    from realtime_analytics_pipeline_spark.multimodal.binary_ops import (
-        decode_image,
-    )
-
-    px = np.zeros((1, 1, 3), dtype=np.uint8)
-    w, h, _ = decode_image(b"P6\n1 1\n255\n" + px.tobytes())
-    assert (w, h) == (1, 1)
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\xff\xd8\xff")  # JPEG
 
 
 def test_image_channel_stats_matches_numpy_reference(spark):

@@ -20,6 +20,7 @@ from realtime_analytics_pipeline_spark.resp import (
     RespCacheRepository,
     RespClient,
 )
+from realtime_analytics_pipeline_spark.server import RouteHandler, TcpServer
 
 from tests.test_ingestion_api import _wire_event
 
@@ -113,3 +114,37 @@ def test_close_leaves_no_thread(tmp_path, kind):
         srv.close()
         cli.close()
         redis.close()
+
+
+def test_idle_http_connection_times_out(monkeypatch):
+    """An idle keep-alive connection is closed after ``RouteHandler.timeout``
+    and its thread ends; a connection reused within the timeout is
+    served on the same socket."""
+    # finite, and longer than a client that connects a few seconds
+    # before its first request waits
+    assert RouteHandler.timeout is not None and RouteHandler.timeout > 5.3
+    monkeypatch.setattr(RouteHandler, "timeout", 0.5)
+    before = set(threading.enumerate())
+    srv = TcpServer("127.0.0.1", 0, RouteHandler,
+                    {("GET", "/ping"): lambda query, body: (200, "pong")})
+    conn = http.client.HTTPConnection("127.0.0.1", srv.port, timeout=5)
+    idle = socket.create_connection(("127.0.0.1", srv.port), timeout=1.5)
+
+    def ping():
+        conn.request("GET", "/ping")
+        r = conn.getresponse()
+        return r.status, r.read()
+
+    try:
+        assert ping() == (200, b"pong")
+        sock = conn.sock
+        time.sleep(0.25)
+        assert ping() == (200, b"pong")
+        assert conn.sock is sock
+        assert idle.recv(1) == b""  # the server closed it
+        # only the listener's thread is left
+        assert _within_1s(lambda: len(set(threading.enumerate()) - before) == 1)
+    finally:
+        idle.close()
+        conn.close()
+        srv.close()

@@ -167,32 +167,15 @@ def test_sliding_users_hll_accuracy_and_coverage(spark):
 
 
 def test_kmv_estimates_and_intersection(spark):
-    """KMV sketches: distinct estimates within 15% of truth at k=256,
-    intersection estimate within 20% (or exact when the union fits in
-    the sketch)."""
+    """KMV sketches: the intersection estimate is within 20% of truth
+    at k=256 (or exact when the union fits in the sketch)."""
     from realtime_analytics_pipeline_spark.operators.sketches import (
-        kmv_distinct_estimates,
         kmv_intersection_estimate,
         kmv_sketches,
     )
 
     ev = load_events(spark, SF_SMOKE)
     sk = kmv_sketches(ev, k=256).localCheckpoint()
-    exact = {
-        r["event_type"]: r["n"]
-        for r in ev.groupBy("event_type")
-        .agg(F.count_distinct("user_id").alias("n"))
-        .collect()
-    }
-    ests = {
-        r["segment"]: r["est_distinct"]
-        for r in kmv_distinct_estimates(sk, k=256).collect()
-    }
-    assert set(ests) == set(exact)
-    for seg, est in ests.items():
-        truth = exact[seg]
-        assert abs(est - truth) <= max(2, 0.15 * truth), (seg, est, truth)
-
     both_exact = (
         ev.where("event_type = 'view'")
         .select("user_id")

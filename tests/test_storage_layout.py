@@ -1,15 +1,9 @@
-"""Bucketed-table layout: co-located joins must elide exchanges."""
+"""Storage layout: partition pruning, compaction and Z-ordered files."""
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import functions as F
 
-from realtime_analytics_pipeline_spark.operators.storage import (
-    bucketed_join,
-    write_bucketed,
-)
 from realtime_analytics_pipeline_spark.schema import raw_ts_ms
 from realtime_analytics_pipeline_spark.sources.batch import load_table
 
@@ -36,43 +30,6 @@ def test_partition_pruning_on_day_partitioned_layout(spark, tmp_path):
     # and the filter is correct
     want = ev.where(day == "2024-01-05").count()
     assert back.count() == want
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    spark.sql("CREATE DATABASE IF NOT EXISTS bucketed_test")
-    spark.catalog.setCurrentDatabase("bucketed_test")
-
-    orders = load_table(spark, SF_SMOKE, "orders")
-    lineitem = load_table(spark, SF_SMOKE, "lineitem").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    write_bucketed(orders, "orders_b", "o_orderkey", 8)
-    write_bucketed(lineitem, "lineitem_b", "o_orderkey", 8)
-
-    # disable broadcast so the test proves bucketing (not broadcast)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "orders_b", "lineitem_b", "o_orderkey")
-        plan = plan_of(joined)
-        exchanges = re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)
-        assert len(exchanges) == 0, plan
-        assert "SortMergeJoin" in plan
-        # and it computes the right thing
-        n = joined.count()
-        want = (
-            load_table(spark, SF_SMOKE, "orders")
-            .join(
-                load_table(spark, SF_SMOKE, "lineitem"),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            )
-            .count()
-        )
-        assert n == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-        spark.catalog.setCurrentDatabase("default")
 
 
 def test_compaction_reduces_file_count_preserves_rows(spark, tmp_path):

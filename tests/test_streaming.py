@@ -318,7 +318,7 @@ def test_progress_metrics_trace(spark, tmp_path):
         read_events_stream_from_dir,
     )
     from realtime_analytics_pipeline_spark.streaming.metrics import (
-        run_summary,
+        progress_summary,
     )
     from tests.conftest import SF_SMOKE, write_time_ordered_stream_fixture
 
@@ -336,7 +336,7 @@ def test_progress_metrics_trace(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
-    trace = run_summary(q)
+    trace = [progress_summary(p) for p in q.recentProgress]
     assert trace, "progress events must be retained"
     total_rows = sum(t["num_input_rows"] for t in trace)
     expected = load_table(spark, SF_SMOKE, "events").count()
@@ -453,41 +453,6 @@ def test_streaming_observed_metrics_in_progress(spark, tmp_path):
     ev = spark.read.parquet(src)
     assert got[0] == ev.count()
     assert got[1] == ev.where(F.col("value").isNull()).count()
-
-
-def test_proctime_window_semantics(spark):
-    """S4 (proc-time attribute): the processing-time twin buckets rows
-    by the run's wall clock. Invariants that survive the inherent
-    nondeterminism: totals preserved (nothing lost/duplicated),
-    window bounds aligned to the 60 s width, every window inside the
-    run's clock envelope, and a replay re-buckets (same totals,
-    possibly different windows) — exactly why the event-time path is
-    the oracle-gated default."""
-    import datetime
-
-    from realtime_analytics_pipeline_spark.operators.event_metrics import (
-        event_metrics_proctime,
-    )
-    from realtime_analytics_pipeline_spark.sources.batch import load_events
-
-    ev = load_events(spark, SF_SMOKE)
-    t0 = datetime.datetime.now(datetime.timezone.utc) - datetime.timedelta(minutes=2)
-    out = event_metrics_proctime(ev).collect()
-    t1 = datetime.datetime.now(datetime.timezone.utc) + datetime.timedelta(minutes=2)
-    from realtime_analytics_pipeline_spark.config import DEFAULT_CONFIG
-
-    expected_total = ev.where(
-        F.col("event_type").isin(list(DEFAULT_CONFIG.allowed_event_types))
-    ).count()
-    assert sum(r.event_count for r in out) == expected_total
-    for r in out:
-        assert (r.window_end - r.window_start).total_seconds() == 60.0
-        assert r.window_start.second == 0 and r.window_start.microsecond == 0
-        ws = r.window_start.replace(tzinfo=datetime.timezone.utc)
-        assert t0 <= ws <= t1
-    # replay re-buckets by the NEW wall clock, totals intact
-    out2 = event_metrics_proctime(ev).collect()
-    assert sum(r.event_count for r in out2) == expected_total
 
 
 def test_idle_source_watermark_policy_max(spark, tmp_path):
