@@ -43,9 +43,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from realtime_analytics_pipeline_spark import registry  # noqa: E402
-from realtime_analytics_pipeline_spark import registry_docs  # noqa: E402
-from realtime_analytics_pipeline_spark.session import get_spark  # noqa: E402
+from realtime_analytics_pipeline_spark.operators.observability import (  # noqa: E402
+    run_query,
+    warm_up,
+)
+from realtime_analytics_pipeline_spark.session import (  # noqa: E402
+    SESSION_MEMO,
+    get_spark,
+)
 
 # Headline set: every operator family, excluding the O(n²)-by-design
 # exact-pair verifiers (jaccard/embedding all-pairs run in the
@@ -198,31 +203,31 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    # Streaming-jitter defense (VERDICT r09 "what's wrong" #2): the
-    # streaming replays are micro-batch-machinery-bound, and every
-    # trigger cycle fsyncs offset/commit logs to the checkpoint dir.
-    # /tmp is ext4 on this VM — contended-disk fsync latency produced
-    # 28% same-HEAD swings in streaming_events_per_sec. Route ALL
-    # bench temp state (streaming checkpoints, parquet handoffs,
-    # shuffle spill dirs) to tmpfs so the bench measures the engine,
-    # not the VM's disk queue. A real cluster checkpoints to fast
-    # local disks / object-store writers; sf0.1 state is MBs.
+def open_session(app_name: str):
+    """``get_spark`` with every temp file of the run on tmpfs.
+
+    Streaming-jitter defense (VERDICT r09 "what's wrong" #2): the
+    streaming replays are micro-batch-machinery-bound, and every
+    trigger cycle fsyncs offset/commit logs to the checkpoint dir. On
+    a contended ext4 /tmp, fsync latency produced 28% same-HEAD swings
+    in streaming_events_per_sec. All temp state (streaming
+    checkpoints, parquet handoffs, shuffle spill dirs) goes to tmpfs,
+    so the run measures the engine, not the disk queue. A real cluster
+    checkpoints to fast local disks / object-store writers; sf0.1
+    state is MBs.
+    """
     shm_tmp = None
     if os.path.isdir("/dev/shm"):
         import shutil
         import tempfile
 
-        shm_tmp = "/dev/shm/rtap_bench_tmp"
+        shm_tmp = f"/dev/shm/{app_name}_tmp"
         shutil.rmtree(shm_tmp, ignore_errors=True)
         os.makedirs(shm_tmp, exist_ok=True)
         os.environ["TMPDIR"] = shm_tmp
         os.environ.setdefault("SPARK_LOCAL_DIRS", shm_tmp)
         tempfile.tempdir = None  # drop the cached tempdir choice
-    spark = get_spark("rtap-spark-bench")
+    spark = get_spark(app_name)
     if shm_tmp is not None:
         # queries without an explicit checkpointLocation (memory-sink
         # replays) otherwise checkpoint under java.io.tmpdir on disk
@@ -231,22 +236,15 @@ def main() -> None:
             os.path.join(shm_tmp, "ckpt"),
         )
     spark.sparkContext.setLogLevel("ERROR")
-    # warm the JVM through the real code paths (parquet scan + shuffle +
-    # codegen) at the smallest SF so first-measured-query overhead is
-    # execution, not bring-up
-    registry.QUERIES["event_metrics_1m"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # ...and warm the PYTHON worker / Arrow path too: the gemm and
-    # Python-data-source headliners otherwise pay daemon spawn + Arrow
-    # init on their first rep, which is what kept flagging
-    # sim_cosine_topk_blas / pyds_feed_scan as 'contended' every round
-    registry.QUERIES["sim_cosine_topk_blas"](
-        spark, "/root/testdata/sf0.001"
-    ).write.format("noop").mode("overwrite").save()
-    registry.QUERIES["pyds_feed_scan"](
-        spark, "/root/testdata/sf0.001"
-    ).write.format("noop").mode("overwrite").save()
+    return spark
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+    spark = open_session("rtap-spark-bench")
+    warm_up(spark)
 
     # Machine-drift calibration (VERDICT r06 item 4): this VM shows
     # 2-4x wall-clock noise round-to-round, and r06's uniform +28%
@@ -323,32 +321,24 @@ def main() -> None:
     contended: list[str] = []
     # Cold-vs-warm honesty (VERDICT r13 item 1): a few queries share
     # session-memoized intermediates (bounded-CC pairs, md5 corpus
-    # signatures, k-means cells). Unscoped, rep 1 of the FIRST
-    # consuming query builds the frame and every later rep and sibling
-    # query reuses it — so their medians measured warm-memo reps.
-    # Bumping the memo epoch before every timed rep makes each rep
-    # rebuild everything it consumes inside its own timed region: the
-    # reported median is the honest COLD per-query cost. Each epoch
-    # change also frees the previous epoch's checkpointed frames, so
-    # the reps do not pile up pinned blocks. Queries that
-    # did build a memo get ONE extra untimed-epoch (warm) rep, reported
-    # separately in BENCH_LOCAL's queries_warm — the shared-index
-    # production shape, measured instead of silently blended in.
+    # signatures, k-means cells). Each timed rep runs in its own memo
+    # epoch (run_query), so it rebuilds everything it consumes inside
+    # its own timed region: the reported median is the honest COLD
+    # per-query cost. Queries that did build a memo get ONE warm
+    # (memo-hit) rep, reported separately in BENCH_LOCAL's
+    # queries_warm — the shared-index production shape, measured
+    # instead of silently blended in.
     warm: dict[str, float] = {}
     rep_seq = 0
     for name in HEADLINE:
-        fn = registry.QUERIES[name]
-        builds_before = registry_docs.memo_build_count()
+        builds_before = SESSION_MEMO.build_count()
 
         def one_run(cold: bool = True) -> float:
             nonlocal rep_seq
-            if cold:
-                rep_seq += 1
-                registry_docs.set_memo_epoch(f"bench:{rep_seq}")
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            return time.time() - t0
+            rep_seq += 1
+            epoch = f"bench:{rep_seq}" if cold else ""
+            run = run_query(spark, name, sf_dir, epoch)
+            return run.build_s + run.exec_s
 
         # streaming replays are micro-batch-machinery-bound (higher
         # variance class than CPU-bound queries, VERDICT r09): give
@@ -372,9 +362,11 @@ def main() -> None:
         timings[name] = round(statistics.median(runs), 3)
         spread[name] = [round(min(runs), 3), round(max(runs), 3)]
         warm_note = ""
-        if registry_docs.memo_build_count() > builds_before:
+        if SESSION_MEMO.build_count() > builds_before:
             # this query built at least one shared intermediate during
-            # its cold reps: also measure one warm (memo-hit) rep
+            # its cold reps: fill the default epoch's memo, then time
+            # one rep that reads it
+            one_run(cold=False)
             warm[name] = round(one_run(cold=False), 3)
             warm_note = f" warm {warm[name]:.2f}s"
         print(
@@ -383,7 +375,6 @@ def main() -> None:
             f"x{len(runs)}{warm_note}",
             file=sys.stderr,
         )
-    registry_docs.set_memo_epoch("")
 
     total = round(sum(timings.values()), 3)
     # noise-floor total: VM noise is strictly ADDITIVE, so the sum of
@@ -445,12 +436,17 @@ def main() -> None:
     # round-numbered file — the next round in progress is
     # 1 + max(committed BENCH_r{N}.json) — so per-query medians
     # survive for the driver's round-over-round comparison.
+    # The name carries the engine core count, so runs at different
+    # core counts in one round keep their own files.
     rounds = [
         int(m.group(1))
         for f_name in os.listdir(repo_dir)
         if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f_name))
     ]
-    snap = f"BENCH_LOCAL_r{(max(rounds) + 1) if rounds else 0}.json"
+    snap = (
+        f"BENCH_LOCAL_r{(max(rounds) + 1) if rounds else 0}"
+        f"_c{spark.sparkContext.defaultParallelism}.json"
+    )
     with open(os.path.join(repo_dir, snap), "w") as f:
         json.dump(local_payload, f)
     headline = {

@@ -170,11 +170,17 @@ def read_events_stream_from_kafka(
 def parse_wire_json(raw: DataFrame, watermark: str) -> DataFrame:
     """value bytes -> canonical event columns (shared by Kafka source
     and any file/socket JSON transport)."""
+    # The generator keeps the parse in one place: through a plain
+    # projection Catalyst pushes each job's filters (event_id, event
+    # type, load time) down as their own pruned from_json calls and
+    # then parses the row again for the projection.
     parsed = raw.select(
-        F.from_json(
-            F.col("value").cast("string"), ANALYTICS_EVENT_SCHEMA
-        ).alias("e")
-    ).select("e.*")
+        F.inline(
+            F.array(
+                F.from_json(F.col("value").cast("string"), ANALYTICS_EVENT_SCHEMA)
+            )
+        )
+    )
     events = normalize_wire_events(parsed)
     # lenient-parse semantics: drop rows whose envelope failed to parse
     return events.where(F.col("event_id").isNotNull()).withWatermark(

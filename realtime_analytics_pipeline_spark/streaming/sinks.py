@@ -101,7 +101,10 @@ def foreach_batch_partitioned_parquet(
                 "_part", F.date_format(partition_col, "yyyyMMddHH")
             )
             .withColumn("_batch", F.lit(batch_id))
-            .sortWithinPartitions(*sort_cols)
+            # the writer sorts each task by the partition columns first;
+            # leading with them makes that sort this one, so the files
+            # keep the ORDER BY within each partition
+            .sortWithinPartitions("_part", "_batch", *sort_cols)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_part", "_batch")

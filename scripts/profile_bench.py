@@ -1,17 +1,18 @@
-"""Per-query profiling for the optimization rounds (guide §1).
+"""Per-query profile of registry queries: the A/B and shuffle-evidence
+harness, measured by the same recorder, warm-up and cold memo epochs as
+bench.py.
 
-For each named query (default: the bench HEADLINE set), at
-$SPARK_GRAFT_SF_DIR:
-  - time plan CONSTRUCTION (the Python fn(spark, sf_dir) call) and
-    EXECUTION (noop sink) separately, over N reps;
-  - count Spark jobs/stages/tasks launched during execution via the
-    status tracker deltas;
-  - optionally dump .explain("formatted") to <dir>/<q><suffix>.txt
-    (keep dumps under the gitignored .tmp/).
+For each named query (default: bench.py's HEADLINE set), over --reps
+cold runs: min and median wall seconds, the build/exec split (the
+Python call that builds the frame vs the noop write), the Spark job
+count, and shuffle read/write and disk-spill bytes. One line per query
+goes to stdout, the table to .tmp/SHUFFLE.md; --plans also writes
+each query's formatted physical plan to .tmp/PLANS.md, and --json
+writes every run's record.
 
 Usage:
-  python scripts/profile_bench.py [--reps 3] [--plans .tmp/plans/r13 --suffix _before]
-                                  [--only q1,q2,...] [--json OUT.json]
+  python scripts/profile_bench.py [name ...] [--sf SF_DIR] [--reps N]
+                                  [--plans] [--json OUT.json]
 """
 
 from __future__ import annotations
@@ -22,119 +23,99 @@ import json
 import os
 import statistics
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from realtime_analytics_pipeline_spark import registry  # noqa: E402
-from realtime_analytics_pipeline_spark.session import get_spark  # noqa: E402
+from realtime_analytics_pipeline_spark.operators.observability import (  # noqa: E402
+    QueryRun,
+    run_query,
+    warm_up,
+)
+
+OUT_DIR = ".tmp"
+
+
+def fmt_bytes(b: float) -> str:
+    if b == 0:
+        return "0"
+    for unit in ("B", "KiB", "MiB", "GiB"):
+        if b < 1024:
+            return f"{b:.0f} B" if unit == "B" else f"{b:.1f} {unit}"
+        b /= 1024
+    return f"{b:.1f} TiB"
+
+
+def summarize(runs: list[QueryRun]) -> dict[str, float]:
+    walls = [r.build_s + r.exec_s for r in runs]
+    # the lower median keeps job counts and byte counts whole
+    med = {f: statistics.median_low(getattr(r, f) for r in runs) for f in QueryRun._fields}
+    return {"min_s": min(walls), "median_s": statistics.median(walls), **med}
+
+
+def plan_text(spark, name: str, sf_dir: str) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        registry.QUERIES[name](spark, sf_dir).explain("formatted")
+    return buf.getvalue().strip()
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", default=bench.HEADLINE)
+    ap.add_argument(
+        "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    )
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--plans", default=None, help="directory for plan dumps")
-    ap.add_argument("--suffix", default="", help="plan filename suffix")
-    ap.add_argument("--only", default=None)
-    ap.add_argument("--json", default=None)
+    ap.add_argument("--plans", action="store_true", help=f"write {OUT_DIR}/PLANS.md")
+    ap.add_argument("--json", help="write every run's record to this file")
     args = ap.parse_args()
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    # mirror bench.py's tmpfs routing so streaming replays measure the
-    # engine, not the disk queue
-    if os.path.isdir("/dev/shm"):
-        import shutil
-        import tempfile
-
-        shm_tmp = "/dev/shm/rtap_prof_tmp"
-        shutil.rmtree(shm_tmp, ignore_errors=True)
-        os.makedirs(shm_tmp, exist_ok=True)
-        os.environ["TMPDIR"] = shm_tmp
-        os.environ.setdefault("SPARK_LOCAL_DIRS", shm_tmp)
-        tempfile.tempdir = None
-
-    import bench  # noqa: E402  (for HEADLINE)
-
-    names = (
-        [n.strip() for n in args.only.split(",") if n.strip()]
-        if args.only
-        else list(bench.HEADLINE)
-    )
-
-    spark = get_spark("rtap-profile")
-    if os.path.isdir("/dev/shm"):
-        spark.conf.set(
-            "spark.sql.streaming.checkpointLocation",
-            os.path.join("/dev/shm/rtap_prof_tmp", "ckpt"),
-        )
-    spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    # warmup (same as bench)
-    registry.QUERIES["event_metrics_1m"](
-        spark, "/root/testdata/sf0.001"
-    ).write.format("noop").mode("overwrite").save()
-    registry.QUERIES["sim_cosine_topk_blas"](
-        spark, "/root/testdata/sf0.001"
-    ).write.format("noop").mode("overwrite").save()
-
-    tracker = sc.statusTracker()
-    results: dict[str, dict] = {}
-    for name in names:
-        fn = registry.QUERIES[name]
-        cons, execs, jobs = [], [], []
-        for rep in range(args.reps):
-            sc.setJobDescription(f"profile:{name}:rep{rep}")
-            j0 = tracker.getJobIdsForGroup(None)
-            n0 = len(sc.statusTracker().getJobIdsForGroup())
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            t1 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.time()
-            n1 = len(sc.statusTracker().getJobIdsForGroup())
-            cons.append(t1 - t0)
-            execs.append(t2 - t1)
-            jobs.append(n1 - n0)
-            sc.setJobDescription(None)
-        med_c = statistics.median(cons)
-        med_e = statistics.median(execs)
-        results[name] = {
-            "construct_sec": round(med_c, 3),
-            "exec_sec": round(med_e, 3),
-            "total_sec": round(med_c + med_e, 3),
-            "min_total": round(min(c + e for c, e in zip(cons, execs)), 3),
-            "jobs_per_run": max(jobs),
-        }
+    spark = bench.open_session("rtap-profile")
+    warm_up(spark)
+    runs: dict[str, list[QueryRun]] = {}
+    rows = []
+    for i, name in enumerate(args.names):
+        runs[name] = [
+            run_query(spark, name, args.sf, f"profile:{i}:{rep}")
+            for rep in range(args.reps)
+        ]
+        s = summarize(runs[name])
         print(
-            f"  {name}: construct {med_c:.2f}s exec {med_e:.2f}s "
-            f"jobs~{max(jobs)}",
-            file=sys.stderr,
+            f"{name}: min {s['min_s']:.2f}s median {s['median_s']:.2f}s"
+            f" (build {s['build_s']:.2f}s exec {s['exec_s']:.2f}s)"
+            f" jobs {s['jobs']:g} shuffle read {fmt_bytes(s['shuffle_read_bytes'])}"
+            f" write {fmt_bytes(s['shuffle_write_bytes'])}"
+            f" spill {fmt_bytes(s['spill_bytes'])}",
+            flush=True,
         )
-        if args.plans:
-            os.makedirs(args.plans, exist_ok=True)
-            try:
-                df = fn(spark, sf_dir)
-                buf = io.StringIO()
-                with redirect_stdout(buf):
-                    df.explain("formatted")
-                with open(
-                    os.path.join(args.plans, f"{name}{args.suffix}.txt"), "w"
-                ) as f:
-                    f.write(buf.getvalue())
-            except Exception as exc:  # streaming plans can't explain pre-run
-                with open(
-                    os.path.join(args.plans, f"{name}{args.suffix}.txt"), "w"
-                ) as f:
-                    f.write(f"(explain unavailable: {exc})\n")
+        rows.append(
+            f"| {name} | {s['min_s']:.2f} | {s['median_s']:.2f} | {s['build_s']:.2f}"
+            f" | {s['exec_s']:.2f} | {s['jobs']:g} | {fmt_bytes(s['shuffle_read_bytes'])}"
+            f" | {fmt_bytes(s['shuffle_write_bytes'])} | {fmt_bytes(s['spill_bytes'])} |"
+        )
 
-    total = sum(r["total_sec"] for r in results.values())
-    print(f"TOTAL {total:.1f}s over {len(results)} queries", file=sys.stderr)
+    os.makedirs(OUT_DIR, exist_ok=True)
+    with open(os.path.join(OUT_DIR, "SHUFFLE.md"), "w") as f:
+        f.write(
+            f"# Per-query profile ({os.path.basename(args.sf)}, noop sink,"
+            f" medians of {args.reps} cold reps)\n\n"
+            "Generated by `python scripts/profile_bench.py`. Map-only passes"
+            " move zero shuffle bytes; spill > 0 means partitions outgrew"
+            " executor memory at this SF.\n\n"
+            "| query | min s | median s | build s | exec s | jobs"
+            " | shuffle read | shuffle write | disk spill |\n"
+            "|---|---|---|---|---|---|---|---|---|\n" + "\n".join(rows) + "\n"
+        )
+    if args.plans:
+        with open(os.path.join(OUT_DIR, "PLANS.md"), "w") as f:
+            for name in args.names:
+                f.write(f"## {name}\n\n```\n{plan_text(spark, name, args.sf)}\n```\n\n")
     if args.json:
         with open(args.json, "w") as f:
-            json.dump(results, f, indent=1)
+            json.dump({n: [r._asdict() for r in rs] for n, rs in runs.items()}, f, indent=1)
 
 
 if __name__ == "__main__":

@@ -1,6 +1,7 @@
 """SessionMemo: shared DataFrame intermediates are built once per
 (application, epoch), and a new epoch frees the previous one's
-checkpoint blocks."""
+checkpoint blocks. The per-query recorder runs each query in its own
+epoch and leaves the default one behind."""
 
 from __future__ import annotations
 
@@ -12,6 +13,8 @@ from realtime_analytics_pipeline_spark.registry_docs import (
     memo_build_count,
     set_memo_epoch,
 )
+from realtime_analytics_pipeline_spark.operators.observability import run_query
+from realtime_analytics_pipeline_spark.session import SESSION_MEMO
 from tests.conftest import SF_SMOKE
 
 
@@ -47,3 +50,14 @@ def test_two_spellings_of_one_slice_build_once(spark):
         assert memo_build_count() == builds + 1
     finally:
         set_memo_epoch("")
+
+
+def test_run_query_records_jobs_and_shuffle(spark):
+    agg = run_query(spark, "event_metrics_1m", SF_SMOKE, "test:recorder:agg")
+    assert agg.jobs >= 1
+    assert agg.shuffle_write_bytes > 0 and agg.shuffle_read_bytes > 0
+    map_only = run_query(spark, "text_pii_redaction", SF_SMOKE, "test:recorder:map")
+    assert map_only.jobs >= 1
+    assert map_only.shuffle_read_bytes == map_only.shuffle_write_bytes == 0
+    assert SESSION_MEMO._epoch == ""
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

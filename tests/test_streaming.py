@@ -262,6 +262,17 @@ def test_parse_wire_json_lenient(spark):
     assert r.event_time.isoformat().startswith("2024-01-01T00:00:00")
 
 
+def test_parse_wire_json_parses_once_per_job(spark):
+    """Each standard job over the wire parse evaluates from_json once:
+    the jobs' pushed-down filters must not re-parse the row."""
+    from realtime_analytics_pipeline_spark.streaming.coordinator import standard_jobs
+
+    events = parse_wire_json(spark.createDataFrame([("{}",)], "value string"), "10 seconds")
+    for name, build in standard_jobs().items():
+        plan = build(events)._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json(") == 1, name
+
+
 def test_foreach_batch_partitioned_parquet_idempotent(spark, tmp_path):
     """Replaying a batch id must not duplicate rows (dynamic overwrite
     of that batch's partitions = idempotent per epoch, X5 parity)."""
@@ -303,6 +314,31 @@ def test_foreach_batch_partitioned_parquet_keeps_earlier_batches(spark, tmp_path
         write(batch, batch_id)
     got = spark.read.parquet(out_dir)
     assert sorted(r["count"] for r in got.collect()) == [5, 7]
+
+
+def test_foreach_batch_partitioned_parquet_files_sorted(spark, tmp_path):
+    """Every file the storage sink writes is ordered by its sort
+    columns (the MergeTree ORDER BY analog)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out_dir = str(tmp_path / "storage_sink")
+    batch = (
+        spark.range(5000, numPartitions=2)
+        .select(
+            F.timestamp_seconds(
+                F.lit(1704067200) + (F.col("id") * 7919) % 7200
+            ).alias("window_start"),
+            F.col("id").alias("count"),
+        )
+    )
+    sinks.foreach_batch_partitioned_parquet(out_dir, sort_cols=("window_start",))(batch, 0)
+    files = glob.glob(f"{out_dir}/_part=*/_batch=0/*.parquet")
+    assert len(files) >= 2
+    for path in files:
+        starts = pq.read_table(path, columns=["window_start"])["window_start"].to_pylist()
+        assert starts == sorted(starts), path
 
 
 def test_progress_metrics_trace(spark, tmp_path):
