@@ -35,16 +35,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("content_md5", StringType()),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

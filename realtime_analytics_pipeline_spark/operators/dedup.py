@@ -557,79 +557,6 @@ def minhash_incremental_candidates(
     )
 
 
-def minhash_incremental_verdicts(
-    corpus: DataFrame,
-    batch: DataFrame,
-    n: int = 1,
-    num_perm: int = 64,
-    bands: int = 8,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Production incremental NEAR-dup dedup (xxhash64 path): sign +
-    band the batch, key-join against the corpus band buckets
-    (minhash_incremental_candidates), then verify candidates
-    batch-side by signature-estimated Jaccard. Per batch doc:
-    n_candidates (distinct corpus docs sharing >= 1 band bucket),
-    n_verified (estimate >= threshold), best_eq (max matching
-    signature slots), verdict 'corpus_near_dup' | 'novel'. The
-    verification rule is INTEGER (eq >= ceil(threshold * num_perm)) —
-    no float compare. Candidates are bounded by band-bucket
-    co-occupancy; the batch signature table broadcasts (the increment
-    is small by construction), so only corpus signatures of actual
-    candidates are ever fetched."""
-    import math
-
-    min_eq = math.ceil(threshold * num_perm)
-    csig = minhash_signatures(corpus, n, num_perm)
-    bsig = minhash_signatures(batch, n, num_perm)
-    cands = minhash_incremental_candidates(
-        minhash_band_buckets(csig, num_perm, bands),
-        F.broadcast(minhash_band_buckets(bsig, num_perm, bands)),
-    )
-    eq = F.expr(
-        "size(filter(zip_with(bsig, csig, (x, y) -> x = y), v -> v))"
-    )
-    scored = (
-        cands.join(
-            F.broadcast(
-                bsig.select(
-                    F.col("doc_id").alias("batch_doc_id"),
-                    F.col("sig").alias("bsig"),
-                )
-            ),
-            "batch_doc_id",
-        )
-        .join(
-            csig.select(
-                F.col("doc_id").alias("corpus_doc_id"),
-                F.col("sig").alias("csig"),
-            ),
-            "corpus_doc_id",
-        )
-        .select("batch_doc_id", "corpus_doc_id", eq.alias("eq"))
-    )
-    agg = scored.groupBy("batch_doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
-        F.sum(F.when(F.col("eq") >= min_eq, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_verified"),
-        F.max("eq").cast("bigint").alias("best_eq"),
-    )
-    return (
-        batch.select(F.col("doc_id"))
-        .join(agg.withColumnRenamed("batch_doc_id", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
-            F.coalesce("n_verified", F.lit(0)).alias("n_verified"),
-            F.coalesce("best_eq", F.lit(0)).alias("best_eq"),
-            F.when(F.coalesce("n_verified", F.lit(0)) > 0, "corpus_near_dup")
-            .otherwise("novel")
-            .alias("verdict"),
-        )
-    )
-
-
 def simhash_pairs(
     documents: DataFrame, max_hamming: int = 3
 ) -> DataFrame:

@@ -10,7 +10,9 @@ Redis; these are the same capabilities as DataFrame operators:
   reads off the ZSET index → orderBy desc + limit / row_number.
 - T5 retention trim (repository.py:111-115, cache config.py:23-24):
   keep newest N windows.
-- T6 overview merge (services/cache/src/services/cache_service.py:31-38).
+
+The T6 overview merge (services/cache/src/services/cache_service.py:31-38)
+is the gated ``serving_overview`` query, built on ``top_n_windows``.
 
 Scale notes: the pivots aggregate to one row per window — cardinality
 (#windows) is tiny relative to input, so these run after the heavy
@@ -114,25 +116,3 @@ def retention_trim(
         .where(F.col("_rank") <= retain)
         .drop("_rank")
     )
-
-
-def overview(event_pivot: DataFrame, perf_pivot: DataFrame) -> DataFrame:
-    """T6: combined latest-event + latest-performance snapshot
-    (cache_service.py:31-38) as a single joined row."""
-    ev = top_n_windows(event_pivot, 1).select(
-        F.col("window_start").alias("event_window_start"),
-        *[
-            F.col(c).alias(f"event_{c}")
-            for c in event_pivot.columns
-            if c not in ("window_start", "window_end")
-        ],
-    )
-    pf = top_n_windows(perf_pivot, 1).select(
-        F.col("window_start").alias("perf_window_start"),
-        *[
-            F.col(c).alias(f"perf_{c}")
-            for c in perf_pivot.columns
-            if c not in ("window_start", "window_end")
-        ],
-    )
-    return ev.crossJoin(pf)

@@ -45,15 +45,6 @@ from pyspark.sql import functions as F
 
 from realtime_analytics_pipeline_spark.config import DEFAULT_CONFIG, EngineConfig
 
-_SESSION_OUT = [
-    "session_id",
-    "user_id",
-    "start_time",
-    "end_time",
-    "duration",
-    "page_count",
-]
-
 
 def session_metrics(
     events: DataFrame,

@@ -7,7 +7,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from realtime_analytics_pipeline_spark.functions.text import (
-    STOPWORDS,
     distinct_token_count,
     fingerprint,
     stopword_count,
@@ -98,9 +97,6 @@ def source_token_rollup(documents: DataFrame) -> DataFrame:
             F.round(F.avg("n_tokens"), 6).alias("avg_tokens"),
         )
     )
-
-
-_ = STOPWORDS  # re-export for oracle construction
 
 
 def gopher_quality_flags(documents: DataFrame) -> DataFrame:

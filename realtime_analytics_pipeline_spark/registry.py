@@ -473,240 +473,6 @@ _VERIFY_WINDOW = [
     # Refresh window: 1 virgin + 49 oldest-green re-verification slots; the 275 fresher greens keep their rows.
 ]
 
-_VERIFY_WINDOW_R10 = [
-    # ROUND 10 window, refreshed MID-ROUND (propose_window.py --refresh
-    # output pasted verbatim below) after the round's new oracled
-    # queries were registered: all 12 never-driver-verified names lead
-    # (2 round-9 bucketed-session virgins, dedup_jaccard_prefix_bounded,
-    # and the 9 round-10 additions — FS record linkage single-pass /
-    # multipass / EM estimator / blocking-quality audit, LPA
-    # communities, epoch shuffle, BPE fold + Arrow-kernel twin, A-ES
-    # weighted reservoir; every one replica-green at sf0.001 AND
-    # sf0.01 this session), then the 38 OLDEST-latest-green
-    # re-verification slots (r02-era rows). Expected after
-    # CORRECTNESS_r10: cumulative driver-green = 310/310 oracled.
-    "session_metrics_bucketed",  # registry
-    "streaming_session_metrics_bucketed",  # registry_streaming
-    "customers_record_linkage_fs",  # registry_relational
-    "customers_record_linkage_multipass",  # registry_relational
-    "dedup_jaccard_prefix_bounded",  # registry_docs
-    "docs_epoch_shuffle",  # registry_docs
-    "text_bpe_encode_tokens",  # registry_docs
-    "basket_graph_communities_lpa",  # registry_curation
-    "text_bpe_encode_tokens_kernel",  # registry_docs
-    "customers_blocking_quality",  # registry_relational
-    "customers_record_linkage_em",  # registry_relational
-    "sample_docs_reservoir_weighted",  # registry_docs
-    "tpch_q9_product_profit",  # registry_relational
-    "tpch_q4_order_priority",  # registry_relational
-    "tpch_q19_discounted_revenue",  # registry_relational
-    "tpch_q13_order_distribution",  # registry_relational
-    "tpch_q22_idle_customers",  # registry_relational
-    "tpch_q2_min_cost_supplier",  # registry_relational
-    "tpch_q21_sole_blamed_supplier",  # registry_relational
-    "sample_docs_weighted",  # registry_docs
-    "pack_token_budget",  # registry_docs
-    "text_gopher_flags",  # registry_docs
-    "emb_quantize_int8",  # registry_docs
-    "decontaminate_eval_overlap",  # registry_docs
-    "streaming_session_metrics",  # registry_streaming
-    "streaming_stateful_sessions",  # registry_streaming
-    "streaming_exact_dedup",  # registry_streaming
-    "streaming_topk_per_window",  # registry_streaming
-    "streaming_static_enrichment",  # registry_streaming
-    "streaming_interval_join_outer",  # registry_streaming
-    "multimodal_features",  # registry_multimodal
-    "orders_range_join_buckets",  # registry_parity
-    "performance_by_device",  # registry_parity
-    "session_metrics_devices",  # registry_parity
-    "props_json_extraction",  # registry_parity
-    "sql_interface_demo",  # registry_parity
-    "nation_order_volume_outer",  # registry_analytics
-    "events_running_totals",  # registry_analytics
-    "event_counts_salted",  # registry_analytics
-    "value_stats_by_type",  # registry_analytics
-    "event_types_per_user",  # registry_analytics
-    "cascade_rollup_1m_to_1h",  # registry_analytics
-    "tpch_q17_small_quantity",  # registry_analytics
-    "latest_event_per_user",  # registry_analytics
-    "value_percentiles_by_type",  # registry_analytics
-    "value_window_ranks",  # registry_analytics
-    "events_daily_gapfill_ma7",  # registry_analytics
-    "value_drift_daily",  # registry_analytics
-    "funnel_view_click_purchase",  # registry_analytics
-    "customer_spend_scd2",  # registry_analytics
-    # --- pool note (machine-generated by propose_window.py) ---
-    # Oracled: 310. Driver-green (CORRECTNESS_r*): 298. Never-driver-verified: 12.
-    # Refresh window: 12 virgin + 38 oldest-green re-verification slots; the 260 fresher greens keep their rows.
-]
-
-_VERIFY_WINDOW_R08 = [
-    # ROUND 8 window: the 50-name prefix of propose_window.py's 55-name
-    # never-driver-verified pool (the rotation VERDICT r07 item 2 asked
-    # for — round 7 never swapped the r06 list out, so the r07 driver
-    # run re-verified 50 already-green names). Zero overlap with the
-    # CORRECTNESS_r01-r07 green union. Flagships called out by VERDICT
-    # r06 item 6 / r07 item 3 are in: emb_knn_label_accuracy (gemm +
-    # in-kernel partial top-k), streaming_cusum_drift (stateful online
-    # drift), docs_tfidf_top_terms / docs_bm25_topk (lexical retrieval),
-    # dedup_bloom_prescreen, emb_dim_stats, dedup_overlap_containment.
-    # All 50 replica-verified at sf0.001 + sf0.01 pre-swap this round.
-    "lineitem_sortedness_audit",  # registry_relational
-    "orders_cohort_ltv_per_customer",  # registry_relational
-    "dedup_overlap_containment",  # registry_docs
-    "dedup_cross_source_matrix",  # registry_docs
-    "emb_dim_stats",  # registry_docs
-    "docs_unigram_entropy_by_source",  # registry_docs
-    "emb_standardized_sample",  # registry_docs
-    "docs_tfidf_top_terms",  # registry_docs
-    "docs_bm25_topk",  # registry_docs
-    "dedup_bloom_prescreen",  # registry_docs
-    "dedup_edit_distance_banded",  # registry_docs
-    "docs_ngram_novelty",  # registry_docs
-    "docs_quality_linear_hashed",  # registry_docs
-    "dedup_minhash_calibration",  # registry_docs
-    "emb_pair_cosine_hist",  # registry_docs
-    "dedup_incremental_batch",  # registry_docs
-    "emb_knn_label_accuracy",  # registry_docs
-    "streaming_cusum_drift",  # registry_streaming
-    "multimodal_shard_manifest",  # registry_multimodal
-    "doc_length_zscores",  # registry_analytics
-    "value_trend_by_type",  # registry_analytics
-    "events_decayed_engagement",  # registry_analytics
-    "orders_monthly_growth",  # registry_analytics
-    "events_hourly_seasonality",  # registry_analytics
-    "events_time_weighted_avg_daily",  # registry_analytics
-    "sessions_bounce_rate_daily",  # registry_analytics
-    "performance_daily_percentiles",  # registry_analytics
-    "events_value_equidepth",  # registry_analytics
-    "events_error_slo_5m",  # registry_analytics
-    "events_new_vs_returning",  # registry_analytics
-    "orders_priority_mix_drift",  # registry_analytics
-    "events_user_streaks",  # registry_analytics
-    "events_weekly_engagement_histogram",  # registry_analytics
-    "orders_interpurchase_time",  # registry_analytics
-    "events_type_correlation",  # registry_analytics
-    "events_ab_power",  # registry_analytics
-    "orders_revenue_trend_ols",  # registry_analytics
-    "parts_abc_xyz_matrix",  # registry_analytics
-    "events_type_hour_mi",  # registry_analytics
-    "events_daily_acf",  # registry_analytics
-    "orders_bullwhip_ratio",  # registry_analytics
-    "orders_open_aging",  # registry_analytics
-    "suppliers_return_outliers",  # registry_analytics
-    "users_velocity_features",  # registry_analytics
-    "orders_duplicate_invoices",  # registry_analytics
-    "orders_price_index_laspeyres",  # registry_analytics
-    "events_cusum_drift",  # registry_analytics
-    "orders_salted_skew_join",  # registry_analytics
-    "events_minute_gap_fill",  # registry_analytics
-    "events_seasonal_anomaly",  # registry_analytics
-    # --- pool note (machine-generated by propose_window.py) ---
-    # Oracled: 298. Driver-green (CORRECTNESS_r*): 239. Never-driver-verified pool: 59.
-    # Spilled to next round (9): events_value_histogram, segment_overlap_kmv, events_interarrival_stats, basket_graph_kcore, lineitem_zorder_skipping, dedup_jaccard_prefix_filtered, dedup_duplicate_spans, dedup_span_removal, users_activity_similarity_blas
-    # (the last 4 spills were registered mid-round-8 AFTER this window
-    # shipped — all replica-green both SFs; they lead the r09 window)
-    #
-    # RE-VERIFICATION POLICY for r09+ (adopted 2026-08-15, VERDICT r07
-    # item 6): once this window lands green, every oracled query has a
-    # driver row and the rotation objective flips from coverage to
-    # FRESHNESS. The r09 window = the 9 spill names above (virgin,
-    # they lead), then 41 re-verification slots filled oldest-green-first
-    # — CORRECTNESS_r01 rows first (earned against the retired
-    # nanos-bigint / pre-NTZ testdata+session regime), then r02, etc.,
-    # in registration order within a round. Rationale: an old green row
-    # certifies the query against data/flavors that no longer exist;
-    # freshness bounds how stale any certification can get (~every 5-6
-    # rounds at 50 slots/294 oracled). propose_window.py computes the
-    # never-verified pool; the oldest-green ordering reads each
-    # CORRECTNESS_r*.json's LATEST green round per name (a
-    # re-verified name is fresh and rotates to the back; fixed r09)
-    # (`--refresh` emits the list once CORRECTNESS_r08 lands).
-    # PRE-VERIFIED 2026-08-15: an earlier 50-name r09 prospect (8
-    # virgin spills + the 42 oldest r01/r02 greens) ran replica-green
-    # at sf0.01 — ALL MATCH, 50/50. The 9th virgin name
-    # (users_activity_similarity_blas, registered after that batch)
-    # was separately oracle-verified at BOTH SFs; with 9 virgins the
-    # r09 window takes the 41 oldest greens instead of 42.
-]
-
-_VERIFY_WINDOW_R06 = [
-    # ROUND 6 window (historical record; superseded by the r08 rotation
-    # above — every name below has a green row in CORRECTNESS_r06 and
-    # was redundantly re-verified green in CORRECTNESS_r07):
-    # 49 never-driver-verified names from
-    # the 80-name remaining pool (propose_window.py --all), plus
-    # `http_ingestion_roundtrip` retained in slot 1: it was round 5's
-    # only red row (virgin-session TIMESTAMP_NTZ trap) and must earn
-    # its green — deliberately FIRST so it meets the driver's untouched
-    # session again, now that register() self-tunes and the raw-ts
-    # helpers carry an NTZ branch. Selection follows VERDICT r05 item
-    # 3: BLAS gemm kernels lead (the vectorized-gemm capability has no
-    # driver row), then threshold-sweep/budget/ppl-bucket/impact-report
-    # anchors, as-of/point-in-time, attribution/AB, rate-limit and
-    # survival shapes, with capability-diverse docs/curation/analytics
-    # fills. The 30 names left for round 7 are listed in the NOTE
-    # below. 49 r05 greens demoted to tier 2.
-    "http_ingestion_roundtrip",
-    # BLAS / embedding kernels (capability anchors, never driver-run):
-    "sim_cosine_topk_blas",
-    "dedup_embedding_cosine_blas",
-    "sim_kmeans_lite",
-    "sim_label_centroids",
-    "emb_contrastive_pairs",
-    "emb_balanced_sample",
-    "emb_outlier_detection",
-    "emb_random_projection",
-    # Dedup / corpus-curation decision tooling:
-    "dedup_threshold_sweep",
-    "dedup_impact_report",
-    "dedup_cluster_sizes",
-    "dedup_modality_agreement",
-    "corpus_budget_selection",
-    "docs_ccnet_ppl_buckets",
-    "sample_docs_quota",
-    "sample_docs_aes_weighted",
-    # Text analytics never driver-run:
-    "text_normalize",
-    "text_unigram_logprob",
-    "text_sliding_chunks",
-    "text_langid_confusion",
-    "text_token_burstiness",
-    "docs_vocab_growth",
-    "docs_length_ks_by_source",
-    "docs_js_divergence_by_source",
-    "docs_quantile_normalize",
-    # As-of / point-in-time / temporal curation:
-    "asof_forward_next_error",
-    "lineitem_spend_point_in_time",
-    "value_drift_trailing7",
-    "events_value_winsorized",
-    "events_sliding_window_paned",
-    "events_forget_users",
-    # Attribution / AB / behavioral:
-    "attribution_linear_credit",
-    "attribution_latency_stats",
-    "events_ab_test_lift",
-    "funnel_time_constrained",
-    "events_user_paths",
-    "sessions_conversion_by_depth",
-    "events_survival_curve",
-    "events_rate_limited",
-    "events_markov_entropy_rate",
-    # Customers / orders relational analytics:
-    "customers_churn_risk",
-    "customers_decile_migration",
-    "customers_revenue_pareto",
-    "basket_rules_lift",
-    "orders_benford_check",
-    # Time-series / serving shapes:
-    "ts_dtw_pairs",
-    "events_ohlc_hourly",
-    "sessions_max_concurrency_daily",
-    "rollup_incremental_refresh",
-]
-
-
 
 def _apply_verify_window() -> None:
     assert len(_VERIFY_WINDOW) <= 50, "driver verifies only the first 50"

@@ -575,8 +575,8 @@ def q_forget_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion propagation: LEFT ANTI join removes every event of the
     requested users (requests stay distributed — broadcast if small,
     shuffle join if millions), then an audit rollup records kept vs
-    purged so the erasure is provable. The rewrite path would be
-    compact_files over the anti-joined frame."""
+    purged so the erasure is provable. The rewrite path would write
+    the anti-joined frame back over the table's files."""
     ev = load_events(spark, sf_dir)
     requests = ev.where(F.col("user_id").cast("long") % 97 == 0).select(
         "user_id"

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime_analytics_pipeline_spark.registry import register
+from realtime_analytics_pipeline_spark.session import scratch_dir
 from realtime_analytics_pipeline_spark.sources.feed import register_feed_source
 from realtime_analytics_pipeline_spark.streaming.jobs import (
     run_to_memory_table,
@@ -208,12 +209,10 @@ def q_feed_keyed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mangles any row, counts or integer-cents sums diverge. Partition
     assignment itself (engine-native xxhash64) is pinned by the
     produce_keyed contract tests, not the oracle."""
-    import tempfile
-
     from realtime_analytics_pipeline_spark.sources.feed import produce_keyed
 
     register_feed_source(spark)
-    path = tempfile.mkdtemp(prefix=f"rtap_keyed_{next(_counter)}_")
+    path = scratch_dir("keyed_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "_seq", F.col("event_id")
     )
@@ -266,7 +265,6 @@ def q_http_ingestion_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample. value rides the integer metrics.load_time slot as cents,
     per the repo's money discipline."""
     import json as _json
-    import tempfile
     import urllib.request
 
     from realtime_analytics_pipeline_spark.ingestion_api import (
@@ -292,7 +290,7 @@ def q_http_ingestion_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()  # bounded: exactly 500 rows by construction
     )
-    feed = tempfile.mkdtemp(prefix=f"rtap_ingest_{next(_counter)}_")
+    feed = scratch_dir("ingest_")
     srv = IngestionHttpServer(feed)
     try:
         for r in sample:

@@ -20,15 +20,11 @@ cents per the repo's money discipline before comparison.
 
 from __future__ import annotations
 
-import itertools
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime_analytics_pipeline_spark.registry import register
-
-_call = itertools.count()
+from realtime_analytics_pipeline_spark.session import scratch_dir
 
 _FORMATS_SQL = """
 SELECT event_type,
@@ -45,7 +41,7 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 @register("events_formats_roundtrip", _FORMATS_SQL)
 def q_events_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = tempfile.mkdtemp(prefix=f"rtap_fmt_{next(_call)}_")
+    base = scratch_dir("fmt_")
     from realtime_analytics_pipeline_spark.schema import raw_ts
 
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -137,7 +133,7 @@ def q_events_partitioned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_formats_store.py."""
     from realtime_analytics_pipeline_spark.schema import raw_ts
 
-    base = tempfile.mkdtemp(prefix=f"rtap_part_{next(_call)}_")
+    base = scratch_dir("part_")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev = raw.select(
         "event_id",
@@ -378,10 +374,10 @@ def q_lineitem_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     With Z-ordering a probe on EITHER dimension skips most files; a
     linear sort would skip only on its leading column. The gated form
-    now models the file split the way the production writer lays it
-    out (VERDICT r07 perf_weak note): storage.write_zordered
-    repartitionByRange's on __zkey, i.e. files are contiguous VALUE
-    ranges of the key; here the split is the deterministic twin —
+    models the file split the way a range-partitioned writer lays it
+    out (VERDICT r07 perf_weak note): repartitionByRange on __zkey
+    makes files contiguous VALUE ranges of the key; here the split is
+    the deterministic twin —
     file_id = (zkey − min) · 32 div (max − min + 1) — which is
     map-side after a broadcast 1-row bounds agg. No ntile, no global
     window, no single-task rank sort: the whole query is two broadcast
@@ -389,7 +385,7 @@ def q_lineitem_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     per file track the zkey distribution rather than being exactly
     equal — the same property a sampled repartitionByRange has.) See
     tests/test_storage_layout.py for the footer-range assertion on
-    actual parquet files written by write_zordered.
+    actual parquet files range-split on the same key.
     """
     from realtime_analytics_pipeline_spark.operators.storage import (
         zorder_key_int,

@@ -19,9 +19,6 @@ discipline the parquet-sink queries use, applied to the JDBC surface.
 
 from __future__ import annotations
 
-import itertools
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,6 +26,7 @@ from realtime_analytics_pipeline_spark.operators.event_metrics import (
     event_metrics,
 )
 from realtime_analytics_pipeline_spark.registry import ALLOWED, register
+from realtime_analytics_pipeline_spark.session import scratch_dir
 from realtime_analytics_pipeline_spark.sources.batch import load_events
 from realtime_analytics_pipeline_spark.sources.jdbc import (
     derby_url,
@@ -48,8 +46,6 @@ WHERE event_type IN ({_ALLOWED_SQL})
 GROUP BY 1, 2
 """
 
-_call = itertools.count()
-
 
 @register("jdbc_metrics_roundtrip", _JDBC_ROUNDTRIP_SQL)
 def q_jdbc_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,7 +55,7 @@ def q_jdbc_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JDBC read shape that scales), compared against the direct
     computation by the oracle. A fresh database directory per call
     keeps the query deterministic and re-runnable."""
-    db_dir = tempfile.mkdtemp(prefix=f"rtap_jdbc_{next(_call)}_")
+    db_dir = scratch_dir("jdbc_")
     url = derby_url(f"{db_dir}/db")
     em = event_metrics(load_events(spark, sf_dir)).select(
         F.unix_millis("window_start").alias("window_start_ms"),
@@ -135,7 +131,7 @@ def q_streaming_jdbc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream_from_dir,
     )
 
-    work = tempfile.mkdtemp(prefix=f"rtap_sjdbc_{next(_call)}_")
+    work = scratch_dir("sjdbc_")
     url = derby_url(f"{work}/db")
     stream = read_events_stream_from_dir(
         spark, _os.path.join(sf_dir, "events.parquet")

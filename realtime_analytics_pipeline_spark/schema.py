@@ -83,19 +83,6 @@ ANALYTICS_EVENT_SCHEMA = StructType(
     ]
 )
 
-# Canonical engine columns produced by the normalizers below.
-CANONICAL_COLUMNS = [
-    "event_id",
-    "event_time",
-    "event_type",
-    "user_id",
-    "session_id",
-    "user_agent",
-    "load_time",
-    "value",
-    "props",
-]
-
 
 def normalize_wire_events(df: DataFrame) -> DataFrame:
     """Nested wire rows -> canonical columns.

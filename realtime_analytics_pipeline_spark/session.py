@@ -7,42 +7,55 @@ thresholds) are identical — only master/memory differ.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 
-def get_spark(app_name: str = "realtime-analytics-pipeline-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
+def _runtime_conf() -> dict[str, str]:
+    """The SQL confs every query relies on, all settable at run time:
+    get_spark builds with them and tune_session re-applies them to a
+    session built elsewhere."""
+    return {
         # deterministic wall-clock semantics: everything in UTC
-        .config("spark.sql.session.timeZone", "UTC")
-        # one shuffle partition per core locally; AQE coalesces further.
-        # On a real cluster this would be ~2-3x total cores.
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for any pandas-interop path (mapInPandas/applyInPandas)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
         # some driver testdata generations store events.ts as
         # TIMESTAMP(NANOS): surface those as a nanos bigint and convert
         # (DuckDB truncates ns->us identically). Harmless no-op when the
         # data is TIMESTAMP(MICROS) — readers branch on the runtime type
         # (schema.normalize_testdata_events / schema.raw_ts_ms).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # write timestamps as INT64 MICROS, not legacy INT96: footer
-        # min/max stats exist (pruning/compaction sorting works) and
-        # re-reads don't hit the INT96-vs-declared-schema trap
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # read parquet TIMESTAMP(isAdjustedToUTC=false) as TIMESTAMP (UTC
         # session) not TIMESTAMP_NTZ: keeps epoch functions applicable and
         # keeps timestamp predicates pushable (no implicit casts in plan)
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        # write timestamps as INT64 MICROS, not legacy INT96: footer
+        # min/max stats exist (pruning/compaction sorting works) and
+        # re-reads don't hit the INT96-vs-declared-schema trap
+        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+        # one shuffle partition per core locally (a foreign session may
+        # carry the 200-partition default); AQE coalesces further. On a
+        # real cluster this would be ~2-3x total cores.
+        "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    }
+
+
+def get_spark(app_name: str = "realtime-analytics-pipeline-spark") -> SparkSession:
+    conf = _runtime_conf()
+    builder = (
+        SparkSession.builder.appName(app_name)
+        .master(f"local[{conf['spark.sql.shuffle.partitions']}]")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Arrow for any pandas-interop path (mapInPandas/applyInPandas)
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config(
             "spark.sql.warehouse.dir",
@@ -50,6 +63,8 @@ def get_spark(app_name: str = "realtime-analytics-pipeline-spark") -> SparkSessi
         )
         .config("spark.ui.enabled", "false")
     )
+    for key, value in conf.items():
+        builder = builder.config(key, value)
     return builder.getOrCreate()
 
 
@@ -60,19 +75,28 @@ def tune_session(spark: SparkSession) -> SparkSession:
     are runtime-settable, so queries call this defensively to keep
     window arithmetic deterministic (UTC) regardless of host TZ.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-    )
-    # a foreign session (e.g. the correctness driver's) may carry the
-    # 200-partition default — size to local core count, AQE coalesces
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    for key, value in _runtime_conf().items():
+        spark.conf.set(key, value)
     return spark
+
+
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_LOCK = threading.Lock()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory under this process's scratch root.
+
+    Queries that write a store and return frames that read it lazily
+    need the directory to outlive the call: it lives until the process
+    exits, when the whole root is removed.
+    """
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="rtap_scratch_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 class SessionMemo:

@@ -109,9 +109,6 @@ class _RowRange(InputPartition):
     end: int
 
 
-_COMPARE_OPS = (GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
-
-
 def _filter_to_arrow(f: Filter):
     """Supported pushed filter -> pyarrow compute expression (or None)."""
     col = f.attribute

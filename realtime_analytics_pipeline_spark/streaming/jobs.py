@@ -26,13 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructType
 
 from realtime_analytics_pipeline_spark.config import DEFAULT_CONFIG, EngineConfig
 from realtime_analytics_pipeline_spark.schema import (
@@ -41,24 +35,6 @@ from realtime_analytics_pipeline_spark.schema import (
     normalize_wire_events,
 )
 from realtime_analytics_pipeline_spark.session import tune_session
-
-# testdata events.parquet layout. The driver has regenerated testdata
-# with different `ts` physical encodings across rounds — TIMESTAMP(NANOS)
-# (surfaced as a nanos bigint under spark.sql.legacy.parquet.nanosAsLong)
-# and TIMESTAMP(MICROS) (surfaced as a timestamp) have both been
-# observed — so the stream source must NOT hardcode the ts type: it is
-# inferred from the actual files (see read_events_stream_from_dir) and
-# normalize_testdata_events branches on the runtime type.
-TESTDATA_EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
 
 
 def configure_state_store(
@@ -101,7 +77,10 @@ def read_events_stream_from_dir(
     directory, or a single file).
 
     One micro-batch per file by default — write the fixture with
-    multiple files to exercise multi-batch watermark progression.
+    multiple files to exercise multi-batch watermark progression. The
+    schema is read from the files, because testdata generations differ
+    in the physical type of ``ts``; normalize_testdata_events branches
+    on the type it finds.
     """
     tune_session(spark)
     try:

@@ -1,16 +1,16 @@
-"""Stream-stream joins and streaming dedup.
+"""Stream-stream joins.
 
 Beyond the reference surface (it has no joins at all, SURVEY §2.9) —
-a complete streaming engine needs both:
+a complete streaming engine needs them:
 
 - `stream_attribution_join`: interval join of two event-time streams
   (purchases ⋈ views of the same user within a lookback window). Both
   sides carry watermarks; the range condition bounds per-side state so
   the join state stays finite (Spark evicts rows once the opposite
   watermark passes the interval).
-- `dedup_stream`: `dropDuplicatesWithinWatermark` — exactly-once-per-
-  key within the watermark horizon, the streaming analog of exact
-  dedup with bounded state.
+
+Streaming exact dedup with bounded state is the gated
+``streaming_exact_dedup`` query (``dropDuplicatesWithinWatermark``).
 """
 
 from __future__ import annotations
@@ -51,13 +51,6 @@ def stream_attribution_join(
             """
         ),
     ).select("purchase_id", "p_user", "p_time", "view_id", "v_time")
-
-
-def dedup_stream(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Streaming exact dedup with bounded state: duplicates of a key
-    arriving within the watermark horizon are dropped; state for a key
-    is evicted once the watermark passes its event time."""
-    return events.dropDuplicatesWithinWatermark(keys or ["event_id"])
 
 
 def stream_attribution_join_outer(

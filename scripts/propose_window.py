@@ -17,6 +17,11 @@ then replica-verify all 50 at sf0.01 BEFORE committing the swap:
     python scripts/check_queries.py $(python scripts/propose_window.py --names) \
         --sf /root/testdata/sf0.01
 
+The new literal REPLACES the old `_VERIFY_WINDOW` in registry.py; do
+not keep the old one beside it under another name. Nothing reads such
+a copy, and tests/test_reachability.py fails on it (three old windows,
+230 lines, piled up that way before the scan counted constants).
+
 ``--refresh`` implements the r09+ freshness policy (registry.py window
 NOTE, adopted 2026-08-15): once every oracled query has a driver row,
 the window = never-verified names first (virgin coverage still wins),

@@ -49,35 +49,6 @@ def test_incremental_candidates_match_full_lsh(spark):
     assert inc, "smoke corpus should produce at least one candidate"
 
 
-def test_incremental_verdicts_semantics(spark):
-    """Crafted increment: an exact copy of a corpus doc must come back
-    corpus_near_dup with a perfect slot match; a disjoint-vocabulary
-    doc must come back novel."""
-    corpus = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta theta"),
-            (2, "one two three four five six seven eight nine"),
-        ],
-        ["doc_id", "text"],
-    )
-    batch = spark.createDataFrame(
-        [
-            (10, "alpha beta gamma delta epsilon zeta eta theta"),
-            (11, "completely disjoint vocabulary nothing shared here"),
-        ],
-        ["doc_id", "text"],
-    )
-    rows = {
-        r.doc_id: r
-        for r in D.minhash_incremental_verdicts(corpus, batch).collect()
-    }
-    assert rows[10].verdict == "corpus_near_dup"
-    assert rows[10].best_eq == 64  # identical shingle set => all slots
-    assert rows[10].n_verified >= 1
-    assert rows[11].verdict == "novel"
-    assert rows[11].n_verified == 0 and rows[11].best_eq == 0
-
-
 def test_gated_incremental_minhash_invariants(spark):
     """The gated md5-twin query: one row per batch doc, integer
     invariants hold, and the verdict column is consistent with the
@@ -190,24 +161,6 @@ def test_two_increment_ingest_equals_full_lsh(spark):
         "day-2 must hit at least one day-1 doc for the append "
         "property to be exercised"
     )
-
-
-def test_incremental_verdicts_empty_sides(spark):
-    """Edge hygiene: an empty increment returns an empty verdict table
-    (schema intact); an empty corpus marks every batch doc novel."""
-    schema = "doc_id long, text string"
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma delta")], schema
-    )
-    empty = spark.createDataFrame([], schema)
-    out = D.minhash_incremental_verdicts(corpus, empty)
-    assert out.count() == 0
-    assert out.columns == [
-        "doc_id", "n_candidates", "n_verified", "best_eq", "verdict",
-    ]
-    batch = spark.createDataFrame([(5, "zeta eta theta iota")], schema)
-    rows = D.minhash_incremental_verdicts(empty, batch).collect()
-    assert len(rows) == 1 and rows[0].verdict == "novel"
 
 
 def test_stored_path_equals_inplan_and_reuses_store(spark):

@@ -1,9 +1,15 @@
 """SessionMemo: shared DataFrame intermediates are built once per
 (application, epoch), and a new epoch frees the previous one's
 checkpoint blocks. The per-query recorder runs each query in its own
-epoch and leaves the default one behind."""
+epoch and leaves the default one behind. Scratch stores live until the
+process exits, and no longer."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 # registry first: it imports registry_docs after the modules it needs
 from realtime_analytics_pipeline_spark import registry  # noqa: F401
@@ -61,3 +67,25 @@ def test_run_query_records_jobs_and_shuffle(spark):
     assert map_only.shuffle_read_bytes == map_only.shuffle_write_bytes == 0
     assert SESSION_MEMO._epoch == ""
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_scratch_dir_root_removed_at_exit(tmp_path):
+    """A process that writes into a scratch_dir directory and exits
+    leaves neither the directory nor its root behind."""
+    code = (
+        "import os\n"
+        "from realtime_analytics_pipeline_spark.session import scratch_dir\n"
+        "d = scratch_dir('probe_')\n"
+        "open(os.path.join(d, 'f'), 'w').write('x')\n"
+        "print(os.path.dirname(d))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True, text=True, check=True, timeout=120,
+    )
+    root = out.stdout.strip()
+    assert root.startswith(str(tmp_path)), root
+    assert not os.path.exists(root)
+    assert os.listdir(tmp_path) == []

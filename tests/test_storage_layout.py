@@ -1,4 +1,4 @@
-"""Storage layout: partition pruning, compaction and Z-ordered files."""
+"""Storage layout: partition pruning and Z-ordered files."""
 
 from __future__ import annotations
 
@@ -32,49 +32,6 @@ def test_partition_pruning_on_day_partitioned_layout(spark, tmp_path):
     assert back.count() == want
 
 
-def test_compaction_reduces_file_count_preserves_rows(spark, tmp_path):
-    """64 tiny files -> ceil(n/target) compacted files, same rows; the
-    range-sorted variant leaves non-overlapping ts min/max per file
-    (footer stats usable for pruning)."""
-    from realtime_analytics_pipeline_spark.operators.storage import (
-        compact_files,
-    )
-
-    src = str(tmp_path / "small_files")
-    ev = load_table(spark, SF_SMOKE, "events")
-    ev.repartition(64).write.parquet(src)
-    import os
-
-    assert len([f for f in os.listdir(src) if f.startswith("part-")]) == 64
-
-    out = str(tmp_path / "compacted")
-    n = ev.count()
-    files = compact_files(spark, src, out, target_rows_per_file=300,
-                          sort_col="ts")
-    assert files == -(-n // 300)  # ceil
-    back = spark.read.parquet(out)
-    assert back.count() == n
-    # range-partitioned by ts: per-file min/max must not overlap
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in sorted(os.listdir(out)):
-        if not f.startswith("part-"):
-            continue
-        md = pq.ParquetFile(os.path.join(out, f)).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        col = md.row_group(0).column(idx["ts"])
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx["ts"]).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        spans.append((min(mins), max(maxs)))
-    spans.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2, "range-sorted files must not overlap"
-
-
 def test_zorder_narrows_footer_ranges_on_both_dims(spark, tmp_path):
     """Z-ordered files must carry narrow min/max footer bands on BOTH
     clustered columns; a linear sort narrows only its leading column
@@ -84,7 +41,7 @@ def test_zorder_narrows_footer_ranges_on_both_dims(spark, tmp_path):
     import os
 
     from realtime_analytics_pipeline_spark.operators.storage import (
-        write_zordered,
+        zorder_key_int,
     )
 
     # two independent uniform dims -> worst case for linear sort
@@ -97,7 +54,11 @@ def test_zorder_narrows_footer_ranges_on_both_dims(spark, tmp_path):
     df.repartitionByRange(16, "x").sortWithinPartitions("x").write.mode(
         "overwrite"
     ).parquet(lin_dir)
-    write_zordered(spark, df, z_dir, ["x", "y"], n_files=16)
+    zorder_key_int(df, ["x", "y"]).repartitionByRange(
+        16, "__zkey"
+    ).sortWithinPartitions("__zkey").drop("__zkey").write.mode(
+        "overwrite"
+    ).parquet(z_dir)
 
     def avg_span(d, col):
         spans = []

@@ -1,4 +1,4 @@
-"""Stream-stream interval join and streaming dedup."""
+"""Stream-stream interval joins."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from realtime_analytics_pipeline_spark.streaming.jobs import (
     run_to_memory_table,
 )
 from realtime_analytics_pipeline_spark.streaming.joins import (
-    dedup_stream,
     stream_attribution_join,
 )
 
@@ -38,42 +37,6 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     # the watermark (result is tiny at this SF — 3 rows — so no useful
     # fraction bound exists; file-batch ordering decides the held set)
     assert got <= want
-
-
-def test_dedup_stream_drops_in_horizon_duplicates(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: replayed event_ids within the
-    watermark horizon are emitted once."""
-    import time as _time
-
-    from pyspark.sql import Row
-
-    src = str(tmp_path / "dedup_src")
-    base_ns = 1_704_067_200_000_000_000
-
-    def write_file(ids_offsets):
-        spark.createDataFrame(
-            [
-                Row(
-                    event_id=i,
-                    ts=base_ns + off * 1_000_000,
-                    user_id=1,
-                    event_type="view",
-                    value=1.0,
-                    props="{}",
-                )
-                for i, off in ids_offsets
-            ]
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    write_file([(1, 0), (2, 1000), (3, 2000)])
-    _time.sleep(1.1)
-    # replays of 2 and 3 (same ids, same times) + one new row
-    write_file([(2, 1000), (3, 2000), (4, 3000)])
-
-    stream = read_events_stream_from_dir(spark, src)
-    out = dedup_stream(stream, ["event_id"]).select("event_id")
-    got = sorted(r.event_id for r in run_to_memory_table(out).collect())
-    assert got == ["1", "2", "3", "4"]
 
 
 def test_full_outer_join_null_pads_both_sides(spark, tmp_path):
