@@ -20,6 +20,7 @@ from realtime_analytics_pipeline_spark.operators.clustering import (
     connected_components_bounded,
 )
 from realtime_analytics_pipeline_spark.registry import register
+from realtime_analytics_pipeline_spark.registry_relational import _SLIDING_SQL
 from realtime_analytics_pipeline_spark.sources.batch import load_events, load_table
 
 # --------------------------------------------------------------------------
@@ -523,17 +524,8 @@ def q_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the results (5x event replication traded for pane replication).
 # --------------------------------------------------------------------------
 
-_SLIDING_PANED_SQL = """
-SELECT ((epoch_ms(ts) // 60000) - j) * 60000 AS window_start_ms,
-       ((epoch_ms(ts) // 60000) - j) * 60000 + 300000 AS window_end_ms,
-       event_type,
-       count(*) AS event_count
-FROM events, (SELECT unnest(range(5)) AS j)
-GROUP BY 1, 2, 3
-"""
 
-
-@register("events_sliding_window_paned", _SLIDING_PANED_SQL)
+@register("events_sliding_window_paned", _SLIDING_SQL)
 def q_sliding_paned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime_analytics_pipeline_spark.operators.relational import (
         sliding_event_counts_paned,
@@ -1984,19 +1976,10 @@ GROUP BY s.source
 """
 
 
-@register("docs_blocklist_filter", _BLOCKLIST_SQL)
-def q_docs_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Safety/blocklist screening: per-source rate of documents
-    containing any banned phrase (exact substring). The phrase list is
-    broadcast and each (doc, phrase) test is a JVM `contains` — fine
-    for list sizes in the thousands; at blocklists of 10^5+ the scale
-    move is a token-indexed prefilter (join docs' token sets to
-    phrases' first tokens, verify contains only on candidates — the
-    same inverted-index bound as the n-gram dedup family). Counted per
-    (doc, phrase) so multi-phrase hits are visible, rolled up per
-    source."""
-    docs = load_table(spark, sf_dir, "documents")
-    phrases = spark.createDataFrame(
+def _blocklist_phrases(spark: SparkSession) -> DataFrame:
+    """The banned-phrase list of both blocklist queries (the oracle's
+    ``bl`` VALUES)."""
+    return spark.createDataFrame(
         [
             ("slow scan",),
             ("dup line",),
@@ -2006,9 +1989,15 @@ def q_docs_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "phrase string",
     )
+
+
+def _blocklist_rollup(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Per-source blocklist rates from (doc_id, text, phrase) candidate
+    pairs: a pair is a hit iff the text contains the phrase exactly,
+    hits are counted per doc, and every doc of ``docs`` rolls up into
+    its source, hit or not."""
     hits = (
-        docs.crossJoin(F.broadcast(phrases))
-        .where(F.col("text").contains(F.col("phrase")))
+        pairs.where(F.col("text").contains(F.col("phrase")))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
@@ -2026,6 +2015,23 @@ def q_docs_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("total_hits"),
         )
+    )
+
+
+@register("docs_blocklist_filter", _BLOCKLIST_SQL)
+def q_docs_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Safety/blocklist screening: per-source rate of documents
+    containing any banned phrase (exact substring). The phrase list is
+    broadcast and each (doc, phrase) test is a JVM `contains` — fine
+    for list sizes in the thousands; at blocklists of 10^5+ the scale
+    move is a token-indexed prefilter (join docs' token sets to
+    phrases' first tokens, verify contains only on candidates — the
+    same inverted-index bound as the n-gram dedup family). Counted per
+    (doc, phrase) so multi-phrase hits are visible, rolled up per
+    source."""
+    docs = load_table(spark, sf_dir, "documents")
+    return _blocklist_rollup(
+        docs, docs.crossJoin(F.broadcast(_blocklist_phrases(spark)))
     )
 
 
@@ -2102,16 +2108,7 @@ def q_docs_blocklist_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     |docs| x |phrases|. Equality with the broadcast-cross form is
     additionally pytest-pinned."""
     docs = load_table(spark, sf_dir, "documents")
-    phrases = spark.createDataFrame(
-        [
-            ("slow scan",),
-            ("dup line",),
-            ("big spark table",),
-            ("merge the row",),
-            ("fast hash join",),
-        ],
-        "phrase string",
-    )
+    phrases = _blocklist_phrases(spark)
     grams = docs.select(
         "doc_id",
         F.explode(
@@ -2125,26 +2122,8 @@ def q_docs_blocklist_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keyed = phrases.select("phrase", F.substring("phrase", 1, 4).alias("gram"))
     cand = grams.join(keyed, "gram").select("doc_id", "phrase").distinct()
-    hits = (
-        cand.join(docs.select("doc_id", "text"), "doc_id")
-        .where(F.col("text").contains(F.col("phrase")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        docs.join(hits, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count("n_hits").cast("bigint").alias("n_flagged"),
-            (
-                F.round(F.count("n_hits") / F.count(F.lit(1)), 6)
-                + F.lit(0.0)
-            ).alias("flag_rate"),
-            F.coalesce(F.sum("n_hits"), F.lit(0))
-            .cast("bigint")
-            .alias("total_hits"),
-        )
+    return _blocklist_rollup(
+        docs, cand.join(docs.select("doc_id", "text"), "doc_id")
     )
 
 

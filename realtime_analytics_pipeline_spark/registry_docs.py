@@ -5570,6 +5570,51 @@ def _md5_band_keys(sigs: DataFrame, id_alias: str) -> DataFrame:
     )
 
 
+def _minhash_verdicts(
+    batch: DataFrame, bsig: DataFrame, cands: DataFrame, csig: DataFrame
+) -> DataFrame:
+    """The verification tail of both incremental MinHash queries. Each
+    (doc_id, corpus_doc_id) candidate of ``cands`` is scored by its
+    count of equal signature slots between ``bsig`` (doc_id, sig) and
+    ``csig`` (corpus_doc_id, sig); a candidate is a near-dup iff
+    eq >= 15 of 16 slots match (eq/16 >= 0.9 <=> eq >= 14.4), an
+    integer rule so the cross-engine hash cannot flake. Every ``batch``
+    doc gets its candidate count, verified count, best slot-match and
+    the 'corpus_near_dup' | 'novel' verdict."""
+    eq = F.expr(
+        "size(filter(zip_with(bsig_, csig_, (x, y) -> x = y), v -> v))"
+    )
+    scored = (
+        cands.join(
+            F.broadcast(
+                bsig.select("doc_id", F.col("sig").alias("bsig_"))
+            ),
+            "doc_id",
+        )
+        .join(
+            csig.select("corpus_doc_id", F.col("sig").alias("csig_")),
+            "corpus_doc_id",
+        )
+        .select("doc_id", "corpus_doc_id", eq.alias("eq"))
+    )
+    agg = scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
+        F.sum(F.when(F.col("eq") >= 15, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_verified"),
+        F.max("eq").cast("bigint").alias("best_eq"),
+    )
+    return batch.select("doc_id").join(agg, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
+        F.coalesce("n_verified", F.lit(0)).alias("n_verified"),
+        F.coalesce("best_eq", F.lit(0)).alias("best_eq"),
+        F.when(F.coalesce("n_verified", F.lit(0)) > 0, "corpus_near_dup")
+        .otherwise("novel")
+        .alias("verdict"),
+    )
+
+
 @register("dedup_incremental_minhash", _INCREMENTAL_MINHASH_SQL)
 def q_dedup_incremental_minhash(
     spark: SparkSession, sf_dir: str
@@ -5609,40 +5654,11 @@ def q_dedup_incremental_minhash(
         .select("doc_id", "corpus_doc_id")
         .distinct()
     )
-    eq = F.expr(
-        "size(filter(zip_with(bsig_, csig_, (x, y) -> x = y), v -> v))"
-    )
-    scored = (
-        cands.join(
-            F.broadcast(
-                bsig.select("doc_id", F.col("sig").alias("bsig_"))
-            ),
-            "doc_id",
-        )
-        .join(
-            csig.select(
-                F.col("doc_id").alias("corpus_doc_id"),
-                F.col("sig").alias("csig_"),
-            ),
-            "corpus_doc_id",
-        )
-        .select("doc_id", "corpus_doc_id", eq.alias("eq"))
-    )
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
-        F.sum(F.when(F.col("eq") >= 15, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_verified"),
-        F.max("eq").cast("bigint").alias("best_eq"),
-    )
-    return batch.select("doc_id").join(agg, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
-        F.coalesce("n_verified", F.lit(0)).alias("n_verified"),
-        F.coalesce("best_eq", F.lit(0)).alias("best_eq"),
-        F.when(F.coalesce("n_verified", F.lit(0)) > 0, "corpus_near_dup")
-        .otherwise("novel")
-        .alias("verdict"),
+    return _minhash_verdicts(
+        batch,
+        bsig,
+        cands,
+        csig.withColumnRenamed("doc_id", "corpus_doc_id"),
     )
 
 
@@ -5736,40 +5752,11 @@ def q_dedup_incremental_minhash_stored(
             .withColumnRenamed("k", "bucket")
         ),
     )
-    eq = F.expr(
-        "size(filter(zip_with(bsig_, csig_, (x, y) -> x = y), v -> v))"
-    )
-    scored = (
-        cands.withColumnRenamed("batch_doc_id", "doc_id")
-        .join(
-            F.broadcast(
-                bsig.select("doc_id", F.col("sig").alias("bsig_"))
-            ),
-            "doc_id",
-        )
-        .join(
-            store_sigs.select(
-                "corpus_doc_id", F.col("sig").alias("csig_")
-            ),
-            "corpus_doc_id",
-        )
-        .select("doc_id", "corpus_doc_id", eq.alias("eq"))
-    )
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
-        F.sum(F.when(F.col("eq") >= 15, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_verified"),
-        F.max("eq").cast("bigint").alias("best_eq"),
-    )
-    return batch.select("doc_id").join(agg, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
-        F.coalesce("n_verified", F.lit(0)).alias("n_verified"),
-        F.coalesce("best_eq", F.lit(0)).alias("best_eq"),
-        F.when(F.coalesce("n_verified", F.lit(0)) > 0, "corpus_near_dup")
-        .otherwise("novel")
-        .alias("verdict"),
+    return _minhash_verdicts(
+        batch,
+        bsig,
+        cands.withColumnRenamed("batch_doc_id", "doc_id"),
+        store_sigs,
     )
 
 

@@ -210,38 +210,7 @@ def q_streaming_event_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _finalized_core(spark, sf_dir, run_to_memory_table(out))
 
 
-_STATEFUL_SESSION_SQL = """
-WITH flagged AS (
-    SELECT user_id, event_id, ts,
-           CASE WHEN lag(ts) OVER w IS NULL
-                     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                THEN 1 ELSE 0 END AS is_new
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-islands AS (
-    SELECT user_id, ts,
-           sum(is_new) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS island
-    FROM flagged
-),
-sess AS (
-    SELECT CAST(user_id AS VARCHAR) AS session_id,
-           CAST(user_id AS VARCHAR) AS user_id,
-           epoch_ms(min(ts)) AS start_ms,
-           epoch_ms(max(ts)) AS end_ms,
-           (epoch_us(max(ts)) - epoch_us(min(ts))) // 1000 AS duration,
-           count(*) AS page_count
-    FROM islands
-    GROUP BY user_id, island
-)
-SELECT * FROM sess
-WHERE end_ms + 1800000 <= (SELECT max(epoch_ms(ts)) FROM events) - 10000
-"""
-
-
-@register("streaming_stateful_sessions", _STATEFUL_SESSION_SQL)
+@register("streaming_stateful_sessions", _STREAMING_SESSION_SQL)
 def q_streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization through the CUSTOM stateful escape hatch
     (applyInPandasWithState + event-time timeout) instead of the native

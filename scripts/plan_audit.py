@@ -123,6 +123,23 @@ def unbounded_bnlj(plan_tree: str) -> bool:
     return flagged
 
 
+def unpartitioned_windows(node) -> int:
+    """Count the Window operators of a JVM physical plan that have an
+    empty partition spec and no top-N below them (TakeOrderedAndProject
+    or WindowGroupLimit): each moves its whole input into one task."""
+    if node.nodeName().startswith("AdaptiveSparkPlan"):
+        node = node.executedPlan()
+    kids = [node.children().apply(i) for i in range(node.children().size())]
+    subs = node.subqueries()
+    kids += [subs.apply(i) for i in range(subs.size())]
+    n = sum(unpartitioned_windows(k) for k in kids)
+    if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+        tree = node.toString()
+        if "TakeOrderedAndProject" not in tree and "WindowGroupLimit" not in tree:
+            n += 1
+    return n
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     audit_all = "--all" in sys.argv
@@ -156,6 +173,12 @@ def main() -> int:
             )
         if "BatchEvalPython" in plan and name not in PYTHON_SURFACE_OK:
             findings.append(f"{name}: row-at-a-time PythonUDF")
+        n_win = unpartitioned_windows(qe.executedPlan())
+        if n_win:
+            findings.append(
+                f"{name}: {n_win} Window(s) with no partition spec over a "
+                "non-TopN input (one task takes every row)"
+            )
         if "InMemoryTableScan" in plan:
             findings.append(f"{name}: unexpected cache")
         if re.search(r"Filter .*size\(aggregate\(", tree):

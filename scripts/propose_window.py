@@ -14,8 +14,7 @@ The output is a PROPOSAL: re-order for capability diversity before
 pasting (the window should cover shapes no green row exercises yet),
 then replica-verify all 50 at sf0.01 BEFORE committing the swap:
 
-    python scripts/check_queries.py $(python scripts/propose_window.py --names) \
-        --sf /root/testdata/sf0.01
+    python scripts/verify_driver_gate.py --only $(python scripts/propose_window.py --names)
 
 The new literal REPLACES the old `_VERIFY_WINDOW` in registry.py; do
 not keep the old one beside it under another name. Nothing reads such

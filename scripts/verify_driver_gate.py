@@ -1,10 +1,25 @@
-"""Driver-gate replica: runs __spark_entry__ exactly as the driver does.
+"""Oracle gate: runs __spark_entry__ exactly as the driver does and
+compares every query with its DuckDB oracle.
 
-Usage: python scripts/verify_driver_gate.py [sf_dir]
+Usage: python scripts/verify_driver_gate.py [SF_DIR] [--only NAME ...] [--hostile]
 
-- smoke: entry(spark) must return rows with a stable schema
-- for each queries() entry with an oracle_sql(): run both, compare
-  row count, sorted column names, and an order-insensitive value hash.
+- SF_DIR: a testdata dir (default sf0.01) or a .scale slice from
+  scripts/gen_scale_slices.py. A table stored as a directory is
+  globbed; a table the dir lacks gets no view, and a query whose error
+  provably comes from such a table is a SKIP.
+- --only: run just these names, in the given order, even those
+  ORACLE_SKIP covers. Without it every query runs in registration
+  order (the driver's order: the first query meets the virgin
+  session), then the entry(spark) smoke check.
+- --hostile: run in a session built to be unlike the engine's own
+  (local[8], America/New_York, no engine confs) instead of the
+  pristine one; the queries must repair what matters themselves.
+
+Per query: row count, sorted column names and an order-insensitive
+value hash; queries without an oracle are rows-only. A query that
+raises, on either side, is a FAIL and the run goes on. Prints
+`GATE @ <sf>: N OK, N FAIL, N SKIP, N rows-only`, then ALL MATCH or
+FAILURES; exit 1 on any FAIL.
 
 The hash is TYPE-EXACT, matching the observed driver behavior
 (CORRECTNESS_r01: DuckDB HUGEINT sums fetched as float64 hash as
@@ -18,17 +33,17 @@ Floats are never normalized to ints.
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import math
 import os
+import re
 import sys
 import time
 
 import duckdb
 
 sys.path.insert(0, ".")
-
-import __spark_entry__ as entry_mod  # noqa: E402
 
 
 def get_pristine_spark():
@@ -55,6 +70,25 @@ def get_pristine_spark():
         .getOrCreate()
     )
 
+
+def get_hostile_spark():
+    """A session the engine did not build: more threads than cores, a
+    non-UTC timezone, AQE defaults and no nanos handling pre-set.
+    `tune_session` (called inside every loader) must repair what
+    matters at runtime."""
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .appName("hostile-gate")
+        .config("spark.sql.session.timeZone", "America/New_York")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 TABLES = (
     "region",
     "nation",
@@ -67,6 +101,35 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+# Oracles skipped above a size: name -> (reason, the `events` row count
+# above which the skip binds). --only runs them anyway.
+ORACLE_SKIP = {
+    # The gemm kernel's exactness claim is only meaningful against the
+    # FULL uncapped users^2 oracle: green at sf0.3 (32 s), infeasible
+    # for DuckDB one decade later.
+    "users_activity_similarity_blas": (
+        "uncapped users^2 oracle replay, infeasible at sf1",
+        500_000,
+    ),
+    # Cross-engine float-rounding boundary: round(x, 6) of values only
+    # reproducible while intermediates stay exact. Exact at sf0.01 and
+    # sf0.1; at 30-100x a last-ulp difference lands on a half-tie.
+    "performance_metrics_5m": (
+        "float-boundary: avg() partial-sum association lands on a "
+        "round(,6) half-tie (3 of 43,200 rows at sf1, diff = 1e-6)",
+        100_000,
+    ),
+    "serving_perf_pivot": (
+        "float-boundary: pivot of performance_metrics_5m, same half-tie rows",
+        100_000,
+    ),
+    "serving_unpivot": (
+        "float-boundary: unpivot of the same avg_load_time values, the "
+        "same 3 half-tie rows of 86,400 at sf1, diff = 1e-6",
+        100_000,
+    ),
+}
 
 
 def _pdf_rows(pdf) -> list[tuple]:
@@ -100,67 +163,154 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_pristine_spark()
-    # NOTE: entry() smoke check moved to AFTER the query loop — running
-    # it first would tune the session and hide virgin-session traps
-    # from the first window query (exactly the class the r05 driver hit
-    # and the old replica missed).
+def absent_table_reason(exc: Exception, oracle: str, present: set[str]):
+    """Return a SKIP reason iff the failure provably comes from a table
+    the slice lacks; None means FAIL (a false FAIL is investigable, a
+    false SKIP is invisible)."""
+    msg = str(exc)
+    absent = [t for t in TABLES if t not in present]
+    # The oracle references an absent table as a word (not substring:
+    # 'part' must not match 'parquet'/'partition').
+    referenced = [t for t in absent if re.search(rf"\b{t}\b", oracle)]
+    if referenced:
+        return f"needs table absent from slice: {referenced}"
+    # Spark path error naming an absent table's parquet path, or
+    # DuckDB naming the absent table in quotes.
+    for t in absent:
+        if f"/{t}.parquet" in msg or f"'{t}'" in msg or f'"{t}"' in msg:
+            if (
+                "PATH_NOT_FOUND" in msg
+                or "does not exist" in msg
+                or "Table with name" in msg
+            ):
+                return f"absent table '{t}' referenced by error"
+    return None
 
+
+def first_line(exc: Exception) -> str:
+    return (str(exc).strip().splitlines() or [repr(exc)])[0][:200]
+
+
+def duck_views(sf_dir: str) -> tuple[duckdb.DuckDBPyConnection, set[str]]:
+    """A DuckDB connection with one view per table present in sf_dir
+    (.scale slices store events as a directory of files)."""
     con = duckdb.connect()
+    present = set()
     for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+        path = f"{sf_dir}/{t}.parquet"
+        if not os.path.exists(path):
+            continue
+        src = f"'{path}/*.parquet'" if os.path.isdir(path) else f"'{path}'"
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM {src}")
+        present.add(t)
+    return con, present
 
+
+def print_diff(spdf, ddf, cols: list[str]) -> None:
+    """The first differing rows of two equal-shape results, each side
+    sorted on its string form."""
+    a = spdf[cols].astype(str).sort_values(cols).reset_index(drop=True)
+    b = ddf[cols].astype(str).sort_values(cols).reset_index(drop=True)
+    neq = (a != b).any(axis=1)
+    print(a[neq].head(5))
+    print(b[neq].head(5))
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--only", nargs="+", metavar="NAME")
+    ap.add_argument("--hostile", action="store_true")
+    ns = ap.parse_args()
+    sf_dir = ns.sf_dir
+    spark = get_hostile_spark() if ns.hostile else get_pristine_spark()
+    # the entry() smoke check runs AFTER the query loop — running it
+    # first would tune the session and hide virgin-session traps from
+    # the first window query (the class the r05 driver hit).
+    import __spark_entry__ as entry_mod
+
+    con, present = duck_views(sf_dir)
+    n_events = (
+        con.execute("SELECT count(*) FROM events").fetchone()[0]
+        if "events" in present
+        else 0
+    )
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
+    counts = {"OK": 0, "FAIL": 0, "SKIP": 0, "rows-only": 0}
     failures = []
-    # registration order, NOT sorted: the driver runs the verify window
-    # in dict order, so the first query here must be the one that meets
-    # the virgin session — order fidelity is part of the replica.
-    for name, fn in queries.items():
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        cols = df.columns
-        spdf = df.toPandas()  # pandas on BOTH sides, like the driver
-        rows = _pdf_rows(spdf)
-        dt = time.time() - t0
-        if name not in oracles:
-            print(f"  {name}: rows-only, {len(rows)} rows ({dt:.1f}s)")
-            assert len(rows) >= 0
+
+    def report(name, status, detail):
+        print(f"  {name}: {status}{detail}", flush=True)
+        counts[status] += 1
+        if status == "FAIL":
+            failures.append(name)
+
+    for name in ns.only or queries:
+        if name not in queries:
+            report(name, "FAIL", " (not registered)")
             continue
-        # fetch through pandas exactly like the driver: DuckDB HUGEINT
-        # (integer-sum results) widens to float64 here, surfacing
-        # type-mismatch reds locally instead of in CORRECTNESS_r{N}
-        ddf = con.execute(oracles[name]).df()
+        oracle = oracles.get(name)
+        skip = ORACLE_SKIP.get(name)
+        if skip and n_events > skip[1] and not ns.only:
+            report(name, "SKIP", f" ({skip[0]})")
+            continue
+        t0 = time.time()
+        try:
+            df = queries[name](spark, sf_dir)
+            cols = df.columns
+            spdf = df.toPandas()  # pandas on BOTH sides, like the driver
+            dt = time.time() - t0
+            # fetch through pandas exactly like the driver: DuckDB
+            # HUGEINT (integer-sum results) widens to float64 here
+            ddf = con.execute(oracle).df() if oracle else None
+        except Exception as exc:  # noqa: BLE001 — classify, go on
+            reason = absent_table_reason(exc, oracle or "", present)
+            if reason is not None:
+                report(name, "SKIP", f" ({reason})")
+            else:
+                report(name, "FAIL", f" ({first_line(exc)})")
+            continue
+        rows = _pdf_rows(spdf)
+        if ddf is None:
+            report(name, "rows-only", f", {len(rows)} rows ({dt:.1f}s)")
+            continue
         dcols = list(ddf.columns)
         drows = _pdf_rows(ddf)
         ok_rows = len(rows) == len(drows)
         ok_cols = sorted(cols) == sorted(dcols)
-        h_s, h_d = value_hash(cols, rows), value_hash(dcols, drows)
-        ok_hash = h_s == h_d
-        status = "OK" if (ok_rows and ok_cols and ok_hash) else "FAIL"
-        print(
-            f"  {name}: {status} rows={len(rows)}/{len(drows)} "
-            f"cols={'=' if ok_cols else 'DIFF'} hash={'=' if ok_hash else 'DIFF'} ({dt:.1f}s)"
+        ok_hash = value_hash(cols, rows) == value_hash(dcols, drows)
+        report(
+            name,
+            "OK" if ok_rows and ok_cols and ok_hash else "FAIL",
+            f" rows={len(rows)}/{len(drows)} cols={'=' if ok_cols else 'DIFF'}"
+            f" hash={'=' if ok_hash else 'DIFF'} ({dt:.1f}s)",
         )
-        if status == "FAIL":
-            failures.append(name)
-            if not ok_cols:
-                print(f"    spark cols: {sorted(cols)}")
-                print(f"    duck  cols: {sorted(dcols)}")
+        if not ok_cols:
+            print(f"    spark cols: {sorted(cols)}")
+            print(f"    duck  cols: {sorted(dcols)}")
+        elif ok_rows and not ok_hash:
+            print_diff(spdf, ddf, cols)
 
-    t0 = time.time()
-    flag = entry_mod.entry(spark)
-    n = flag.count()
+    if not ns.only:
+        t0 = time.time()
+        try:
+            flag = entry_mod.entry(spark)
+            n = flag.count()
+            print(
+                f"entry(): {n} rows in {time.time()-t0:.1f}s "
+                f"schema={flag.schema.simpleString()}"
+            )
+        except Exception as exc:  # noqa: BLE001 — a FAIL like any query
+            n = 0
+            print(f"entry(): FAIL ({first_line(exc)})")
+        if n == 0:
+            failures.append("entry()")
+
     print(
-        f"entry(): {n} rows in {time.time()-t0:.1f}s "
-        f"schema={flag.schema.simpleString()}"
+        f"GATE @ {sf_dir}: {counts['OK']} OK, {counts['FAIL']} FAIL, "
+        f"{counts['SKIP']} SKIP, {counts['rows-only']} rows-only"
     )
-    assert n > 0
-
     if failures:
         print(f"FAILURES: {failures}")
         return 1
