@@ -218,12 +218,15 @@ def open_session(app_name: str):
     """
     shm_tmp = None
     if os.path.isdir("/dev/shm"):
+        import atexit
         import shutil
         import tempfile
 
         shm_tmp = f"/dev/shm/{app_name}_tmp"
         shutil.rmtree(shm_tmp, ignore_errors=True)
         os.makedirs(shm_tmp, exist_ok=True)
+        # tmpfs is RAM: the run's temp state goes when the process does
+        atexit.register(shutil.rmtree, shm_tmp, ignore_errors=True)
         os.environ["TMPDIR"] = shm_tmp
         os.environ.setdefault("SPARK_LOCAL_DIRS", shm_tmp)
         tempfile.tempdir = None  # drop the cached tempdir choice

@@ -2164,6 +2164,77 @@ WHERE score >= 3.0e0
 """
 
 
+def _rl_twins(cust: DataFrame) -> DataFrame:
+    """The corrupted b side of the record-linkage family: one twin per
+    customer (twin_id = c_custkey) whose name, nation, segment and
+    balance are corrupted by digits of md5(c_custkey), as the oracles'
+    `b` CTE does."""
+    h = F.md5(F.col("c_custkey").cast("string"))
+    return cust.select(
+        F.col("c_custkey").alias("twin_id"),
+        F.when(
+            F.substring(h, 1, 1).between("0", "7"), F.col("c_name")
+        )
+        .when(
+            F.substring(h, 1, 1).isin("8", "9", "a", "b"),
+            F.lower(F.col("c_name")),
+        )
+        .otherwise(F.replace(F.col("c_name"), F.lit("#"), F.lit("@")))
+        .alias("name_b"),
+        F.when(
+            F.substring(h, 2, 1).isin("d", "e", "f"),
+            (F.col("c_nationkey") + 1) % 25,
+        )
+        .otherwise(F.col("c_nationkey"))
+        .alias("nation_b"),
+        F.when(
+            F.substring(h, 3, 1).isin("e", "f"),
+            F.lit(None).cast("string"),
+        )
+        .otherwise(F.col("c_mktsegment"))
+        .alias("seg_b"),
+        (
+            F.col("c_acctbal") + (F.col("c_custkey") % 5) * F.lit(0.13)
+        ).alias("bal_b"),
+    )
+
+
+def _rl_score(cand: DataFrame) -> DataFrame:
+    """Fellegi–Sunter scoring of (customer, twin) candidate pairs with
+    the literal name, segment and balance weights; a pair scoring
+    below 3 is dropped."""
+    name_w = (
+        F.when(F.col("c_name") == F.col("name_b"), F.lit(9.2))
+        # the oracles' form: the bounded levenshtein(a, b, 1) >= 0 was
+        # not faster at sf0.1 (6 interleaved pairs on 4 cores)
+        .when(F.levenshtein("c_name", "name_b") <= 1, F.lit(3.0))
+        .otherwise(F.lit(-3.5))
+    )
+    seg_w = (
+        F.when(F.col("seg_b").isNull(), F.lit(0.0))
+        .when(F.col("c_mktsegment") == F.col("seg_b"), F.lit(2.3))
+        .otherwise(F.lit(-1.9))
+    )
+    bal_w = F.when(
+        F.abs(F.col("c_acctbal") - F.col("bal_b")) <= 0.7, F.lit(4.6)
+    ).otherwise(F.lit(-2.6))
+    return (
+        cand.withColumn("score", name_w + seg_w + bal_w)
+        .where(F.col("score") >= 3.0)
+        .select(
+            F.col("c_custkey").alias("custkey_a"),
+            "twin_id",
+            "score",
+            F.when(F.col("score") >= 12.0, "match")
+            .otherwise("possible")
+            .alias("decision"),
+            (F.col("c_custkey") == F.col("twin_id"))
+            .cast("int")
+            .alias("is_true_pair"),
+        )
+    )
+
+
 @register("customers_record_linkage_fs", _RL_FS_SQL)
 def q_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probabilistic record linkage, Fellegi–Sunter style (public
@@ -2199,70 +2270,14 @@ def q_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output itself.
     """
     cust = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
-    twin = cust.select(
-        F.col("c_custkey").alias("twin_id"),
-        F.when(
-            F.substring(h, 1, 1).between("0", "7"), F.col("c_name")
-        )
-        .when(
-            F.substring(h, 1, 1).isin("8", "9", "a", "b"),
-            F.lower(F.col("c_name")),
-        )
-        .otherwise(F.replace(F.col("c_name"), F.lit("#"), F.lit("@")))
-        .alias("name_b"),
-        F.when(
-            F.substring(h, 2, 1).isin("d", "e", "f"),
-            (F.col("c_nationkey") + 1) % 25,
-        )
-        .otherwise(F.col("c_nationkey"))
-        .alias("nation_b"),
-        F.when(
-            F.substring(h, 3, 1).isin("e", "f"),
-            F.lit(None).cast("string"),
-        )
-        .otherwise(F.col("c_mktsegment"))
-        .alias("seg_b"),
-        (
-            F.col("c_acctbal") + (F.col("c_custkey") % 5) * F.lit(0.13)
-        ).alias("bal_b"),
-    )
+    twin = _rl_twins(cust)
     tail_a = F.upper(F.expr("substr(c_name, length(c_name) - 3, 4)"))
     tail_b = F.upper(F.expr("substr(name_b, length(name_b) - 3, 4)"))
     cand = cust.join(
         twin,
         (F.col("c_nationkey") == F.col("nation_b")) & (tail_a == tail_b),
     )
-    name_w = (
-        F.when(F.col("c_name") == F.col("name_b"), F.lit(9.2))
-        # r13: bounded-threshold levenshtein (-1 past the bound; the
-        # equality branch above already caught distance 0)
-        .when(F.levenshtein("c_name", "name_b", 1) >= 0, F.lit(3.0))
-        .otherwise(F.lit(-3.5))
-    )
-    seg_w = (
-        F.when(F.col("seg_b").isNull(), F.lit(0.0))
-        .when(F.col("c_mktsegment") == F.col("seg_b"), F.lit(2.3))
-        .otherwise(F.lit(-1.9))
-    )
-    bal_w = F.when(
-        F.abs(F.col("c_acctbal") - F.col("bal_b")) <= 0.7, F.lit(4.6)
-    ).otherwise(F.lit(-2.6))
-    return (
-        cand.withColumn("score", name_w + seg_w + bal_w)
-        .where(F.col("score") >= 3.0)
-        .select(
-            F.col("c_custkey").alias("custkey_a"),
-            "twin_id",
-            "score",
-            F.when(F.col("score") >= 12.0, "match")
-            .otherwise("possible")
-            .alias("decision"),
-            (F.col("c_custkey") == F.col("twin_id"))
-            .cast("int")
-            .alias("is_true_pair"),
-        )
-    )
+    return _rl_score(cand)
 
 
 _RL_FS_MULTIPASS_SQL = """
@@ -2362,34 +2377,7 @@ def q_record_linkage_multipass(
     same — block keys chosen by measured value distribution, never
     assumed."""
     cust = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
-    twin = cust.select(
-        F.col("c_custkey").alias("twin_id"),
-        F.when(
-            F.substring(h, 1, 1).between("0", "7"), F.col("c_name")
-        )
-        .when(
-            F.substring(h, 1, 1).isin("8", "9", "a", "b"),
-            F.lower(F.col("c_name")),
-        )
-        .otherwise(F.replace(F.col("c_name"), F.lit("#"), F.lit("@")))
-        .alias("name_b"),
-        F.when(
-            F.substring(h, 2, 1).isin("d", "e", "f"),
-            (F.col("c_nationkey") + 1) % 25,
-        )
-        .otherwise(F.col("c_nationkey"))
-        .alias("nation_b"),
-        F.when(
-            F.substring(h, 3, 1).isin("e", "f"),
-            F.lit(None).cast("string"),
-        )
-        .otherwise(F.col("c_mktsegment"))
-        .alias("seg_b"),
-        (
-            F.col("c_acctbal") + (F.col("c_custkey") % 5) * F.lit(0.13)
-        ).alias("bal_b"),
-    )
+    twin = _rl_twins(cust)
     cols = [
         "c_custkey", "twin_id", "c_name", "name_b",
         "c_mktsegment", "seg_b", "c_acctbal", "bal_b",
@@ -2417,36 +2405,7 @@ def q_record_linkage_multipass(
         & (F.floor(F.col("c_acctbal")).cast("long") == F.col("band")),
     ).select(*cols)
     cand = pass1.unionByName(pass2).unionByName(pass3).distinct()
-    name_w = (
-        F.when(F.col("c_name") == F.col("name_b"), F.lit(9.2))
-        # r13: bounded-threshold levenshtein (-1 past the bound; the
-        # equality branch above already caught distance 0)
-        .when(F.levenshtein("c_name", "name_b", 1) >= 0, F.lit(3.0))
-        .otherwise(F.lit(-3.5))
-    )
-    seg_w = (
-        F.when(F.col("seg_b").isNull(), F.lit(0.0))
-        .when(F.col("c_mktsegment") == F.col("seg_b"), F.lit(2.3))
-        .otherwise(F.lit(-1.9))
-    )
-    bal_w = F.when(
-        F.abs(F.col("c_acctbal") - F.col("bal_b")) <= 0.7, F.lit(4.6)
-    ).otherwise(F.lit(-2.6))
-    return (
-        cand.withColumn("score", name_w + seg_w + bal_w)
-        .where(F.col("score") >= 3.0)
-        .select(
-            F.col("c_custkey").alias("custkey_a"),
-            "twin_id",
-            "score",
-            F.when(F.col("score") >= 12.0, "match")
-            .otherwise("possible")
-            .alias("decision"),
-            (F.col("c_custkey") == F.col("twin_id"))
-            .cast("int")
-            .alias("is_true_pair"),
-        )
-    )
+    return _rl_score(cand)
 
 
 def _rl_blocking_sql() -> str:
@@ -2586,34 +2545,7 @@ def q_customers_blocking_quality(
     launching a linkage join: it costs one group-by per key — no pair
     ever materializes."""
     cust = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
-    b = cust.select(
-        F.col("c_custkey").alias("twin_id"),
-        F.when(
-            F.substring(h, 1, 1).between("0", "7"), F.col("c_name")
-        )
-        .when(
-            F.substring(h, 1, 1).isin("8", "9", "a", "b"),
-            F.lower(F.col("c_name")),
-        )
-        .otherwise(F.replace(F.col("c_name"), F.lit("#"), F.lit("@")))
-        .alias("name_b"),
-        F.when(
-            F.substring(h, 2, 1).isin("d", "e", "f"),
-            (F.col("c_nationkey") + 1) % 25,
-        )
-        .otherwise(F.col("c_nationkey"))
-        .alias("nation_b"),
-        F.when(
-            F.substring(h, 3, 1).isin("e", "f"),
-            F.lit(None).cast("string"),
-        )
-        .otherwise(F.col("c_mktsegment"))
-        .alias("seg_b"),
-        (
-            F.col("c_acctbal") + (F.col("c_custkey") % 5) * F.lit(0.13)
-        ).alias("bal_b"),
-    )
+    b = _rl_twins(cust)
     keys = [
         (
             "nation_only",
@@ -2919,34 +2851,7 @@ def q_record_linkage_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = cust.orderBy(
         F.md5(F.col("c_custkey").cast("string")), "c_custkey"
     ).limit(3000)
-    h = F.md5(F.col("c_custkey").cast("string"))
-    b = base.select(
-        F.col("c_custkey").alias("twin_id"),
-        F.when(
-            F.substring(h, 1, 1).between("0", "7"), F.col("c_name")
-        )
-        .when(
-            F.substring(h, 1, 1).isin("8", "9", "a", "b"),
-            F.lower(F.col("c_name")),
-        )
-        .otherwise(F.replace(F.col("c_name"), F.lit("#"), F.lit("@")))
-        .alias("name_b"),
-        F.when(
-            F.substring(h, 2, 1).isin("d", "e", "f"),
-            (F.col("c_nationkey") + 1) % 25,
-        )
-        .otherwise(F.col("c_nationkey"))
-        .alias("nation_b"),
-        F.when(
-            F.substring(h, 3, 1).isin("e", "f"),
-            F.lit(None).cast("string"),
-        )
-        .otherwise(F.col("c_mktsegment"))
-        .alias("seg_b"),
-        (
-            F.col("c_acctbal") + (F.col("c_custkey") % 5) * F.lit(0.13)
-        ).alias("bal_b"),
-    )
+    b = _rl_twins(base)
     cand = base.join(b, F.col("c_nationkey") == F.col("nation_b")).select(
         F.when(F.col("c_name") == F.col("name_b"), F.lit(2))
         .when(F.levenshtein("c_name", "name_b") <= 1, F.lit(1))

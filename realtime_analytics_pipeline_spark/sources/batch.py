@@ -15,19 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from realtime_analytics_pipeline_spark.schema import normalize_testdata_events
 from realtime_analytics_pipeline_spark.session import tune_session
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune_session(spark)

@@ -15,9 +15,11 @@ Usage: python scripts/verify_driver_gate.py [SF_DIR] [--only NAME ...] [--hostil
   (local[8], America/New_York, no engine confs) instead of the
   pristine one; the queries must repair what matters themselves.
 
-Per query: row count, sorted column names and an order-insensitive
-value hash; queries without an oracle are rows-only. A query that
-raises, on either side, is a FAIL and the run goes on. Prints
+Per query (`compare`, which tests/test_reference_surface.py calls
+too): row count, sorted column names and an order-insensitive value
+hash; queries without an oracle are rows-only. The time printed covers
+both sides. A query that raises, on either side, is a FAIL and the run
+goes on. Prints
 `GATE @ <sf>: N OK, N FAIL, N SKIP, N rows-only`, then ALL MATCH or
 FAILURES; exit 1 on any FAIL.
 
@@ -206,14 +208,43 @@ def duck_views(sf_dir: str) -> tuple[duckdb.DuckDBPyConnection, set[str]]:
     return con, present
 
 
-def print_diff(spdf, ddf, cols: list[str]) -> None:
+def diff_text(spdf, ddf, cols: list[str]) -> str:
     """The first differing rows of two equal-shape results, each side
     sorted on its string form."""
     a = spdf[cols].astype(str).sort_values(cols).reset_index(drop=True)
     b = ddf[cols].astype(str).sort_values(cols).reset_index(drop=True)
     neq = (a != b).any(axis=1)
-    print(a[neq].head(5))
-    print(b[neq].head(5))
+    return f"{a[neq].head(5)}\n{b[neq].head(5)}"
+
+
+def compare(df, con, oracle: str) -> tuple[bool, str]:
+    """Compare a Spark frame with its DuckDB oracle: both sides through
+    pandas, then row count, sorted column names and the type-exact
+    value hash. Returns (ok, detail): detail's first line is
+    `rows=a/b cols=.. hash=..`; on a column mismatch the next lines
+    name both column sets, and on a hash mismatch with equal rows and
+    columns they hold the first differing rows."""
+    cols = df.columns
+    spdf = df.toPandas()
+    # through pandas, DuckDB HUGEINT (integer-sum results) widens to
+    # float64 here and must not match Spark's int64
+    ddf = con.execute(oracle).df()
+    dcols = list(ddf.columns)
+    rows, drows = _pdf_rows(spdf), _pdf_rows(ddf)
+    ok_rows = len(rows) == len(drows)
+    ok_cols = sorted(cols) == sorted(dcols)
+    ok_hash = value_hash(cols, rows) == value_hash(dcols, drows)
+    detail = (
+        f"rows={len(rows)}/{len(drows)} cols={'=' if ok_cols else 'DIFF'}"
+        f" hash={'=' if ok_hash else 'DIFF'}"
+    )
+    if not ok_cols:
+        detail += (
+            f"\n    spark cols: {sorted(cols)}\n    duck  cols: {sorted(dcols)}"
+        )
+    elif ok_rows and not ok_hash:
+        detail += "\n" + diff_text(spdf, ddf, cols)
+    return ok_rows and ok_cols and ok_hash, detail
 
 
 def main() -> int:
@@ -258,12 +289,10 @@ def main() -> int:
         t0 = time.time()
         try:
             df = queries[name](spark, sf_dir)
-            cols = df.columns
-            spdf = df.toPandas()  # pandas on BOTH sides, like the driver
-            dt = time.time() - t0
-            # fetch through pandas exactly like the driver: DuckDB
-            # HUGEINT (integer-sum results) widens to float64 here
-            ddf = con.execute(oracle).df() if oracle else None
+            if oracle is None:
+                n = len(df.toPandas())
+            else:
+                ok, detail = compare(df, con, oracle)
         except Exception as exc:  # noqa: BLE001 — classify, go on
             reason = absent_table_reason(exc, oracle or "", present)
             if reason is not None:
@@ -271,26 +300,14 @@ def main() -> int:
             else:
                 report(name, "FAIL", f" ({first_line(exc)})")
             continue
-        rows = _pdf_rows(spdf)
-        if ddf is None:
-            report(name, "rows-only", f", {len(rows)} rows ({dt:.1f}s)")
+        dt = time.time() - t0
+        if oracle is None:
+            report(name, "rows-only", f", {n} rows ({dt:.1f}s)")
             continue
-        dcols = list(ddf.columns)
-        drows = _pdf_rows(ddf)
-        ok_rows = len(rows) == len(drows)
-        ok_cols = sorted(cols) == sorted(dcols)
-        ok_hash = value_hash(cols, rows) == value_hash(dcols, drows)
-        report(
-            name,
-            "OK" if ok_rows and ok_cols and ok_hash else "FAIL",
-            f" rows={len(rows)}/{len(drows)} cols={'=' if ok_cols else 'DIFF'}"
-            f" hash={'=' if ok_hash else 'DIFF'} ({dt:.1f}s)",
-        )
-        if not ok_cols:
-            print(f"    spark cols: {sorted(cols)}")
-            print(f"    duck  cols: {sorted(dcols)}")
-        elif ok_rows and not ok_hash:
-            print_diff(spdf, ddf, cols)
+        summary, _, diff = detail.partition("\n")
+        report(name, "OK" if ok else "FAIL", f" {summary} ({dt:.1f}s)")
+        if diff:
+            print(diff)
 
     if not ns.only:
         t0 = time.time()

@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from realtime_analytics_pipeline_spark.session import get_spark
@@ -10,82 +9,12 @@ from realtime_analytics_pipeline_spark.session import get_spark
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("rtap-spark-tests")
     yield s
-
-
-@pytest.fixture(scope="session")
-def duck():
-    con = duckdb.connect()
-    yield con
-    con.close()
-
-
-def duck_with_views(con: duckdb.DuckDBPyConnection, sf_dir: str):
-    """Register the parquet tables as views, like the driver does."""
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
-
-
-def assert_matches_oracle(spark_df, con, sql, check_schema_names=True):
-    """Mini-replica of the driver's gate: row-count + column names +
-    order-insensitive value comparison."""
-    import math
-
-    spark_rows = [tuple(r) for r in spark_df.collect()]
-    cur = con.execute(sql)
-    duck_cols = [d[0] for d in cur.description]
-    duck_rows = [tuple(r) for r in cur.fetchall()]
-
-    if check_schema_names:
-        assert sorted(spark_df.columns) == sorted(duck_cols), (
-            f"column mismatch: {spark_df.columns} vs {duck_cols}"
-        )
-    assert len(spark_rows) == len(duck_rows), (
-        f"row count: spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-
-    # align column order by name, then compare as sorted multisets
-    spark_idx = [spark_df.columns.index(c) for c in sorted(spark_df.columns)]
-    duck_idx = [duck_cols.index(c) for c in sorted(duck_cols)]
-
-    def norm(v):
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "NaN"
-            return round(v, 6)
-        return v
-
-    key = repr
-    s = sorted(
-        (tuple(norm(row[i]) for i in spark_idx) for row in spark_rows), key=key
-    )
-    d = sorted(
-        (tuple(norm(row[i]) for i in duck_idx) for row in duck_rows), key=key
-    )
-    for i, (a, b) in enumerate(zip(s, d)):
-        assert a == b, f"row {i} differs:\n  spark={a}\n  duck ={b}"
 
 
 def write_time_ordered_stream_fixture(df, path: str, n_files: int, ts_col: str = "ts"):

@@ -196,28 +196,6 @@ def test_gini_extremes(spark):
         assert abs(out["gini"] - round(7.0 / 8.0, 6)) < 1e-9
 
 
-def test_incremental_merge_equals_direct(spark, duck):
-    """Partial-aggregate merge must equal the one-shot aggregation on
-    the real testdata (the driver-style check, pinned in pytest)."""
-    from realtime_analytics_pipeline_spark.registry import QUERIES, ORACLES
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        (r["day_ms"], r["event_type"]): (r["n"], r["value_sum"])
-        for r in QUERIES["incremental_metric_merge"](spark, sf).collect()
-    }
-    duck.execute(
-        f"CREATE OR REPLACE VIEW events AS SELECT * FROM '{sf}/events.parquet'"
-    )
-    exp = {
-        (int(d), t): (int(n), v)
-        for d, t, n, v in duck.execute(
-            ORACLES["incremental_metric_merge"]
-        ).fetchall()
-    }
-    assert got == exp
-
-
 # --------------------------------------------------------------------------
 # ks_drift_by_group
 # --------------------------------------------------------------------------
@@ -383,7 +361,7 @@ def test_observation_counters_match_direct_agg(spark):
 # --------------------------------------------------------------------------
 
 
-def test_unigram_logprob_uniform_corpus(spark, duck):
+def test_unigram_logprob_uniform_corpus(spark):
     """On a corpus where every token is equally frequent, every doc's
     avg negative log-prob is ln(V) and ppl is V (V = vocab size)."""
     import os

@@ -10,8 +10,11 @@ string does not count. ``__dunder__`` names such as ``__version__`` and
 ``__all__`` are skipped, and so are registered queries, which are
 decorated. A name used only inside definitions that are themselves
 unreached does not count, so the scan repeats until nothing more drops
-out. A definition kept on purpose is listed in ``KEEP`` with the reason
-its COVERAGE.md row gives.
+out. A ``Name`` use in a module that defines that name at top level and
+does not import it is the module's own name, so it counts only for that
+module's definition: a script's own ``TABLES`` does not reach the
+package's. A definition kept on purpose is listed in ``KEEP`` with the
+reason its COVERAGE.md row gives.
 """
 
 import ast
@@ -86,10 +89,14 @@ def _scan(keep=KEEP):
     """Return ({name: ["path:line", ...]} of the unreached definitions
     not in ``keep``, the set of candidate names)."""
     candidates = defaultdict(list)  # name -> [(path, first, last)]
-    uses = defaultdict(list)        # name -> [(path, line, enclosing definition or None)]
+    uses = defaultdict(list)        # name -> [(path, line, enclosing definition, own)]
     for path in _scope():
         module = ast.parse(path.read_text())
         in_package = path.is_relative_to(PACKAGE)
+        own = ({top.name for top in module.body if isinstance(top, _DEF)}
+               | {n for top in module.body for n in _assigned(top)})
+        own -= {node.asname or node.name for node in ast.walk(module)
+                if isinstance(node, ast.alias)}
         for top in module.body:
             if isinstance(top, _DEF):
                 names = [] if top.decorator_list else [top.name]
@@ -104,23 +111,34 @@ def _scan(keep=KEEP):
             for node in ast.walk(top):
                 line = getattr(node, "lineno", top.lineno)
                 for name in _used(node):
-                    uses[name].append((path, line, owner))
+                    local = isinstance(node, ast.Name) and name in own
+                    uses[name].append((path, line, owner, local))
 
     def inside(spans, path, lineno):
         return any(p == path and first <= lineno <= last for p, first, last in spans)
 
-    unreached = set()
+    def reached(name, where, dead):
+        """Whether code outside its own body uses the definition of
+        ``name`` in module ``where``."""
+        spans = candidates[name]
+        return any(not inside(spans, path, lineno) and enclosing not in dead
+                   and (path == where or not local)
+                   for path, lineno, enclosing, local in uses[name])
+
+    unreached = set()  # (path, name)
     while True:
-        dead = {(p, name) for name in unreached for p, _, _ in candidates[name]}
-        newly = {name for name, spans in candidates.items()
-                 if name not in unreached and name not in keep
-                 and not any(not inside(spans, path, lineno) and enclosing not in dead
-                             for path, lineno, enclosing in uses[name])}
+        newly = {(p, name) for name, spans in candidates.items() if name not in keep
+                 for p, _, _ in spans
+                 if (p, name) not in unreached and not reached(name, p, unreached)}
         if not newly:
             break
         unreached |= newly
-    return {name: [f"{p.relative_to(ROOT)}:{first}" for p, first, _ in candidates[name]]
-            for name in sorted(unreached)}, set(candidates)
+    flagged = defaultdict(list)
+    for name, spans in sorted(candidates.items()):
+        for p, first, _ in spans:
+            if (p, name) in unreached:
+                flagged[name].append(f"{p.relative_to(ROOT)}:{first}")
+    return dict(flagged), set(candidates)
 
 
 def test_every_library_definition_is_reached():

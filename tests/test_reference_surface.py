@@ -1,7 +1,8 @@
 """Oracle-parity tests for the reference operator surface.
 
-Replicates the driver's gate locally at sf0.001 (fast) for every
-registered query that ships an oracle.
+Compares every registered query that ships an oracle with it at
+sf0.001 (fast), through the oracle gate's own type-exact compare
+(scripts/verify_driver_gate.py).
 """
 
 from __future__ import annotations
@@ -10,16 +11,24 @@ import pytest
 
 from realtime_analytics_pipeline_spark import registry
 
-from tests.conftest import SF_SMOKE, assert_matches_oracle, duck_with_views
+from scripts.verify_driver_gate import compare, duck_views
+from tests.conftest import SF_SMOKE
 
 ORACLE_QUERIES = sorted(registry.ORACLES)
 
 
+@pytest.fixture(scope="module")
+def oracle_con():
+    con, _ = duck_views(SF_SMOKE)
+    yield con
+    con.close()
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, oracle_con, name):
     df = registry.QUERIES[name](spark, SF_SMOKE)
-    con = duck_with_views(duck, SF_SMOKE)
-    assert_matches_oracle(df, con, registry.ORACLES[name])
+    ok, detail = compare(df, oracle_con, registry.ORACLES[name])
+    assert ok, detail
 
 
 def test_all_queries_have_callables():
